@@ -16,7 +16,9 @@ index refresh costs O(changed documents), never O(corpus):
   file-skipping dividend every other keyed read in the engine gets.
 * ``doclen`` — a CoW table keyed ``doc_id`` with each document's token
   count (the BM25 length normalizer); corpus totals (N, avgdl) derive
-  from it at query time with one thin-table aggregate.
+  from it with one thin-table aggregate, memoized per doclen version
+  (a committed manifest never changes, so the totals of version ``v``
+  are exact until a refresh or compaction commits ``v + 1``).
 * a ``state.json`` recording the base version the index reflects.
 
 The maintenance protocol (pending-span WAL, txn-fenced reconcile,
@@ -38,8 +40,9 @@ corpus scan.
 from __future__ import annotations
 
 import os
+import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openverse_catalog_spark.operators.cowtable import CowTable
@@ -54,6 +57,20 @@ def _tokens(text: Column) -> Column:
     return F.filter(
         F.split(F.lower(text), "[^a-z]+"), lambda x: F.length(x) >= 3
     )
+
+
+def _query_terms(text_or_terms) -> list[str]:
+    """Query text (one string, or a list of strings) through the same
+    tokenizer as :func:`_tokens`, in query order with duplicates kept
+    (phrase slots need both; BM25 dedupes)."""
+    if isinstance(text_or_terms, str):
+        text_or_terms = [text_or_terms]
+    return [
+        run
+        for t in text_or_terms
+        for run in re.findall(r"[a-z]+", str(t).lower())
+        if len(run) >= 3
+    ]
 
 
 def _postings_of(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -105,6 +122,7 @@ class SearchIndex(IncrementalIndex):
         self.doclen = CowTable(
             spark, f"{self.root}/doclen", keys=("doc_id",)
         )
+        self._stats: tuple[int, int, float | None] | None = None
 
     def _identity(self) -> dict:
         return {
@@ -214,13 +232,15 @@ class SearchIndex(IncrementalIndex):
             )
         if allow_legacy:
             return idx
-        sample = idx.doclen.read().select("doc_id").limit(20)
-        if sample.head(1):
-            hits = sample.join(
-                snap.select(F.col(id_col).alias("doc_id")), "doc_id",
-                "semi",
-            ).count()
-            if hits == 0:
+        # two actions: collect the sampled ids, then probe the base for
+        # any of them (an empty index has nothing to refute)
+        ids = [
+            r[0]
+            for r in idx.doclen.read().select("doc_id").limit(20).collect()
+        ]
+        if ids:
+            hit = snap.select(id_col).where(F.col(id_col).isin(ids))
+            if not hit.head(1):
                 raise ValueError(
                     f"legacy search index at {root!r}: none of its "
                     f"sampled doc_ids occur in {base.root!r}.{id_col} "
@@ -437,14 +457,29 @@ class SearchIndex(IncrementalIndex):
             .select(F.col(self.id_col).alias("doc_id"))
         )
 
+    def _corpus_stats(self) -> tuple[int, int, float | None]:
+        """``(v, N, avgdl)`` of the doclen table at its current version
+        ``v``. Manifests are immutable, so the totals of version ``v``
+        are exact for as long as ``v`` is the head; any refresh or
+        compaction (through this handle or another) commits a new
+        version and the next call recomputes. One entry per handle."""
+        v = self.doclen.version
+        if self._stats is None or self._stats[0] != v:
+            row = self.doclen.read(v).agg(
+                F.count("*").alias("n"), F.avg("dl").alias("avgdl")
+            ).head()
+            self._stats = (v, int(row["n"]), row["avgdl"])
+        return self._stats
+
     def bm25(
         self, terms: list[str], k: int, where: str | None = None
     ) -> DataFrame:
         """Top-k BM25 served FROM THE INDEX: the corpus is never
         tokenized at query time. Postings files are pruned by the term
-        key range; doc-frequency and idf derive from the pruned
-        postings; (N, avgdl) is one aggregate over the thin doclen
-        table; the final top-k is TakeOrdered.
+        key range; each term's doc-frequency is one window count over
+        the pruned postings and idf is computed inline from it; (N,
+        avgdl) come from :meth:`_corpus_stats` as literals; the final
+        top-k is TakeOrdered.
 
         Query terms pass through the SAME tokenizer the index applied
         at build time (lowercase, [a-z] runs of length >= 3), so
@@ -459,36 +494,24 @@ class SearchIndex(IncrementalIndex):
         BEFORE scoring. Corpus statistics (idf, N, avgdl) stay
         CORPUS-WIDE — the Lucene/ES convention: a filter restricts
         candidates, it does not re-weigh term rarity."""
-        import re as _re
-
-        qt: list[str] = []
-        for t in terms:
-            for run in _re.findall(r"[a-z]+", str(t).lower()):
-                if len(run) >= 3 and run not in qt:
-                    qt.append(run)
+        qt = list(dict.fromkeys(_query_terms(terms)))
+        v, n, avgdl = self._corpus_stats()
+        dl = self.doclen.read(v)
+        if not qt or n == 0:
+            return dl.select(
+                "doc_id", F.lit(0.0).alias("score")
+            ).where(F.lit(False))
         # read_pruned appends the exact residual isin itself — the
-        # pruned read is already filtered, not just file-skipped
-        post = self.postings.read_pruned(qt)
-        dl = self.doclen.read()
-        stats = dl.agg(
-            F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-        )
-        idf = (
-            post.groupBy("term")
-            .agg(F.countDistinct("doc_id").alias("df"))
-            .crossJoin(F.broadcast(stats.select("n")))
-            .select(
-                "term",
-                F.log(
-                    1.0 + (F.col("n") - F.col("df") + 0.5)
-                    / (F.col("df") + 0.5)
-                ).alias("idf"),
-            )
+        # pruned read is already filtered, not just file-skipped.
+        # count == countDistinct per term: (term, doc_id) is the
+        # postings merge key, so a term's rows are its distinct docs
+        post = self.postings.read_pruned(qt).withColumn(
+            "df", F.count("doc_id").over(Window.partitionBy("term"))
         )
         cand = post
         if where is not None:
-            # candidates restricted BEFORE scoring; idf above derives
-            # from the unfiltered postings (corpus-wide term rarity).
+            # candidates restricted BEFORE scoring; df above was taken
+            # over the unfiltered postings (corpus-wide term rarity).
             # INNER join, not semi: the match frame is unique on doc_id
             # and single-column, so the joins are equivalent — but
             # inner leaves the optimizer free to broadcast the SMALL
@@ -497,17 +520,16 @@ class SearchIndex(IncrementalIndex):
             # only broadcast the match side, which for a 90% filter is
             # most of the corpus)
             cand = post.join(self._match_set(where), "doc_id")
+        idf = F.log(1.0 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
         scored = (
-            cand.join(F.broadcast(idf), "term")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(stats.select("avgdl")))
+            cand.join(dl, "doc_id")
             .select(
                 "doc_id",
                 (
-                    F.col("idf") * F.col("tf") * (K1 + 1.0)
+                    idf * F.col("tf") * (K1 + 1.0)
                     / (
                         F.col("tf")
-                        + K1 * (1.0 - B + B * F.col("dl") / F.col("avgdl"))
+                        + K1 * (1.0 - B + B * F.col("dl") / avgdl)
                     )
                 ).alias("term_score"),
             )
@@ -537,13 +559,7 @@ class SearchIndex(IncrementalIndex):
 
         ``where`` pre-filters candidates against the BASE table at the
         applied version (same contract as ``bm25(where=)``)."""
-        import re as _re
-
-        qt = [
-            run
-            for run in _re.findall(r"[a-z]+", str(text).lower())
-            if len(run) >= 3
-        ]
+        qt = _query_terms(text)
         if not qt:
             raise ValueError(
                 f"phrase {text!r} has no indexable terms (tokenizer "

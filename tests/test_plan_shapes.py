@@ -389,3 +389,31 @@ def test_cohort_retention_broadcasts_cohort_map(spark, sf_dir):
     plan = _plan(QUERIES["agg_cohort_retention"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_warm_bm25_plan_has_one_window_and_no_stats_aggregate(
+    spark, tmp_path
+):
+    """A warm BM25 probe takes df from ONE window over the pruned
+    postings and (N, avgdl) from the per-version memo as literals: no
+    cross join for the corpus totals and no avg(dl) aggregate left in
+    the query plan."""
+    import re
+
+    from openverse_catalog_spark.operators.cowtable import CowTable
+    from openverse_catalog_spark.operators.searchindex import SearchIndex
+
+    rows = [(i, f"alpha bravo w{'x' * (i % 5)} charlie" * (1 + i % 3))
+            for i in range(100)]
+    base = CowTable.create(
+        spark, str(tmp_path / "docs"),
+        spark.createDataFrame(rows, "doc_id long, text string"),
+        keys=("doc_id",),
+    )
+    idx = SearchIndex.create(spark, str(tmp_path / "idx"), base)
+    idx.bm25(["alpha"], 5).collect()
+    plan = _plan(idx.bm25(["alpha", "charlie"], 5))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+    assert "avg(dl" not in plan
+    assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1

@@ -621,3 +621,143 @@ def test_filtered_bm25_and_phrase(spark, tmp_path):
         "WHERE \"source = 'b'\") ORDER BY hits DESC"
     ).collect()
     assert [(r.doc_id, r.hits) for r in got] == [(3, 2), (2, 1)]
+
+
+def _jobs_of(spark, action) -> int:
+    """Spark jobs ``action`` runs, counted under its own job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the async
+    # listener bus; drain it so the count is complete
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sourced_index(spark, tmp_path, n=300):
+    words = ("alpha", "bravo", "charlie", "delta", "echo", "foxtrot")
+    rows = [
+        (i, " ".join(w for j, w in enumerate(words) if (i + j) % 3)
+         + " pad" * (i % 4), "ab"[i % 2])
+        for i in range(n)
+    ]
+    base = CowTable.create(
+        spark, str(tmp_path / "docs"),
+        spark.createDataFrame(
+            rows, "doc_id long, text string, source string"
+        ),
+        keys=("doc_id",), target_files=3,
+    )
+    return base, SearchIndex.create(
+        spark, str(tmp_path / "idx"), base, target_files=6
+    )
+
+
+def test_bm25_warm_probe_job_budget(spark, tmp_path):
+    """A warm probe runs 4 jobs (postings scan with the df window, the
+    doclen broadcast, the doc-score aggregate, TakeOrdered) and a
+    filtered one 5 (+ the match-set scan): corpus totals come from the
+    per-version memo, not from two re-planned aggregates per probe."""
+    _, idx = _sourced_index(spark, tmp_path)
+    idx.bm25(["alpha"], 5).collect()  # warm: the one stats miss
+    assert _jobs_of(
+        spark, lambda: idx.bm25(["bravo", "delta"], 10).collect()
+    ) == 4
+    assert _jobs_of(
+        spark,
+        lambda: idx.bm25(
+            ["bravo", "delta"], 10, where="source = 'a'"
+        ).collect(),
+    ) == 5
+
+
+def test_bm25_stats_memo_follows_other_handle_refresh(spark, tmp_path):
+    """Handle A memoizes (N, avgdl); handle B refreshes the same index
+    after a churn commit that moves both. A's next probe must see the
+    new doclen version and equal the full-scan BM25; so must a probe
+    after A's own compaction."""
+    base, a = _sourced_index(spark, tmp_path, n=60)
+    terms = ["alpha", "echo", "pad"]
+    a.bm25(terms, 10).collect()
+    before = a._stats
+    b = SearchIndex.open(spark, a.root, base)
+    base.delete(F.col("doc_id") < 20)
+    base.merge(
+        mk_docs(spark, *[(500 + i, "alpha echo " * (i + 3))
+                         for i in range(5)]),
+        COLS,
+    )
+    b.refresh()
+
+    def check():
+        got = [(r.doc_id, r.score) for r in a.bm25(terms, 10).collect()]
+        want = [(r.doc_id, r.score)
+                for r in _scan_bm25(base.read(), terms, 10).collect()]
+        assert got == want
+        assert a._stats[0] == a.doclen.version
+
+    check()
+    assert a._stats[1:] != before[1:]  # N and avgdl really moved
+    for wave in range(3):
+        base.update(F.col("doc_id") == 30 + wave,
+                    {"text": F.lit(f"echo foxtrot wave{wave}")})
+        b.refresh()
+    check()
+    rep = a.maintain(target_rows=1_000_000, retention_seconds=0.0,
+                     keep_versions=1)
+    assert rep["doclen"]["compacted"]
+    check()
+
+
+def test_bm25_degenerate_inputs_return_empty(spark, tmp_path):
+    """Terms that tokenize to nothing, and an index whose doclen is
+    empty, both answer with zero (doc_id, score) rows, no error."""
+    base = CowTable.create(
+        spark, str(tmp_path / "docs"),
+        mk_docs(spark, (1, "alpha beta"), (2, "gamma")),
+        keys=("doc_id",),
+    )
+    idx = SearchIndex.create(spark, str(tmp_path / "idx"), base)
+    out = idx.bm25(["a", "12"], 5)
+    assert out.columns == ["doc_id", "score"] and out.collect() == []
+    empty = CowTable.create(
+        spark, str(tmp_path / "empty"),
+        mk_docs(spark, (1, "a b"), (2, None)),
+        keys=("doc_id",),
+    )
+    eidx = SearchIndex.create(spark, str(tmp_path / "eidx"), empty)
+    assert eidx.doclen.read().count() == 0
+    out = eidx.bm25(["alpha"], 5)
+    assert out.columns == ["doc_id", "score"] and out.collect() == []
+
+
+def test_open_legacy_state_refuses_wrong_base_accepts_right(spark, tmp_path):
+    """A legacy state file (no identity keys) attached to a base that
+    holds none of the index's sampled doc ids is refused; the base it
+    was built from is accepted."""
+    import json
+
+    base = CowTable.create(
+        spark, str(tmp_path / "docs"),
+        mk_docs(spark, (1, "alpha"), (2, "beta gamma")),
+        keys=("doc_id",),
+    )
+    other = CowTable.create(
+        spark, str(tmp_path / "other"),
+        mk_docs(spark, (101, "alpha"), (102, "beta")),
+        keys=("doc_id",),
+    )
+    idx = SearchIndex.create(spark, str(tmp_path / "idx"), base)
+    applied = idx.applied_version
+    with open(f"{idx.root}/state.json", "w") as fh:
+        json.dump({"applied": applied}, fh)
+    with pytest.raises(ValueError, match="none of its sampled doc_ids"):
+        SearchIndex.open(spark, idx.root, other)
+    assert SearchIndex.open(spark, idx.root, base).applied_version == applied

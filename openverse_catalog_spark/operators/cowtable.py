@@ -43,6 +43,7 @@ new snapshot, never a mix; historical versions stay readable until
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import json
 import os
@@ -279,8 +280,9 @@ def _file_stats(
 
     NULL counts matter for correctness, not just stats: min/max skip
     NULLs, so a file holding NULL-key rows reports a range that excludes
-    the NULL point — ``_affected_split`` uses ``null_keys`` to route
-    NULL-key batch rows to every file that can hide a NULL-key match."""
+    the NULL point — ``CowTable._entry_hit`` uses ``null_keys`` to
+    route NULL-key batch rows to every file that can hide a NULL-key
+    match."""
     df = spark.read.parquet(dir_path)
     # __p_* columns are directory-layout-only (partition-pure writes);
     # they are never part of the table schema
@@ -476,6 +478,7 @@ def _footer_file_stats(
     contributes (None, None, rows) exactly as the scan's NULL-fill
     would; a missing partition SOURCE column bails to the scan."""
     try:
+        import pyarrow as pa
         import pyarrow.parquet as pq
     except ImportError:  # pragma: no cover - pyarrow ships with pyspark
         return None
@@ -508,7 +511,7 @@ def _footer_file_stats(
     for name in names:
         try:
             md = pq.ParquetFile(os.path.join(dir_path, name)).metadata
-        except Exception:
+        except (OSError, pa.ArrowException):
             return None
         rows = md.num_rows
         if rows == 0:
@@ -849,6 +852,44 @@ def _write_bloom_sidecar(
     return cols
 
 
+#: The batch key summary is collected to the driver: at most this many
+#: key rows (the exact multiset path) or per-``keys[0]`` boxes (the
+#: aggregation path) — a batch keyed at row grain would otherwise
+#: collect unbounded.
+_MAX_BATCH_KEYS = 65536
+
+
+@dataclasses.dataclass(frozen=True)
+class BatchSummary:
+    """A write batch's merge-key summary, collected to the driver once
+    per commit attempt (``CowTable._batch_summary``). The affected-file
+    split, the clustered write's range bounds and the conflict re-link
+    check all read it.
+
+    ``boxes``: one ``(keys[0] value, lo, hi)`` per distinct ``keys[0]``
+    value, where lo/hi bound ``keys[1]`` (with a single key, lo == hi
+    == the key). min/max skip NULLs, so ``has_null`` separately records
+    whether any key component of (keys[0], keys[1]) is NULL.
+    ``range_box``: set only when the batch has too many distinct
+    ``keys[0]`` values for per-value boxes (``boxes`` is then empty):
+    one global ``(lo, hi)`` pair of (keys[0], keys[1]) tuples — a
+    coarser, still conservative test. ``has_dup``: whether a full merge
+    key repeats, None unless the caller asked. ``multiset``: the exact
+    ``[(key_tuple, count)]``, None on overflow or for float/decimal
+    keys (Python ordering could diverge from SQL's on NaN)."""
+
+    boxes: list[tuple]
+    has_null: bool
+    range_box: tuple[tuple, tuple] | None = None
+    has_dup: bool | None = None
+    multiset: list[tuple] | None = None
+
+    @property
+    def empty(self) -> bool:
+        """No source row: no box, no global box and no NULL-keyed row."""
+        return not self.boxes and self.range_box is None and not self.has_null
+
+
 class CowTable:
     """Handle on a copy-on-write table rooted at ``root``."""
 
@@ -1032,12 +1073,7 @@ class CowTable:
         unchanged. An empty directory (write-first commit of an empty
         result set) yields [] without planning a scan — reading a
         part-less dir would raise UNABLE_TO_INFER_SCHEMA."""
-        try:
-            utc = self.spark.conf.get(
-                "spark.sql.session.timeZone", ""
-            ) == "UTC"
-        except Exception:
-            utc = False
+        utc = self.spark.conf.get("spark.sql.session.timeZone", "") == "UTC"
         entries = _footer_file_stats(
             data_dir, self.keys, rel_dir, self.stats_cols,
             part_specs=self.partition_spec, colmap=self.column_mapping,
@@ -1068,20 +1104,25 @@ class CowTable:
         return entries
 
     def _range_bounds(
-        self, multiset, entries: list[dict], target_files: int,
+        self, summary: BatchSummary | None, entries: list[dict],
+        target_files: int,
     ) -> list[tuple] | None:
         """Driver-derived range-split bounds for a commit's clustered
         write, replacing ``repartitionByRange``'s sampling pass (one
         Spark job per commit that re-executed the write lineage — guide
         §2.4: remove the shuffle's sampling pass outright). Candidates:
-        the batch's exact per-key multiset (``_batch_boxes`` collects it
-        anyway) plus, for rewritten files, the manifest entries' key
-        endpoints weighted by row count (files are range-clustered, so
-        endpoint grain tracks the old layout). Returns None — caller
-        falls back to the sampling write — when the multiset overflowed,
-        the table is partitioned (transform columns aren't derivable
-        driver-side), or any value's Python ordering could diverge from
-        the SQL ordering (floats/decimals)."""
+        the batch's exact per-key multiset (``summary.multiset`` —
+        ``_batch_summary`` collects it anyway; ``summary=None`` for
+        writes with no batch, whose rows all come from ``entries``)
+        plus, for rewritten files, the manifest entries' key endpoints
+        weighted by row count (files are range-clustered, so endpoint
+        grain tracks the old layout). Returns None — caller falls back
+        to the sampling write — when the summary has no multiset
+        (overflow, float/decimal keys), the table is partitioned
+        (transform columns aren't derivable driver-side), or any
+        value's Python ordering could diverge from the SQL ordering
+        (floats/decimals)."""
+        multiset = [] if summary is None else summary.multiset
         if (
             multiset is None or target_files <= 1 or self.partition_spec
         ):
@@ -1243,38 +1284,36 @@ class CowTable:
                 return
         if checkpoint and target_files > 1:
             phys_df = phys_df.localCheckpoint(eager=False)
-        exprs: list[Column] = []
-        names: list[str] = []
+        tagged, pcols = self._with_partition_cols(phys_df)
+        writer = tagged.repartitionByRange(
+            target_files, *[F.col(c) for c in (*pcols, *self.keys)]
+        ).write.mode("error")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.parquet(data_dir)
+
+    def _with_partition_cols(
+        self, phys_df: DataFrame
+    ) -> tuple[DataFrame, list[str]]:
+        """Tag a physical frame with one ``__p_<field>`` column per
+        partition field whose source column it carries — the
+        directory-layout columns a partition-pure write clusters and
+        splits on. Returns the tagged frame and the added column
+        names (none for an unpartitioned table)."""
+        pcols: list[str] = []
         colmap = self.column_mapping
         for s in self.partition_spec:
             phys = colmap.get(s["col"], s["col"])
             if phys in phys_df.columns:
-                exprs.append(
+                pc = f"__p_{s['name']}"
+                phys_df = phys_df.withColumn(
+                    pc,
                     _partition_field_expr(
                         s, phys, phys_df.schema[phys].dataType
-                    )
+                    ),
                 )
-                names.append(s["name"])
-        key_exprs = [F.col(k) for k in self.keys]
-        if not exprs:
-            phys_df.repartitionByRange(
-                target_files, *key_exprs
-            ).write.mode("error").parquet(data_dir)
-            return
-        tagged = phys_df
-        pcols = []
-        for n, ex in zip(names, exprs):
-            pc = f"__p_{n}"
-            tagged = tagged.withColumn(pc, ex)
-            pcols.append(pc)
-        (
-            tagged.repartitionByRange(
-                target_files, *[F.col(c) for c in pcols], *key_exprs
-            )
-            .write.mode("error")
-            .partitionBy(*pcols)
-            .parquet(data_dir)
-        )
+                pcols.append(pc)
+        return phys_df, pcols
 
     # -- bootstrap ----------------------------------------------------------
 
@@ -1621,6 +1660,32 @@ class CowTable:
             f.write(str(version))
         os.replace(tmp, f"{self.root}/VERSION")
 
+    def _commit_metadata(self, op: str, derive) -> tuple[int, dict]:
+        """The commit loop of every metadata-only op (no data file is
+        written, so a lost version slot costs nothing to redo). Each
+        attempt re-reads the head and re-pins this handle's cached
+        properties to it, then ``derive(head)`` applies the op's change
+        to those properties and returns the new snapshot's
+        ``(files, schema_json)``; a CommitConflict re-derives against
+        the new head. Deriving once outside the loop would silently
+        revert a concurrent writer's change (a lost update). Returns
+        (the version THIS commit claimed, the head it derived from) —
+        never the shared head pointer, which a concurrent writer may
+        already have advanced (a catalog transaction pins the returned
+        version; leaking the head would publish someone else's
+        unpublished commit)."""
+        while True:
+            m = self._manifest()
+            self._refresh_props(m)
+            files, schema_json = derive(m)
+            try:
+                self._commit(
+                    m["version"] + 1, files, op=op, schema_json=schema_json
+                )
+                return m["version"] + 1, m
+            except CommitConflict:
+                continue
+
     def _manifest_names(self) -> list[str]:
         """Committed manifest filenames only: a writer that died between
         tmp write and link can leave a ``.tmp.*.json`` behind — never a
@@ -1863,6 +1928,22 @@ class CowTable:
         return df.select(
             *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
         )
+
+    def _scan(
+        self, paths: list[str], m: dict, positions: bool = False
+    ) -> DataFrame:
+        """Raw scan of data files under snapshot ``m``'s schema, in
+        LOGICAL column names — deletion vectors are NOT applied.
+        ``positions`` adds each row's physical identity
+        (``__dv_file``/``__dv_pos``, see :meth:`_with_position`)."""
+        phys, logical = self._physical_schema(m)
+        reader = self.spark.read
+        if phys is not None:
+            reader = reader.schema(phys)
+        df = reader.parquet(*paths)
+        if positions:
+            df = self._with_position(df)
+        return self._to_logical(df, phys, logical)
 
     def _read_entries(self, entries: list[dict], m: dict) -> DataFrame:
         """LIVE rows of the given manifest entries: plain files scan
@@ -2464,17 +2545,9 @@ class CowTable:
             # files died in THIS commit — they join the pre image (a
             # dv-update commit pairs them with the rewritten rows in
             # its added files; a dv-delete emits them as deletes)
-            phys, logical = self._physical_schema(m_prev)
-            reader = self.spark.read
-            if phys is not None:
-                reader = reader.schema(phys)
-            raw = self._to_logical(
-                self._with_position(
-                    reader.parquet(
-                        *[self._abs(e["path"]) for e, _ in dv_grown]
-                    )
-                ),
-                phys, logical,
+            raw = self._scan(
+                [self._abs(e["path"]) for e, _ in dv_grown], m_prev,
+                positions=True,
             )
             cur_pos = self._dv_positions([e for _, e in dv_grown])
             old = self._dv_positions([e for e, _ in dv_grown])
@@ -2672,97 +2745,71 @@ class CowTable:
         yields None stats — treat those conservatively)."""
         return tuple((v is not None, v) for v in vals)
 
-    def _batch_boxes(
-        self, source: DataFrame, check_dups: bool = False,
-        want_multiset: bool = False,
-    ) -> tuple:
-        """The batch's per-``keys[0]`` key boxes + whether any key
-        component is NULL — the tiny driver-side summary both the
-        affected-file split and the conflict re-link check key off.
-
-        ``check_dups=True`` additionally reports whether any full merge
-        key appears on more than one source row, fused into the same
-        aggregation (return gains a ``has_dup`` element).
-
-        ``want_multiset=True`` (merge paths): the ONE aggregation job
-        groups by the FULL key instead of ``keys[0]`` and the return
-        gains a final element — the batch's exact per-key multiset
-        ``[(key_tuple, count)]`` — from which ``_range_bounds`` derives
-        the clustered write's split points with NO sampling job. Boxes,
-        the NULL flag and the dup flag are derived driver-side from the
-        same rows and are IDENTICAL to the coarse aggregation's (min/
-        max/isNull are insensitive to row multiplicity). A batch with
-        more than MAX_BOXES distinct full keys falls back to the coarse
-        path (multiset None) — there the per-commit sampling job is
-        amortized by the batch size anyway."""
-        if want_multiset:
-            from pyspark.sql import types as _T
-
-            key_fields = {
-                f.name: f.dataType for f in source.schema.fields
-            }
-            if any(
-                isinstance(
-                    key_fields.get(k),
-                    (_T.FloatType, _T.DoubleType, _T.DecimalType),
-                )
-                for k in self.keys
-            ):
-                # float/decimal keys: Python min/max diverges from the
-                # SQL ordering on NaN — keep the aggregation path
-                res = self._batch_boxes_k0(source, check_dups)
-                return (*res, None)
-            # NARROW collect of the raw key columns (CollectLimit over
-            # the checkpointed source — ONE job, no shuffle) instead of
-            # a groupBy whose AQE execution costs two stage-jobs per
-            # commit; grouping the <=64k rows is driver-side Counter
-            # work. A larger batch falls back to the aggregation,
-            # amortized by its own size.
-            rows = (
-                source.select(*self.keys).limit(65536 + 1).collect()
-            )
-            if len(rows) > 65536:
-                res = self._batch_boxes_k0(source, check_dups)
-                return (*res, None)
-            from collections import Counter
-
-            counted = Counter(tuple(r) for r in rows)
-            k0, rest = self.keys[0], list(self.keys[1:])
-            per: dict = {}
-            multiset = []
-            has_dup = False
-            for kt, cnt in counted.items():
-                multiset.append((kt, cnt))
-                if cnt > 1:
-                    has_dup = True
-                kv = kt[0]
-                e = per.setdefault(kv, [])
-                if rest:
-                    e.append(kt[1])
-            if rest:
-                boxes = []
-                batch_has_null = False
-                for kv, vals in per.items():
-                    nn = [v for v in vals if v is not None]
-                    if kv is None or len(nn) < len(vals):
-                        batch_has_null = True
-                    boxes.append(
-                        (kv, min(nn) if nn else None,
-                         max(nn) if nn else None)
-                    )
-            else:
-                boxes = [(kv, kv, kv) for kv in per]
-                batch_has_null = any(kv is None for kv in per)
-            dup_tail = (has_dup,) if check_dups else ()
-            return boxes, batch_has_null, *dup_tail, multiset
-        return self._batch_boxes_k0(source, check_dups)
-
-    def _batch_boxes_k0(
+    def _batch_summary(
         self, source: DataFrame, check_dups: bool = False
-    ) -> tuple:
-        """Coarse (per-``keys[0]``) box aggregation — the fallback when
-        the full-key multiset would overflow, and the path for callers
-        that never need bounds."""
+    ) -> BatchSummary:
+        """The batch's merge-key summary (:class:`BatchSummary`) in ONE
+        Spark job per commit attempt.
+
+        Hot path: a NARROW collect of the raw key columns (CollectLimit
+        over the checkpointed source — ONE job, no shuffle) instead of
+        a groupBy whose AQE execution costs two stage-jobs per commit;
+        grouping the <= ``_MAX_BATCH_KEYS`` rows is driver-side Counter
+        work. It yields the exact per-key multiset, from which
+        ``_range_bounds`` derives the clustered write's split points
+        with NO sampling job; boxes, the NULL flag and the dup flag
+        come from the same rows and are IDENTICAL to the aggregation's
+        (min/max/isNull are insensitive to row multiplicity).
+
+        Fallback: an aggregation per ``keys[0]`` (multiset None), for
+        float/decimal keys — Python min/max diverges from the SQL
+        ordering on NaN — and for batches larger than the collect cap,
+        where the per-commit sampling job is amortized by the batch
+        size anyway. ``check_dups=True`` fuses the duplicate-full-key
+        test into the same aggregation."""
+        from collections import Counter
+
+        from pyspark.sql import types as _T
+
+        key_types = {f.name: f.dataType for f in source.schema.fields}
+        exact = not any(
+            isinstance(
+                key_types.get(k),
+                (_T.FloatType, _T.DoubleType, _T.DecimalType),
+            )
+            for k in self.keys
+        )
+        if exact:
+            rows = (
+                source.select(*self.keys)
+                .limit(_MAX_BATCH_KEYS + 1).collect()
+            )
+            exact = len(rows) <= _MAX_BATCH_KEYS
+        if exact:
+            counted = Counter(tuple(r) for r in rows)
+            # keys[1] values per keys[0] value (the key itself when
+            # there is only one), so a single-key box is (k, k, k)
+            per: dict = {}
+            for kt in counted:
+                per.setdefault(kt[0], []).append(kt[1 if len(kt) > 1 else 0])
+            boxes = []
+            has_null = False
+            for kv, vals in per.items():
+                nn = [v for v in vals if v is not None]
+                if kv is None or len(nn) < len(vals):
+                    has_null = True
+                boxes.append(
+                    (kv, min(nn) if nn else None, max(nn) if nn else None)
+                )
+            return BatchSummary(
+                boxes=boxes,
+                has_null=has_null,
+                has_dup=(
+                    any(c > 1 for c in counted.values())
+                    if check_dups else None
+                ),
+                multiset=list(counted.items()),
+            )
         k0, rest = self.keys[0], list(self.keys[1:])
         cnt_aggs: list = []
         if check_dups:
@@ -2784,13 +2831,11 @@ class CowTable:
                 F.max(k0).alias("hi"),
                 F.lit(0).alias("has_null"),
             ]
-        MAX_BOXES = 65536  # one box per keys[0] value (providers) — a
-        # batch keyed at row grain would otherwise collect unbounded
         grouped = (
             src.groupBy(k0).agg(*aggs, *cnt_aggs)
-            .limit(MAX_BOXES + 1).collect()
+            .limit(_MAX_BATCH_KEYS + 1).collect()
         )
-        if len(grouped) > MAX_BOXES:
+        if len(grouped) > _MAX_BATCH_KEYS:
             # GRACEFUL DEGRADATION, not an error: a batch keyed at row
             # grain (a fine-key table, a giant backfill) collapses to
             # ONE GLOBAL RANGE BOX — min/max of keys[0] (x rest[0] when
@@ -2816,80 +2861,62 @@ class CowTable:
             if check_dups:
                 g_aggs.append(F.max("__cnt").alias("max_cnt"))
             g = src.agg(*g_aggs).head()
-            has_null = bool(g["k0_null"]) or bool(rest and g["r_null"])
-            dup_tail = (
-                (bool(g["max_cnt"] and g["max_cnt"] > 1),)
-                if check_dups else ()
-            )
-            if g["k0_lo"] is None:
-                return [], has_null, *dup_tail  # every row NULL-keyed
-            if rest:
-                return (
-                    [("range", g["k0_lo"], g["k0_hi"], g["r_lo"], g["r_hi"])],
-                    has_null,
-                    *dup_tail,
+            range_box = None
+            if g["k0_lo"] is not None:  # else every row is NULL-keyed
+                range_box = (
+                    (g["k0_lo"], g["r_lo"]) if rest else (g["k0_lo"],),
+                    (g["k0_hi"], g["r_hi"]) if rest else (g["k0_hi"],),
                 )
-            return [(None, g["k0_lo"], g["k0_hi"])], has_null, *dup_tail
-        boxes = [(r[k0], r["lo"], r["hi"]) for r in grouped]
+            return BatchSummary(
+                boxes=[],
+                has_null=bool(g["k0_null"]) or bool(rest and g["r_null"]),
+                range_box=range_box,
+                has_dup=(
+                    bool(g["max_cnt"] and g["max_cnt"] > 1)
+                    if check_dups else None
+                ),
+            )
         # min/max SKIP NULLs, so the boxes are blind to NULL key
         # components — and merge_upsert matches NULL keys via eqNullSafe.
         # Any batch row with a NULL anywhere in (k0, rest[0]) can only
         # match target rows that ALSO have that NULL, which live in
         # files whose null_keys count is positive: route those files to
         # 'affected' whenever the batch carries a NULL key component.
-        batch_has_null = any(r[k0] is None or r["has_null"] for r in grouped)
-        if check_dups:
-            has_dup = any(r["max_cnt"] > 1 for r in grouped)
-            return boxes, batch_has_null, has_dup
-        return boxes, batch_has_null
+        return BatchSummary(
+            boxes=[(r[k0], r["lo"], r["hi"]) for r in grouped],
+            has_null=any(r[k0] is None or r["has_null"] for r in grouped),
+            has_dup=(
+                any(r["max_cnt"] > 1 for r in grouped)
+                if check_dups else None
+            ),
+        )
 
-    def _entry_hit(self, e: dict, boxes: list, batch_has_null: bool) -> bool:
+    def _entry_hit(self, e: dict, summary: BatchSummary) -> bool:
         """Does this file's composite-key range intersect any batch box
-        (or could it hide a NULL-key match the batch carries)?"""
-        rest = list(self.keys[1:])
-        if rest:
-            lo = self._lex(e["min"][self.keys[0]], e["min"][rest[0]])
-            hi = self._lex(e["max"][self.keys[0]], e["max"][rest[0]])
+        (or could it hide a NULL-key match the batch carries)? Ranges
+        compare on (keys[0], keys[1]), the grain the boxes carry."""
+        ks = self.keys[:2]
+        lo = self._lex(*(e["min"][k] for k in ks))
+        hi = self._lex(*(e["max"][k] for k in ks))
 
-            def _box_hit(box) -> bool:
-                if len(box) == 5:  # coarsened global box (overflow):
-                    # conservative interval test — may keep a file the
-                    # rectangle misses (less skipping), never the
-                    # reverse (correctness)
-                    _, p_lo, p_hi, flo, fhi = box
-                    return lo <= self._lex(p_hi, fhi) and (
-                        self._lex(p_lo, flo) <= hi
-                    )
-                p, flo, fhi = box
-                return lo <= self._lex(p, fhi) and self._lex(p, flo) <= hi
+        def span(p, flo, fhi):
+            if len(ks) == 1:
+                return self._lex(flo), self._lex(fhi)
+            return self._lex(p, flo), self._lex(p, fhi)
 
-            hit = any(_box_hit(b) for b in boxes)
-        else:
-            lo = self._lex(e["min"][self.keys[0]])
-            hi = self._lex(e["max"][self.keys[0]])
-            hit = any(
-                lo <= self._lex(fhi) and self._lex(flo) <= hi
-                for _, flo, fhi in boxes
-            )
-        if not hit and batch_has_null:
+        spans = (span(*b) for b in summary.boxes)
+        if summary.range_box is not None:
+            # coarsened global box (overflow): conservative interval
+            # test — may keep a file the per-value boxes would skip
+            # (less skipping), never the reverse (correctness)
+            b_lo, b_hi = summary.range_box
+            spans = [(self._lex(*b_lo), self._lex(*b_hi))]
+        hit = any(lo <= s_hi and s_lo <= hi for s_lo, s_hi in spans)
+        if not hit and summary.has_null:
             nk = e.get("null_keys")
             # pre-null-stats manifest entry: conservative
             hit = nk is None or any(v for v in nk.values())
         return hit
-
-    def _affected_split(self, m: dict, source: DataFrame) -> tuple[list[dict], list[dict]]:
-        """File skipping: a data file must be rewritten only if its
-        composite-key range intersects one of the batch's per-partition
-        key boxes. The batch summary is a tiny driver-side collect (one
-        row per distinct value of keys[0] — providers, in the reference's
-        schema). Works for any key count >= 1: with one key the box is
-        the key value itself."""
-        boxes, batch_has_null = self._batch_boxes(source)
-        affected, untouched = [], []
-        for e in m["files"]:
-            hit = self._entry_hit(e, boxes, batch_has_null)
-            (affected if hit else untouched).append(e)
-        return affected, untouched
 
     # -- CHECK constraints -----------------------------------------------------
 
@@ -2922,15 +2949,11 @@ class CowTable:
         enforces it against its new rows. Delta's CHECK constraint."""
         if name in self.constraints:
             raise ValueError(f"constraint {name!r} already exists")
-        while True:
-            # re-derive AND re-validate from the FRESH head each
-            # attempt: committing a constraint map computed before a
-            # concurrent add/drop would silently revert the winner
-            # (lost update), and a conflict-losing retry that skipped
-            # re-validation could attach a CHECK the winner's new rows
-            # already violate
-            m = self._manifest()
-            self._refresh_props(m)
+
+        def derive(m):
+            # re-validate against EACH fresh head: a conflict-losing
+            # retry that skipped re-validation could attach a CHECK the
+            # winner's new rows already violate
             if name in self.constraints:
                 raise ValueError(f"constraint {name!r} already exists")
             if m["files"]:
@@ -2949,46 +2972,27 @@ class CowTable:
                         f"cannot add CHECK {name!r} to {self.root}: "
                         f"{n_bad} existing rows violate {expr_sql!r}"
                     )
-            trial = {**self.constraints, name: expr_sql}
-            self._constraints = trial
-            try:
-                self._commit(
-                    m["version"] + 1, m["files"],
-                    op=f"add_constraint({name})",
-                    schema_json=m.get("schema"),
-                )
-                committed = m["version"] + 1
-                break
-            except CommitConflict:
-                continue
-        # the version THIS commit claimed, never the shared head pointer
-        # (a concurrent writer may already have advanced it; a catalog
-        # transaction pins the returned version — leaking the head would
-        # publish someone else's unpublished commit)
-        return {"version": committed, "constraints": dict(trial)}
+            self._constraints = {**self.constraints, name: expr_sql}
+            return m["files"], m.get("schema")
+
+        committed, _ = self._commit_metadata(f"add_constraint({name})", derive)
+        return {"version": committed, "constraints": dict(self.constraints)}
 
     def drop_constraint(self, name: str) -> dict:
         """ALTER TABLE DROP CONSTRAINT: metadata-only commit."""
         if name not in self.constraints:
             raise ValueError(f"no constraint {name!r}")
-        while True:
-            m = self._manifest()
-            self._refresh_props(m)
-            trial = {
+
+        def derive(m):
+            self._constraints = {
                 k: v for k, v in self.constraints.items() if k != name
             }
-            self._constraints = trial
-            try:
-                self._commit(
-                    m["version"] + 1, m["files"],
-                    op=f"drop_constraint({name})",
-                    schema_json=m.get("schema"),
-                )
-                committed = m["version"] + 1
-                break
-            except CommitConflict:
-                continue
-        return {"version": committed, "constraints": dict(trial)}
+            return m["files"], m.get("schema")
+
+        committed, _ = self._commit_metadata(
+            f"drop_constraint({name})", derive
+        )
+        return {"version": committed, "constraints": dict(self.constraints)}
 
     def set_partition_spec(self, partition_by: tuple[str, ...]) -> dict:
         """ALTER TABLE ... SET PARTITION SPEC — partition EVOLUTION as a
@@ -3016,24 +3020,15 @@ class CowTable:
                         f"{s['col']!r} (have: {sorted(names)})"
                     )
                 _partition_field_expr(s, s["col"], names[s["col"]])
-        while True:
-            m = self._manifest()
-            self._refresh_props(m)  # keep concurrent mapping/constraint
-            # commits (the retry must not revert them via stale cache)
+
+        def derive(m):
             fields = dict(m.get("partition_fields") or {})
             fields.update({s["name"]: dict(s) for s in specs})
             self._partition_spec = tuple(dict(s) for s in specs)
             self._partition_fields = fields
-            try:
-                self._commit(
-                    m["version"] + 1, m["files"],
-                    op="set_partition_spec",
-                    schema_json=m.get("schema"),
-                )
-                committed = m["version"] + 1
-                break
-            except CommitConflict:
-                continue
+            return m["files"], m.get("schema")
+
+        committed, _ = self._commit_metadata("set_partition_spec", derive)
         return {
             "version": committed,
             "partition_spec": [s["name"] for s in specs],
@@ -3077,28 +3072,16 @@ class CowTable:
     def _alter_schema_commit(self, op: str, prepare) -> dict:
         """Commit a metadata-only schema change. ``prepare(schema)``
         derives the new field list (and may set this handle's mapping/
-        dropped-cols properties); it is re-run against the FRESH head
-        on every CommitConflict retry, with the handle's cached
-        properties re-pinned first — deriving once outside the loop
-        would silently revert a concurrent schema commit (the classic
-        lost update: the loser's retry re-reads the files but would
-        re-commit a schema computed before the winner's column
-        existed)."""
+        dropped-cols properties); :meth:`_commit_metadata` re-runs it
+        against the FRESH head on every CommitConflict retry, so a
+        concurrent schema commit is never reverted (the loser's retry
+        would otherwise re-commit a schema computed before the
+        winner's column existed)."""
         from pyspark.sql import types as T
 
-        while True:
-            m = self._manifest()
-            self._refresh_props(m)
-            new_fields = prepare(self._schema(m))
-            try:
-                self._commit(
-                    m["version"] + 1, m["files"], op=op,
-                    schema_json=T.StructType(new_fields).json(),
-                )
-                committed = m["version"] + 1
-                break
-            except CommitConflict:
-                continue
+        committed, _ = self._commit_metadata(op, lambda m: (
+            m["files"], T.StructType(prepare(self._schema(m))).json()
+        ))
         return {
             "version": committed,
             "column_mapping": dict(self.column_mapping),
@@ -3200,16 +3183,90 @@ class CowTable:
 
     # -- logical conflict resolution -----------------------------------------
 
-    def _relink_after_conflict(
+    @staticmethod
+    def _retrying(attempt, max_retries: int) -> dict:
+        """Run one optimistic commit ``attempt()`` up to ``max_retries``
+        + 1 times. A CommitConflict means another writer claimed the
+        version: the attempt has already cleaned up after itself, and
+        the next one re-reads the winner's snapshot and recomputes its
+        change against it, so both logical updates survive. The last
+        conflict reaches the caller."""
+        last: CommitConflict | None = None
+        for _ in range(max_retries + 1):
+            try:
+                return attempt()
+            except CommitConflict as e:
+                last = e
+        raise last
+
+    def _publish(
         self,
-        base_version: int,
-        removed_paths,
+        m: dict,
+        removed: list[dict],
+        kept: list[dict],
         new_entries: list[dict],
         op: str,
         safe_against,
-        schema_json: str | None = None,
-        max_rounds: int = 10,
+        dirs: list[str],
+        pre_commit_hook,
         txn: tuple[str, int] | None = None,
+        **commit_kw,
+    ) -> tuple[dict, bool]:
+        """The commit tail every data-writing attempt shares: the
+        attempt read head ``m``, replaces its entries ``removed`` with
+        ``new_entries`` and carries ``kept`` by reference. Link the
+        next version; on CommitConflict try the metadata-only re-link
+        onto the winner's head (``safe_against``, see
+        :meth:`_relink_after_conflict`; None = never re-link), and when
+        that is refused delete ``dirs`` — every directory the attempt
+        wrote — and re-raise so the retry driver recomputes. Returns
+        (the committed manifest, whether it was re-linked). Work that
+        must follow the commit (an audit write) stays with the caller,
+        after this returns, so only the attempt that committed does it.
+        ``pre_commit_hook`` (tests) runs in the window where conflicts
+        surface: after the data write, before the manifest link."""
+        if pre_commit_hook is not None:
+            pre_commit_hook()
+        version, relinked = m["version"] + 1, False
+        try:
+            self._commit(
+                version, kept + new_entries, op=op, txn=txn, **commit_kw
+            )
+        except CommitConflict:
+            rl = None if safe_against is None else (
+                self._relink_after_conflict(
+                    m, removed, new_entries, op, safe_against, txn
+                )
+            )
+            if rl is None:
+                for d in dirs:
+                    shutil.rmtree(d, ignore_errors=True)
+                raise
+            version, relinked = rl, True
+        return self._manifest(version), relinked
+
+    @staticmethod
+    def _noop_result(m: dict, **extra) -> dict:
+        """The result of a write that commits nothing: head ``m`` stays
+        the current version and every file is skipped."""
+        return {
+            "version": m["version"],
+            "files_rewritten": 0,
+            "files_skipped": len(m["files"]),
+            "files_written": 0,
+            "rows": m["rows"],
+            **extra,
+        }
+
+    def _relink_after_conflict(
+        self,
+        base: dict,
+        removed_entries: list[dict],
+        new_entries: list[dict],
+        op: str,
+        safe_against,
+        txn: tuple[str, int] | None = None,
+        max_rounds: int = 10,
     ) -> int | None:
         """LOGICAL conflict resolution (Delta's commit protocol): a
         commit that lost its version slot does NOT recompute when the
@@ -3228,12 +3285,12 @@ class CowTable:
         (key-box disjointness + url-guard probe for merge; a
         no-matching-row scan of the winner's added files for
         update/delete; trivially true for compact, whose output is
-        data-identical). Returns the committed version, or None —
-        caller falls back to the full rebase."""
-        removed = set(removed_paths)
-        base_map = {
-            e["path"]: e for e in self._manifest(base_version)["files"]
-        }
+        data-identical). ``base`` is the snapshot the attempt read,
+        ``removed_entries`` its entries the attempt replaced. Returns
+        the committed version, or None — caller falls back to the full
+        rebase."""
+        removed = {e["path"] for e in removed_entries}
+        base_map = {e["path"]: e for e in base["files"]}
         for _ in range(max_rounds):
             cur_v = self.version
             cur = self._manifest(cur_v)
@@ -3262,17 +3319,14 @@ class CowTable:
                 e for p, e in sorted(cur_map.items()) if p not in removed
             ] + new_entries
             try:
-                self._commit(
-                    cur_v + 1, entries, op=op, schema_json=schema_json,
-                    txn=txn,
-                )
+                self._commit(cur_v + 1, entries, op=op, txn=txn)
                 return cur_v + 1
             except CommitConflict:
                 continue  # yet another winner: recheck against new head
         return None
 
     def _merge_relink_safe(
-        self, winner_added, winner_removed, boxes, batch_has_null,
+        self, winner_added, winner_removed, summary: BatchSummary,
         guarded_source,
     ) -> bool:
         """A lost merge may re-link iff (1) no winner-added file's key
@@ -3282,9 +3336,7 @@ class CowTable:
         delta — added OR removed files — since the guard's verdict
         against the winner's snapshot could then differ. Both checks
         cost O(winner's delta), never O(table)."""
-        if any(
-            self._entry_hit(e, boxes, batch_has_null) for e in winner_added
-        ):
+        if any(self._entry_hit(e, summary) for e in winner_added):
             return False
         if guarded_source is not None:
             paths = [self._abs(e["path"]) for e in winner_added] + [
@@ -3308,12 +3360,9 @@ class CowTable:
         paths = [self._abs(e["path"]) for e in winner_added]
         if any(not os.path.exists(p) for p in paths):
             return False
-        phys, logical = self._physical_schema(self._manifest())
-        reader = self.spark.read
-        if phys is not None:
-            reader = reader.schema(phys)
-        df = self._to_logical(reader.parquet(*paths), phys, logical)
-        return not df.filter(condition).head(1)
+        return not self._scan(paths, self._manifest()).filter(
+            condition
+        ).head(1)
 
     def _conform_widths(
         self, merged: DataFrame, table_schema, new_fields
@@ -3482,15 +3531,12 @@ class CowTable:
         provider merges / a concurrent compactor all land without a
         lost update. ``pre_commit_hook`` (tests) runs between data write
         and manifest link — the window where conflicts surface."""
-        last: CommitConflict | None = None
-        for _ in range(max_retries + 1):
-            try:
-                return self._merge_attempt(
-                    source, columns, target_files, pre_commit_hook, dict(kwargs)
-                )
-            except CommitConflict as e:
-                last = e
-        raise last
+        return self._retrying(
+            lambda: self._merge_attempt(
+                source, columns, target_files, pre_commit_hook, dict(kwargs)
+            ),
+            max_retries,
+        )
 
     def _merge_attempt(
         self,
@@ -3515,14 +3561,7 @@ class CowTable:
         if txn is not None and (
             int((m.get("txns") or {}).get(txn[0], -(2**63))) >= txn[1]
         ):
-            return {
-                "version": m["version"],
-                "files_rewritten": 0,
-                "files_skipped": len(m["files"]),
-                "files_written": 0,
-                "rows": m["rows"],
-                "txn_skipped": True,
-            }
+            return self._noop_result(m, txn_skipped=True)
         # schema evolution (Delta's mergeSchema): NEW columns in the
         # ColumnSpec list are accepted only behind an explicit opt-in;
         # old files stay untouched (reads resolve by name and fill the
@@ -3565,16 +3604,9 @@ class CowTable:
         # lineage (often a whole netted change feed) on every later
         # action
         source = source.localCheckpoint(eager=False)
-        empty_noop = {
-            # empty batch: nothing to rewrite, no new version (the
-            # reference's loader likewise skips the upsert on an empty
-            # load)
-            "version": m["version"],
-            "files_rewritten": 0,
-            "files_skipped": len(m["files"]),
-            "files_written": 0,
-            "rows": m["rows"],
-        }
+        # empty batch: nothing to rewrite, no new version (the
+        # reference's loader likewise skips the upsert on an empty load)
+        empty_noop = self._noop_result(m)
         rows_rejected = 0
         validate_rules = kwargs.pop("validate_rules", None)
         dedupe_on_url = (
@@ -3627,10 +3659,8 @@ class CowTable:
         if guard_urls:
             source = url_conflict_filter(source, self.read(m["version"]), keys)
         source = source.localCheckpoint(eager=False)
-        boxes, batch_has_null, multiset = self._batch_boxes(
-            source, want_multiset=True
-        )
-        if not boxes and not batch_has_null:
+        summary = self._batch_summary(source)
+        if summary.empty:
             # the batch is empty after validation/dedupe/guard.
             # Distinguish "empty load" (raw source empty — historical
             # plain noop dict) from "fully eliminated batch" (the
@@ -3643,17 +3673,10 @@ class CowTable:
                 and not raw_source.head(1)
             ):
                 return empty_noop
-            return {
-                "version": m["version"],
-                "files_rewritten": 0,
-                "files_skipped": len(m["files"]),
-                "files_written": 0,
-                "rows": m["rows"],
-                "rows_rejected": rows_rejected,
-            }
+            return self._noop_result(m, rows_rejected=rows_rejected)
         affected, untouched = [], []
         for e in m["files"]:
-            hit = self._entry_hit(e, boxes, batch_has_null)
+            hit = self._entry_hit(e, summary)
             (affected if hit else untouched).append(e)
         if kwargs.get("validate_unique"):
             # uniqueness repair must see the whole table (a url dup can
@@ -3689,56 +3712,32 @@ class CowTable:
         # data files go to a commit-unique directory: concurrent
         # attempts never collide on the filesystem, and a losing or
         # crashed attempt leaves only an unreferenced dir for vacuum
-        new_version = m["version"] + 1
         rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
         data_dir = f"{self.root}/{rel_dir}"
         # bounds known -> no range-sampling job AND the join lineage
         # executes exactly once (the checkpoint existed only because
         # sampling ran it twice); unknown -> sampling path unchanged
-        bounds = self._range_bounds(multiset, affected, target_files)
+        bounds = self._range_bounds(summary, affected, target_files)
         self._write_clustered(
             self._to_physical(merged), target_files, data_dir,
             checkpoint=bounds is None,  # join lineage: source x affected
             bounds=bounds,
         )
         new_entries = self._collect_entries(data_dir, rel_dir)
-        if pre_commit_hook is not None:
-            pre_commit_hook()
-        relinked = False
-        try:
-            self._commit(
-                new_version,
-                untouched + new_entries,
-                op="merge",
-                schema_json=merged.schema.json() if new_fields else None,
-                txn=txn,
-            )
-        except CommitConflict:
-            rl = None
+        mm, relinked = self._publish(
+            m, affected, untouched, new_entries, "merge",
             # uniqueness repair read the WHOLE table and schema
             # evolution interacts with the winner's schema — both
             # always take the full rebase
-            if not (kwargs.get("validate_unique") or new_fields):
-                rl = self._relink_after_conflict(
-                    base_version=m["version"],
-                    removed_paths=[e["path"] for e in affected],
-                    new_entries=new_entries,
-                    op="merge",
-                    safe_against=lambda added, removed: (
-                        self._merge_relink_safe(
-                            added, removed, boxes, batch_has_null,
-                            source if guard_urls else None,
-                        )
-                    ),
-                    txn=txn,
-                )
-            if rl is None:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-            new_version, relinked = rl, True
-        mm = self._manifest(new_version)
+            None if kwargs.get("validate_unique") or new_fields
+            else lambda added, removed: self._merge_relink_safe(
+                added, removed, summary, source if guard_urls else None
+            ),
+            [data_dir], pre_commit_hook, txn=txn,
+            schema_json=merged.schema.json() if new_fields else None,
+        )
         return {
-            "version": new_version,
+            "version": mm["version"],
             "files_rewritten": len(affected),
             "files_skipped": len(mm["files"]) - len(new_entries),
             "files_written": len(new_entries),
@@ -3800,19 +3799,16 @@ class CowTable:
         including the disjoint-files metadata-only re-link."""
         if update_set is None and delete_cond is None and not insert:
             raise ValueError("merge_when with no WHEN clause is a no-op")
-        last: CommitConflict | None = None
-        for _ in range(max_retries + 1):
-            try:
-                return self._merge_when_attempt(
-                    source, update_set, update_cond, delete_cond, insert,
-                    insert_cond, target_alias, source_alias, target_files,
-                    pre_commit_hook, check_duplicate_keys,
-                    (str(txn_app), int(txn_version))
-                    if txn_app is not None else None,
-                )
-            except CommitConflict as e:
-                last = e
-        raise last
+        return self._retrying(
+            lambda: self._merge_when_attempt(
+                source, update_set, update_cond, delete_cond, insert,
+                insert_cond, target_alias, source_alias, target_files,
+                pre_commit_hook, check_duplicate_keys,
+                (str(txn_app), int(txn_version))
+                if txn_app is not None else None,
+            ),
+            max_retries,
+        )
 
     def _merge_when_attempt(
         self, source, update_set, update_cond, delete_cond, insert,
@@ -3833,11 +3829,7 @@ class CowTable:
         missing = [k for k in keys if k not in source.columns]
         if missing:
             raise ValueError(f"source lacks merge key columns {missing}")
-        noop = {
-            "version": m["version"], "files_rewritten": 0,
-            "files_skipped": len(m["files"]), "files_written": 0,
-            "rows": m["rows"],
-        }
+        noop = self._noop_result(m)
         if txn is not None and (
             int((m.get("txns") or {}).get(txn[0], -(2**63))) >= txn[1]
         ):
@@ -3845,7 +3837,7 @@ class CowTable:
         # checkpoint FIRST so every downstream action (dup check, batch
         # boxes, the merge join, the clustered write) computes the
         # source lineage once and reads the cached blocks after;
-        # emptiness is decided by _batch_boxes below (its collect is
+        # emptiness is decided by _batch_summary below (its collect is
         # needed anyway) instead of a dedicated head(1) job
         source = source.localCheckpoint(eager=False)
         if update_set == "*":
@@ -3870,25 +3862,18 @@ class CowTable:
         # second wide shuffle over the source whose only output was a
         # boolean); boxes are identical — min/max don't care about row
         # multiplicity — so the affected-file split cannot move
-        if check_duplicate_keys:
-            boxes, batch_has_null, has_dup, multiset = self._batch_boxes(
-                source, check_dups=True, want_multiset=True
+        summary = self._batch_summary(source, check_dups=check_duplicate_keys)
+        if summary.has_dup:
+            raise ValueError(
+                "merge_when source has duplicate merge keys — "
+                "multiple source rows matching one target row is "
+                "ambiguous (dedupe the source first)"
             )
-            if has_dup:
-                raise ValueError(
-                    "merge_when source has duplicate merge keys — "
-                    "multiple source rows matching one target row is "
-                    "ambiguous (dedupe the source first)"
-                )
-        else:
-            boxes, batch_has_null, multiset = self._batch_boxes(
-                source, want_multiset=True
-            )
-        if not boxes and not batch_has_null:
+        if summary.empty:
             return noop  # empty source: no box ⇔ no row
         affected, untouched = [], []
         for e in m["files"]:
-            (affected if self._entry_hit(e, boxes, batch_has_null)
+            (affected if self._entry_hit(e, summary)
              else untouched).append(e)
         tgt = (
             self._read_entries(affected, m) if affected
@@ -3965,7 +3950,6 @@ class CowTable:
         # coercion); keep every written file at the manifest width
         out = self._conform_widths(out, schema, [])
         self._enforce_constraints(out, "merge_when")
-        new_version = m["version"] + 1
         rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
         data_dir = f"{self.root}/{rel_dir}"
         # write FIRST instead of probing emptiness with head(1): the
@@ -3973,7 +3957,7 @@ class CowTable:
         # empty result writes no part files at all (empty tasks emit
         # nothing) and _collect_entries returns [] from the part-less
         # dir without planning a scan
-        bounds = self._range_bounds(multiset, affected, target_files)
+        bounds = self._range_bounds(summary, affected, target_files)
         self._write_clustered(
             self._to_physical(out), target_files, data_dir,
             checkpoint=bounds is None,  # join lineage: source x affected
@@ -3983,34 +3967,15 @@ class CowTable:
         if not new_entries and not affected:
             shutil.rmtree(data_dir, ignore_errors=True)
             return noop
-        if pre_commit_hook is not None:
-            pre_commit_hook()
-        relinked = False
-        try:
-            self._commit(
-                new_version, untouched + new_entries, op="merge_when",
-                txn=txn,
-            )
-        except CommitConflict:
-            rl = self._relink_after_conflict(
-                base_version=m["version"],
-                removed_paths=[e["path"] for e in affected],
-                new_entries=new_entries,
-                op="merge_when",
-                safe_against=lambda added, removed: (
-                    self._merge_relink_safe(
-                        added, removed, boxes, batch_has_null, None
-                    )
-                ),
-                txn=txn,
-            )
-            if rl is None:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-            new_version, relinked = rl, True
-        mm = self._manifest(new_version)
+        mm, relinked = self._publish(
+            m, affected, untouched, new_entries, "merge_when",
+            lambda added, removed: self._merge_relink_safe(
+                added, removed, summary, None
+            ),
+            [data_dir], pre_commit_hook, txn=txn,
+        )
         return {
-            "version": new_version,
+            "version": mm["version"],
             "files_rewritten": len(affected),
             "files_skipped": len(mm["files"]) - len(new_entries),
             "files_written": len(new_entries),
@@ -4029,12 +3994,8 @@ class CowTable:
         paths = [self._abs(e['path']) for e in m["files"]]
         if not paths:
             return [], []
-        phys, logical = self._physical_schema(m)
-        reader = self.spark.read
-        if phys is not None:
-            reader = reader.schema(phys)
         hits = (
-            self._to_logical(reader.parquet(*paths), phys, logical)
+            self._scan(paths, m)
             .filter(condition)
             .select(F.input_file_name().alias("__f"))
             .distinct()
@@ -4131,16 +4092,13 @@ class CowTable:
             self._dv_rewrite_attempt if mode == "dv"
             else self._rewrite_attempt
         )
-        last: CommitConflict | None = None
-        for _ in range(max_retries + 1):
-            try:
-                return attempt(
-                    op, condition, set_exprs, target_files, pre_commit_hook,
-                    audit_path, reason,
-                )
-            except CommitConflict as e:
-                last = e
-        raise last
+        return self._retrying(
+            lambda: attempt(
+                op, condition, set_exprs, target_files, pre_commit_hook,
+                audit_path, reason,
+            ),
+            max_retries,
+        )
 
     def _rewrite_attempt(
         self, op, condition, set_exprs, target_files, pre_commit_hook,
@@ -4150,13 +4108,7 @@ class CowTable:
         self._refresh_props(m)
         touched, carried = self._files_matching(m, condition)
         if not touched:
-            return {
-                "version": m["version"],
-                "files_rewritten": 0,
-                "files_skipped": len(m["files"]),
-                "files_written": 0,
-                "rows": m["rows"],
-            }
+            return self._noop_result(m)
         slice_df = self._read_entries(touched, m)
         if op == "update":
             unknown = set(set_exprs) - set(slice_df.columns)
@@ -4185,7 +4137,6 @@ class CowTable:
             # conform to the manifest width before writing
             out = self._conform_widths(out, self._schema(m), [])
             self._enforce_constraints(out, "update")
-        new_version = m["version"] + 1
         rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
         data_dir = f"{self.root}/{rel_dir}"
         # write FIRST (no head(1) emptiness probe — it cost an extra
@@ -4197,28 +4148,16 @@ class CowTable:
         # only, never correctness), killing the sampling job
         self._write_clustered(
             self._to_physical(out), target_files, data_dir,
-            bounds=self._range_bounds([], touched, target_files),
+            bounds=self._range_bounds(None, touched, target_files),
         )
         new_entries = self._collect_entries(data_dir, rel_dir)
-        if pre_commit_hook is not None:
-            pre_commit_hook()
-        relinked = False
-        try:
-            self._commit(new_version, carried + new_entries, op=op)
-        except CommitConflict:
-            rl = self._relink_after_conflict(
-                base_version=m["version"],
-                removed_paths=[e["path"] for e in touched],
-                new_entries=new_entries,
-                op=op,
-                safe_against=lambda added, removed: (
-                    self._predicate_relink_safe(added, condition)
-                ),
-            )
-            if rl is None:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-            new_version, relinked = rl, True
+        mm, relinked = self._publish(
+            m, touched, carried, new_entries, op,
+            lambda added, removed: self._predicate_relink_safe(
+                added, condition
+            ),
+            [data_dir], pre_commit_hook,
+        )
         if op == "delete" and audit_path is not None:
             # audit AFTER the commit so only the attempt that actually
             # committed writes its victim set (a conflict-losing attempt
@@ -4233,9 +4172,8 @@ class CowTable:
                 .write.mode("append")
                 .parquet(audit_path)
             )
-        mm = self._manifest(new_version)
         return {
-            "version": new_version,
+            "version": mm["version"],
             "files_rewritten": len(touched),
             "files_skipped": len(mm["files"]) - len(new_entries),
             "files_written": len(new_entries),
@@ -4263,22 +4201,9 @@ class CowTable:
         self._refresh_props(m)
         touched, carried = self._files_matching(m, condition)
         if not touched:
-            return {
-                "version": m["version"],
-                "files_rewritten": 0,
-                "files_skipped": len(m["files"]),
-                "files_written": 0,
-                "rows": m["rows"],
-            }
-        phys, logical = self._physical_schema(m)
-        reader = self.spark.read
-        if phys is not None:
-            reader = reader.schema(phys)
-        raw = self._to_logical(
-            self._with_position(
-                reader.parquet(*[self._abs(e["path"]) for e in touched])
-            ),
-            phys, logical,
+            return self._noop_result(m)
+        raw = self._scan(
+            [self._abs(e["path"]) for e in touched], m, positions=True
         )
         old_pos = self._dv_positions(touched)
         live = raw
@@ -4350,13 +4275,7 @@ class CowTable:
             # (no dedicated head(1) probe — emptiness falls out of the
             # per-file dead counts, which are computed anyway)
             shutil.rmtree(dv_dir, ignore_errors=True)
-            return {
-                "version": m["version"],
-                "files_rewritten": 0,
-                "files_skipped": len(m["files"]),
-                "files_written": 0,
-                "rows": m["rows"],
-            }
+            return self._noop_result(m)
         new_entries: list[dict] = []
         rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
         data_dir = f"{self.root}/{rel_dir}"
@@ -4376,29 +4295,13 @@ class CowTable:
                 self._to_physical(upd), target_files, data_dir
             )
             new_entries = self._collect_entries(data_dir, rel_dir)
-        if pre_commit_hook is not None:
-            pre_commit_hook()
-        new_version = m["version"] + 1
-        relinked = False
-        try:
-            self._commit(
-                new_version, carried + new_touched + new_entries, op=op
-            )
-        except CommitConflict:
-            rl = self._relink_after_conflict(
-                base_version=m["version"],
-                removed_paths=[e["path"] for e in touched],
-                new_entries=new_touched + new_entries,
-                op=op,
-                safe_against=lambda added, removed: (
-                    self._predicate_relink_safe(added, condition)
-                ),
-            )
-            if rl is None:
-                shutil.rmtree(dv_dir, ignore_errors=True)
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-            new_version, relinked = rl, True
+        mm, relinked = self._publish(
+            m, touched, carried, new_touched + new_entries, op,
+            lambda added, removed: self._predicate_relink_safe(
+                added, condition
+            ),
+            [dv_dir, data_dir], pre_commit_hook,
+        )
         if op == "delete" and audit_path is not None:
             (
                 victims.drop("__dv_file", "__dv_pos")
@@ -4407,9 +4310,8 @@ class CowTable:
                 .write.mode("append")
                 .parquet(audit_path)
             )
-        mm = self._manifest(new_version)
         return {
-            "version": new_version,
+            "version": mm["version"],
             "files_rewritten": 0,
             "files_dv": n_dv_changed,
             "files_skipped": len(mm["files"]) - len(new_entries),
@@ -4481,16 +4383,13 @@ class CowTable:
         (e.g. a provider merge landed mid-compaction) discards the
         attempt's files and re-plans compaction against the new
         snapshot, so a compactor can run alongside live ingestion."""
-        last: CommitConflict | None = None
-        for _ in range(max_retries + 1):
-            try:
-                return self._compact_attempt(
-                    target_rows, pre_commit_hook, zorder_by, zorder_bits,
-                    zorder_where, zorder_incremental,
-                )
-            except CommitConflict as e:
-                last = e
-        raise last
+        return self._retrying(
+            lambda: self._compact_attempt(
+                target_rows, pre_commit_hook, zorder_by, zorder_bits,
+                zorder_where, zorder_incremental,
+            ),
+            max_retries,
+        )
 
     def _zorder_bounds(
         self, entries: list[dict], cols, m: dict
@@ -4743,7 +4642,6 @@ class CowTable:
                     "cols": z_cols, "bits": zorder_bits,
                     "drifted_rows": 0, "fraction": 0.0,
                 }
-        new_version = m["version"] + 1
         rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
         data_dir = f"{self.root}/{rel_dir}"
         if zorder_by:
@@ -4756,27 +4654,14 @@ class CowTable:
                 minmax_bucket(F.col(c), lo, hi, zorder_bits)
                 for c, (lo, hi) in zorder_by.items()
             ]
-            zdf = self._to_physical(
-                df.withColumn("__z", zvalue(buckets, zorder_bits))
-            )
             # a hidden-partitioned table z-orders WITHIN partitions:
             # partition tuple leads the clustering and the write splits
             # per tuple, so OPTIMIZE ZORDER never un-purifies files
             # (partition pruning survives the rewrite; the z-curve
             # clusters inside each partition's files)
-            pcols: list[str] = []
-            colmap = self.column_mapping
-            for s in self.partition_spec:
-                phys_c = colmap.get(s["col"], s["col"])
-                if phys_c in zdf.columns:
-                    pc = f"__p_{s['name']}"
-                    zdf = zdf.withColumn(
-                        pc,
-                        _partition_field_expr(
-                            s, phys_c, zdf.schema[phys_c].dataType
-                        ),
-                    )
-                    pcols.append(pc)
+            zdf, pcols = self._with_partition_cols(self._to_physical(
+                df.withColumn("__z", zvalue(buckets, zorder_bits))
+            ))
             writer = (
                 zdf.repartitionByRange(
                     n_files, *[F.col(c) for c in pcols], F.col("__z")
@@ -4794,7 +4679,7 @@ class CowTable:
             # range split needs no sampling pass
             self._write_clustered(
                 self._to_physical(df), n_files, data_dir,
-                bounds=self._range_bounds([], small, n_files),
+                bounds=self._range_bounds(None, small, n_files),
             )
         new_entries = self._collect_entries(data_dir, rel_dir)
         if cluster_tag is not None:
@@ -4803,33 +4688,17 @@ class CowTable:
             # bounds of)
             for e in new_entries:
                 e["cluster"] = cluster_tag
-        if pre_commit_hook is not None:
-            pre_commit_hook()
-        relinked = False
-        try:
-            self._commit(
-                new_version, keep + new_entries, op="compact",
-                zorder_clamp=clamp_doc,
-            )
-        except CommitConflict:
-            # compaction output is data-identical to its input files, so
-            # a lost compaction is ALWAYS re-linkable when those inputs
-            # survived the winner unchanged — winner-added small files
-            # simply stay uncompacted until the next tick
-            rl = self._relink_after_conflict(
-                base_version=m["version"],
-                removed_paths=[e["path"] for e in small],
-                new_entries=new_entries,
-                op="compact",
-                safe_against=lambda added, removed: True,
-            )
-            if rl is None:
-                shutil.rmtree(data_dir, ignore_errors=True)
-                raise
-            new_version, relinked = rl, True
-        mm = self._manifest(new_version)
+        mm, relinked = self._publish(
+            m, small, keep, new_entries, "compact",
+            # compaction output is data-identical to its input files,
+            # so a lost compaction is ALWAYS re-linkable when those
+            # inputs survived the winner unchanged — winner-added small
+            # files simply stay uncompacted until the next tick
+            lambda added, removed: True,
+            [data_dir], pre_commit_hook, zorder_clamp=clamp_doc,
+        )
         return {
-            "version": new_version,
+            "version": mm["version"],
             "files_compacted": len(small),
             "files_kept": len(mm["files"]) - len(new_entries),
             "files_written": len(new_entries),
@@ -5387,22 +5256,11 @@ class CowTable:
         properties carry over from the head, and history stays linear:
         the pre-truncate snapshot remains time-travelable (and
         RESTORE-able) until vacuum, exactly like restore()."""
-        while True:
-            m = self._manifest()
-            # a conflicting writer may have evolved schema/properties:
-            # re-pin to the CURRENT head on every attempt
-            self._refresh_props(m)
-            new_version = self.version + 1
-            try:
-                self._commit(
-                    new_version, [], op="truncate",
-                    schema_json=m.get("schema"),
-                )
-                break
-            except CommitConflict:
-                continue  # metadata-only: nothing to recompute, re-slot
+        committed, m = self._commit_metadata(
+            "truncate", lambda m: ([], m.get("schema"))
+        )
         return {
-            "version": new_version,
+            "version": committed,
             "rows": 0,
             "rows_deleted": int(m["rows"]),
         }
@@ -5417,29 +5275,24 @@ class CowTable:
 
         Metadata-only, so a commit conflict just recomputes the next
         free version number and relinks — no data work to redo."""
-        m = self._manifest(version)
-        # restore restores the SNAPSHOT, schema + ALL table properties
-        # included (a head-state mapping against a pre-rename schema
-        # would mistranslate physical names; keeping the head's
-        # partition spec would leave a torn SET PARTITION SPEC in
-        # force after its rollback — and recover()'s content equality
-        # would then never converge)
-        self._refresh_props(m)
-        while True:
-            new_version = self.version + 1
-            try:
-                self._commit(
-                    new_version, m["files"], op=f"restore(v{version})",
-                    schema_json=m.get("schema"),
-                )
-                break
-            except CommitConflict:
-                continue
+        target = self._manifest(version)
+
+        def derive(_head):
+            # restore restores the SNAPSHOT, schema + ALL table
+            # properties included (a head-state mapping against a
+            # pre-rename schema would mistranslate physical names;
+            # keeping the head's partition spec would leave a torn SET
+            # PARTITION SPEC in force after its rollback — and
+            # recover()'s content equality would then never converge)
+            self._refresh_props(target)
+            return target["files"], target.get("schema")
+
+        committed, _ = self._commit_metadata(f"restore(v{version})", derive)
         return {
-            "version": new_version,
+            "version": committed,
             "restored_from": version,
-            "files": len(m["files"]),
-            "rows": m["rows"],
+            "files": len(target["files"]),
+            "rows": target["rows"],
         }
 
     def vacuum(

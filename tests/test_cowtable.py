@@ -12,9 +12,10 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
-from openverse_catalog_spark.operators.cowtable import CowTable
+from openverse_catalog_spark.operators.cowtable import BatchSummary, CowTable
 from openverse_catalog_spark.operators.merge import merge_upsert
 from tests.test_merge_upsert import COLS, mk, row
 
@@ -1511,6 +1512,154 @@ def test_cow_delete_relinks_past_disjoint_merge(spark, tmp_path):
     assert got[("flickr", "f000")] == "flickr-v2"
 
 
+def _met_range():
+    # the met rows of ``_base_rows`` by id range: a winner that only
+    # ADDS a met row past that range is disjoint from the predicate ops
+    return F.col("foreign_identifier").between("f020", "f039")
+
+
+#: every CowTable write that runs the optimistic commit protocol, each
+#: writing against the met files of the ``_base_rows`` table
+_CONFLICT_OPS = {
+    "merge": lambda spark, t, **kw: t.merge(
+        mk(spark, _batch_rows()), COLS, deterministic=True, **kw
+    ),
+    "merge_when": lambda spark, t, **kw: t.merge_when(
+        mk(spark, _batch_rows()), update_set="*", **kw
+    ),
+    "update_copy": lambda spark, t, **kw: t.update(
+        _met_range(), {"title": F.lit("upd")}, **kw
+    ),
+    "delete_copy": lambda spark, t, **kw: t.delete(_met_range(), **kw),
+    "update_dv": lambda spark, t, **kw: t.update(
+        _met_range(), {"title": F.lit("upd")}, mode="dv", **kw
+    ),
+    "delete_dv": lambda spark, t, **kw: t.delete(
+        _met_range(), mode="dv", **kw
+    ),
+    "compact": lambda spark, t, **kw: t.compact(
+        target_rows=1_000_000, **kw
+    ),
+}
+
+
+def _additive_winner(spark, root):
+    # fid sorts past every existing met range: the winner adds one new
+    # file and rewrites none
+    CowTable(spark, root).merge(
+        mk(spark, [row(provider="met", fid="zz-late",
+                       url="http://u/late", title="late")]),
+        COLS, deterministic=True,
+    )
+
+
+def _overlapping_winner(spark, root):
+    # rewrites the met file holding f020, which every op above reads
+    CowTable(spark, root).merge(
+        mk(spark, [row(provider="met", fid="f020",
+                       url="http://u/20", title="winner")]),
+        COLS, deterministic=True,
+    )
+
+
+def _full_rows(t):
+    return sorted(
+        (r["provider"], r["foreign_identifier"], r["url"], r["title"])
+        for r in t.read().collect()
+    )
+
+
+@pytest.mark.parametrize("op", sorted(_CONFLICT_OPS))
+def test_cow_conflict_matrix_disjoint_winner_relinks(spark, tmp_path, op):
+    """Every write op that loses its version slot to a disjoint winner
+    re-links its written files onto the new head (one attempt, no
+    recompute), and the table ends exactly where the serial execution
+    (winner first, then the op) ends."""
+    run = _CONFLICT_OPS[op]
+    t = CowTable.create(
+        spark, str(tmp_path / "tbl"), mk(spark, _base_rows()), target_files=4
+    )
+    fired = {"n": 0}
+
+    def hook():
+        fired["n"] += 1
+        if fired["n"] == 1:
+            _additive_winner(spark, t.root)
+
+    res = run(spark, t, pre_commit_hook=hook)
+    assert fired["n"] == 1, "a disjoint loser must not recompute"
+    assert res["relinked"] is True
+    assert res["version"] == t.version == 3
+    serial = CowTable.create(
+        spark, str(tmp_path / "serial"), mk(spark, _base_rows()),
+        target_files=4,
+    )
+    _additive_winner(spark, serial.root)
+    run(spark, serial)
+    assert _full_rows(t) == _full_rows(serial)
+
+
+@pytest.mark.parametrize("op", sorted(_CONFLICT_OPS))
+def test_cow_conflict_matrix_overlap_refuses_and_cleans(spark, tmp_path, op):
+    """An overlapping winner makes the re-link unsafe: with no retries
+    left the op raises CommitConflict, and every data directory the
+    losing attempt wrote (data files and deletion vectors) is gone —
+    each ``data/`` subdirectory on disk is referenced by a manifest."""
+    import os
+
+    from openverse_catalog_spark.operators.cowtable import CommitConflict
+
+    t = CowTable.create(
+        spark, str(tmp_path / "tbl"), mk(spark, _base_rows()), target_files=4
+    )
+    with pytest.raises(CommitConflict):
+        _CONFLICT_OPS[op](
+            spark, t, max_retries=0,
+            pre_commit_hook=lambda: _overlapping_winner(spark, t.root),
+        )
+    assert t.version == 2  # the winner's commit, nothing of the loser's
+    referenced = set()
+    for v in range(1, t.version + 1):
+        for e in t._manifest(v)["files"]:
+            referenced.add(e["path"].split("/")[1])
+            if e.get("dv"):
+                referenced.add(e["dv"]["path"].split("/")[1])
+    on_disk = set(os.listdir(str(tmp_path / "tbl" / "data")))
+    assert on_disk <= referenced
+
+
+def test_cow_commit_path_job_budget(spark, tmp_path, jobs_of):
+    """Spark jobs per commit on one small table: merge, merge_when,
+    copy-mode delete, deletion-vector delete and compact. The commit
+    protocol (retry, re-link, publish) is driver-side bookkeeping, so
+    a job added on this path is a regression."""
+    t = CowTable.create(
+        spark, str(tmp_path / "tbl"), mk(spark, _base_rows()), target_files=4
+    )
+    got = {
+        "merge": jobs_of(lambda: t.merge(
+            mk(spark, _batch_rows()), COLS, deterministic=True
+        )),
+        "merge_when": jobs_of(lambda: t.merge_when(
+            mk(spark, [row(provider="flickr", fid="f005",
+                           url="http://u/5", title="mw")]),
+            update_set="*",
+        )),
+        "delete_copy": jobs_of(lambda: t.delete(
+            F.col("foreign_identifier") == "f030"
+        )),
+        "delete_dv": jobs_of(lambda: t.delete(
+            F.col("foreign_identifier") == "f010", mode="dv"
+        )),
+        "compact": jobs_of(lambda: t.compact(target_rows=1_000_000)),
+    }
+    assert got == {
+        "merge": 7, "merge_when": 7, "delete_copy": 5,
+        "delete_dv": 5, "compact": 4,
+    }
+    assert t.version == 6
+
+
 def _dv_fixture(spark, tmp_path, n=20_000, files=2):
     df = spark.range(n).select(
         F.lit("p").alias("provider"),
@@ -2063,6 +2212,84 @@ def test_merge_batch_with_row_grain_keys_coarsens_boxes(spark, tmp_path):
         F.sum(F.when(F.col("v") == -1, 1).otherwise(0)).alias("updated"),
     ).head()
     assert got["n"] == n and got["updated"] == n // 2
+
+
+def test_partitioned_table_keeps_sampling_path(spark, tmp_path):
+    """Partitioned tables must fall back to the sampling write (their
+    partition transforms are not derivable driver-side): merge stays
+    correct and files stay partition-pure."""
+    from openverse_catalog_spark.schemas.columns import (
+        ColumnSpec,
+        Datatype,
+        UpsertStrategy,
+    )
+
+    df = spark.range(400).select(
+        F.col("id").cast("string").alias("k"),
+        (F.col("id") % 4).cast("string").alias("p"),
+        F.col("id").alias("v"),
+    )
+    t = CowTable.create(
+        spark, str(tmp_path / "t"), df, keys=("k",),
+        target_files=4, partition_by=("p",),
+    )
+    summary = BatchSummary(
+        boxes=[("x", "x", "x")], has_null=False, multiset=[(("x",), 1)]
+    )
+    assert t._range_bounds(summary, [], 4) is None
+    batch = spark.createDataFrame(
+        [("7", "3", 999)], "k string, p string, v long"
+    )
+    cols = [
+        ColumnSpec("k", Datatype.char,
+                   upsert_strategy=UpsertStrategy.no_change),
+        ColumnSpec("p", Datatype.char,
+                   upsert_strategy=UpsertStrategy.no_change),
+        ColumnSpec("v", Datatype.int,
+                   upsert_strategy=UpsertStrategy.newest_non_null),
+    ]
+    t.merge(batch, cols, target_files=2)
+    assert t.read().filter("k = '7'").head()["v"] == 999
+
+
+def test_range_bounds_rejects_unsafe_types(spark, tmp_path):
+    t = CowTable(spark, str(tmp_path / "t"), keys=("k",))
+    # float keys: Python/SQL NaN ordering diverges -> sampling path
+    summary = BatchSummary(
+        boxes=[(1.5, 1.5, 1.5)], has_null=False, multiset=[((1.5,), 3)]
+    )
+    assert t._range_bounds(summary, [], 4) is None
+
+
+def test_entry_hit_overflow_range_box_composite_keys(spark, tmp_path):
+    """The overflow summary's one global box (composite keys) keeps
+    every file whose (keys[0], keys[1]) range meets the box's
+    lexicographic interval and skips the rest; a batch with a NULL key
+    component still routes to files holding NULL keys."""
+    t = CowTable(spark, str(tmp_path / "t"), keys=("p", "f"))
+    box = BatchSummary(
+        boxes=[], has_null=False, range_box=(("b", "f10"), ("c", "f20"))
+    )
+
+    def entry(lo, hi, nulls=0):
+        return {
+            "min": {"p": lo[0], "f": lo[1]},
+            "max": {"p": hi[0], "f": hi[1]},
+            "null_keys": {"p": 0, "f": nulls},
+        }
+
+    assert not t._entry_hit(entry(("a", "f00"), ("a", "f99")), box)
+    assert not t._entry_hit(entry(("b", "f00"), ("b", "f09")), box)
+    assert t._entry_hit(entry(("b", "f05"), ("b", "f15")), box)
+    # conservative: inside the interval though past the box's f range
+    assert t._entry_hit(entry(("c", "f00"), ("c", "f30")), box)
+    assert not t._entry_hit(entry(("c", "f21"), ("d", "f00")), box)
+    with_null = BatchSummary(
+        boxes=[], has_null=True, range_box=box.range_box
+    )
+    assert t._entry_hit(entry(("a", "f00"), ("a", "f99"), 1), with_null)
+    assert not t._entry_hit(entry(("a", "f00"), ("a", "f99")), with_null)
+    assert not box.empty
 
 
 def test_reader_feature_gate(spark, tmp_path):

@@ -134,44 +134,6 @@ def test_rewrite_bounds_from_entries_int_interpolation(spark, tmp_path):
     )
 
 
-def test_partitioned_table_keeps_sampling_path(spark, tmp_path):
-    """Partitioned tables must fall back to the sampling write (their
-    partition transforms are not derivable driver-side): merge stays
-    correct and files stay partition-pure."""
-    df = spark.range(400).select(
-        F.col("id").cast("string").alias("k"),
-        (F.col("id") % 4).cast("string").alias("p"),
-        F.col("id").alias("v"),
-    )
-    t = CowTable.create(
-        spark, str(tmp_path / "t"), df, keys=("k",),
-        target_files=4, partition_by=("p",),
-    )
-    assert t._range_bounds([(("x",), 1)], [], 4) is None
-    batch = spark.createDataFrame(
-        [("7", "3", 999)], "k string, p string, v long"
-    )
-    cols = [
-        ColumnSpec("k", Datatype.char,
-                   upsert_strategy=UpsertStrategy.no_change),
-        ColumnSpec("p", Datatype.char,
-                   upsert_strategy=UpsertStrategy.no_change),
-        ColumnSpec("v", Datatype.int,
-                   upsert_strategy=UpsertStrategy.newest_non_null),
-    ]
-    t.merge(batch, cols, target_files=2)
-    assert t.read().filter("k = '7'").head()["v"] == 999
-
-
-def test_range_bounds_rejects_unsafe_types(spark, tmp_path):
-    df = spark.range(10).select(
-        F.col("id").cast("double").alias("k"), F.col("id").alias("v")
-    )
-    t = CowTable(spark, str(tmp_path / "t"), keys=("k",))
-    # float keys: Python/SQL NaN ordering diverges -> sampling path
-    assert t._range_bounds([((1.5,), 3)], [], 4) is None
-
-
 def test_python_pass_floor_at_10x_input(spark):
     """Floor-aware pin at a larger synthetic input (r11 verdict item
     7): a single-partition 50k-row frame expands to the session's

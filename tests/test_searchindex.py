@@ -623,24 +623,6 @@ def test_filtered_bm25_and_phrase(spark, tmp_path):
     assert [(r.doc_id, r.hits) for r in got] == [(3, 2), (2, 1)]
 
 
-def _jobs_of(spark, action) -> int:
-    """Spark jobs ``action`` runs, counted under its own job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status store through the async
-    # listener bus; drain it so the count is complete
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _sourced_index(spark, tmp_path, n=300):
     words = ("alpha", "bravo", "charlie", "delta", "echo", "foxtrot")
     rows = [
@@ -660,18 +642,15 @@ def _sourced_index(spark, tmp_path, n=300):
     )
 
 
-def test_bm25_warm_probe_job_budget(spark, tmp_path):
+def test_bm25_warm_probe_job_budget(spark, tmp_path, jobs_of):
     """A warm probe runs 4 jobs (postings scan with the df window, the
     doclen broadcast, the doc-score aggregate, TakeOrdered) and a
     filtered one 5 (+ the match-set scan): corpus totals come from the
     per-version memo, not from two re-planned aggregates per probe."""
     _, idx = _sourced_index(spark, tmp_path)
     idx.bm25(["alpha"], 5).collect()  # warm: the one stats miss
-    assert _jobs_of(
-        spark, lambda: idx.bm25(["bravo", "delta"], 10).collect()
-    ) == 4
-    assert _jobs_of(
-        spark,
+    assert jobs_of(lambda: idx.bm25(["bravo", "delta"], 10).collect()) == 4
+    assert jobs_of(
         lambda: idx.bm25(
             ["bravo", "delta"], 10, where="source = 'a'"
         ).collect(),

@@ -44,7 +44,11 @@ oracle can reproduce every stage. Probes score by ADC (per-subspace
 query-codeword dot lookups over the pruned code lists) and exactly
 re-rank only the top-shortlist candidates against the BASE table's raw
 vectors at the index's applied version — the index itself never stores
-a raw vector.
+a raw vector. A batch ``probe`` runs ADC as a Python pass against the
+broadcast codebooks; a single-vector ``search`` builds the query's
+lookup table on the driver (FAISS's per-query ADC table) and scores in
+the JVM, so it costs two Spark jobs: the shortlist collect and the
+re-rank.
 
 The reference has no vector index (its search handoff is lexical
 Elasticsearch, ``data_refresh_task_factory.py:183-240``); this is the
@@ -56,7 +60,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openverse_catalog_spark.operators.cowtable import CowTable
@@ -102,6 +106,23 @@ def _sample_centroids(
             "centroid_mod (C should grow ~sqrt(n), not n)"
         )
     return spark.createDataFrame(rows, cents.schema), len(rows)
+
+
+def _vec_literal(spark: SparkSession, values) -> Column:
+    """``values`` as ONE typed ``array<double>`` literal — a query
+    vector or ADC lookup table that a single-vector search puts into
+    its plan. The doubles cross to the JVM as one byte buffer, a
+    constant handful of py4j calls at any length: ``F.lit`` of a numpy
+    array fills the Java array with one py4j call per element, and
+    ``F.array`` of per-element ``F.lit`` also puts one literal
+    expression per element into the plan."""
+    import numpy as np
+
+    raw = np.asarray(values, dtype=">f8")  # ByteBuffer's byte order
+    jvm = spark._jvm
+    arr = spark.sparkContext._gateway.new_array(jvm.double, len(raw))
+    jvm.java.nio.ByteBuffer.wrap(raw.tobytes()).asDoubleBuffer().get(arr)
+    return Column(jvm.org.apache.spark.sql.functions.lit(arr))
 
 
 class VectorIndex(IncrementalIndex):
@@ -1140,10 +1161,17 @@ class VectorIndex(IncrementalIndex):
         centroids resolve DRIVER-side against the small centroid
         matrix (no Spark job), the lists read is manifest-pruned to
         those centroids, and scoring is a pure JVM expression against
-        the query literal — no Python in the scan. Returns
-        (neighbor_id, cosine) ranked by the 9-decimal-rounded score
-        with an id tie-break (duplicate vectors rank
+        the query literal — no Python in the scan, in both modes.
+        Returns (neighbor_id, cosine) ranked by the 9-decimal-rounded
+        score with an id tie-break (duplicate vectors rank
         deterministically).
+
+        PQ mode builds the query's ADC lookup table on the driver too
+        and runs two jobs: the ADC shortlist collect, then the exact
+        re-rank of the shortlisted base rows when the caller acts on
+        the returned frame. ``shortlist`` (default max(10, 4k), never
+        below k) is the ADC cut; results equal the batch ``probe`` of
+        the same vector as a one-row frame with ``exclude_self=False``.
 
         ``where`` runs a FILTERED search with a recall floor: the
         predicate pre-filters against the base (see ``_match_set``) and
@@ -1155,38 +1183,52 @@ class VectorIndex(IncrementalIndex):
         bounds total probe work at <= 2x the final level."""
         import numpy as np
 
-        c_ids, c_mat = self._centroid_matrix()
         q = np.asarray([float(x) for x in qvec], dtype="float64")
-        nrm = float(np.sqrt((q * q).sum()))
-        if nrm == 0.0:
+        if not (q * q).sum():
             raise ValueError("zero query vector has no cosine neighbors")
         if where is not None:
-            return self._search_filtered(qvec, k, nprobe, shortlist, where)
+            return self._search_filtered(q, k, nprobe, shortlist, where)
+        probed = sorted(int(c) for c in self._centroid_order(q)[:nprobe])
+        return self._rank(
+            self.lists.read_pruned(probed), q, probed, k, shortlist
+        )
+
+    def _centroid_order(self, q):
+        """Centroid ids by descending cosine to the query vector ``q``
+        (stable, so equal scores keep id order) — driver-side against
+        the memoized centroid matrix, no Spark job."""
+        import numpy as np
+
+        c_ids, c_mat = self._centroid_matrix()
+        sims = c_mat @ (q / float(np.sqrt((q * q).sum())))
+        return c_ids[np.argsort(-sims, kind="stable")]
+
+    def _rank(
+        self, cand: DataFrame, q, probed: list[int], k: int,
+        shortlist: int | None,
+    ) -> DataFrame:
+        """The mode's exact single-vector ranking of the probed
+        candidates ``cand`` (list rows of the ``probed`` centroids,
+        possibly match-filtered): cosine against the query literal,
+        top k by (round(cosine, 9) desc, neighbor_id), output cosine
+        rounded to 6. PQ mode first cuts the candidates to the ADC
+        shortlist (one collect) and ranks the shortlisted BASE rows at
+        the index's applied version instead — what the codes were
+        encoded from; the index itself stores no raw vector."""
         if self.pq_m:
-            # PQ single-vector search rides the batch probe (ADC +
-            # exact re-rank) as a one-row query frame. exclude_self is
-            # OFF: the query is external, so its placeholder id shares
-            # no namespace with the corpus — a corpus that legitimately
-            # holds vec_id == -1 must still be searchable
-            qdf = self.spark.createDataFrame(
-                [(-1, [float(x) for x in qvec])],
-                f"{self.id_col} long, {self.vec_col} array<double>",
+            shortlist = max(int(shortlist or max(10, 4 * k)), int(k))
+            ids = self._pq_shortlist(cand, q, probed, shortlist)
+            cand = _as_double(
+                self.base.read_pruned(ids, version=self.applied_version),
+                self.vec_col,
+            ).select(
+                F.col(self.id_col).alias("neighbor_id"),
+                F.col(self.vec_col).alias("vector"),
             )
-            out = self.probe(
-                qdf, k=k, nprobe=nprobe,
-                shortlist=shortlist if shortlist else max(10, 4 * k),
-                exclude_self=False,
-            )
-            return out.orderBy("rank").select(
-                "neighbor_id", F.round("cosine", 6).alias("cosine")
-            )
-        sims = c_mat @ (q / nrm)
-        order = np.argsort(-sims, kind="stable")[:nprobe]
-        probed = sorted(int(c_ids[i]) for i in order)
-        qarr = F.array(*[F.lit(float(x)) for x in qvec])
-        scored = self.lists.read_pruned(probed).select(
+        qlit = _vec_literal(self.spark, q)
+        scored = cand.select(
             "neighbor_id",
-            cosine_expr(qarr, F.col("vector")).alias("cosine"),
+            cosine_expr(qlit, F.col("vector")).alias("cosine"),
         )
         return (
             scored.orderBy(
@@ -1196,14 +1238,62 @@ class VectorIndex(IncrementalIndex):
             .select("neighbor_id", F.round("cosine", 6).alias("cosine"))
         )
 
+    def _pq_shortlist(
+        self, cand: DataFrame, q, probed: list[int], shortlist: int,
+    ) -> list[int]:
+        """Neighbor ids of the ``shortlist`` best candidates by ADC, in
+        ONE collect with no Python in the scan. The query's lookup
+        table ``lut[j, c] = dot(q̂_j, codebook[c, j])`` is computed on
+        the driver (FAISS's per-query ADC table) and enters the plan as
+        one n_k-double array literal per subspace, so a candidate's ADC
+        is a JVM sum of m ``element_at`` lookups by its codes. (One
+        m x n_k literal referenced by all m lookups is copied m times
+        into every task and plan description: several times slower per
+        search at n_k = 8000.) Residual codes add dot(q̂, centroid)
+        back per probed list through a literal map (linear in the
+        probed-centroid count per row; small nprobe keeps it cheap).
+        Cut order is the batch probe's: round(adc, 9) desc, then
+        neighbor_id."""
+        import functools
+        import operator
+
+        import numpy as np
+
+        cb = self._codebook_tensor()  # (n_k, m, dsub)
+        m = cb.shape[1]
+        qn = q / np.linalg.norm(q)
+        lut = np.einsum("jd,cjd->jc", qn.reshape(m, -1), cb)
+        codes = F.col("codes")
+        adc = functools.reduce(operator.add, [
+            F.element_at(_vec_literal(self.spark, lut[j]), codes[j] + 1)
+            for j in range(m)
+        ])
+        if self.pq_residual:
+            c_ids, c_mat = self._centroid_matrix()
+            cdot = c_mat[np.searchsorted(c_ids, probed)] @ qn
+            adc = adc + F.element_at(
+                F.map_from_arrays(
+                    F.lit(np.asarray(probed, dtype="int64")),
+                    _vec_literal(self.spark, cdot),
+                ),
+                F.col("centroid_id"),
+            )
+        rows = (
+            cand.select("neighbor_id", adc.alias("adc"))
+            .orderBy(F.round(F.col("adc"), 9).desc(), "neighbor_id")
+            .limit(shortlist)
+            .select("neighbor_id")
+            .collect()
+        )
+        return [r[0] for r in rows]
+
     # pre-filter only below this match-set fraction of the corpus: a
     # non-selective predicate (most of a 100 TB corpus matches) would
     # make the match-id materialization dwarf the probe itself
     PREFILTER_SELECTIVITY = 0.5
 
     def _search_filtered(
-        self, qvec: list[float], k: int, nprobe: int,
-        shortlist: int | None, where: str,
+        self, q, k: int, nprobe: int, shortlist: int | None, where: str,
     ) -> DataFrame:
         """Filtered single-vector search (see ``search``): probe-first
         with nprobe-doubling escalation to the recall floor, then the
@@ -1217,10 +1307,11 @@ class VectorIndex(IncrementalIndex):
           lists inner-joined against the LAZY column-pruned predicate
           scan and collect the <= k result rows. If k fills — the
           overwhelmingly common case for a non-selective predicate
-          (say 90% of a 100 TB corpus matches) — that ONE job is the
-          whole search: the match set is never counted, let alone
-          materialized; Catalyst/AQE broadcasts the small candidate
-          side into the streaming predicate scan.
+          (say 90% of a 100 TB corpus matches) — that ONE ranking (the
+          cosine collect; in PQ mode the ADC shortlist collect plus the
+          re-rank collect) is the whole search: the match set is never
+          counted, let alone materialized; Catalyst/AQE broadcasts the
+          small candidate side into the streaming predicate scan.
         * UNDER-FILL pays the match-set count — exactly then does the
           recall floor min(k, total matches) need it — and the measured
           fraction picks the escalation arm: SELECTIVE (fraction <=
@@ -1236,14 +1327,9 @@ class VectorIndex(IncrementalIndex):
         min(k, candidates) and the floor is <= k), so the level
         sequence — and therefore the result — is identical to counting
         candidates directly; collecting the <= k ranked rows just makes
-        the fill check and the final result the SAME job."""
-        import numpy as np
-
-        c_ids, c_mat = self._centroid_matrix()
-        q = np.asarray([float(x) for x in qvec], dtype="float64")
-        q = q / float(np.sqrt((q * q).sum()))
-        order = np.argsort(-(c_mat @ q), kind="stable")
-        n_cents = len(c_ids)
+        the fill check and the final result the SAME collect."""
+        order = self._centroid_order(q)
+        n_cents = len(order)
         match = self._match_set(where)
         # corpus size straight from the lists manifest (live rows; one
         # entry per vector) — metadata-only, no job
@@ -1251,10 +1337,9 @@ class VectorIndex(IncrementalIndex):
         n_match: int | None = None  # counted only on first under-fill
         selective = False
         persisted = None
-        qarr = F.array(*[F.lit(float(x)) for x in qvec])
         n = max(1, min(int(nprobe), n_cents))
         while True:
-            probed = sorted(int(c_ids[i]) for i in order[:n])
+            probed = sorted(int(c) for c in order[:n])
             lists_read = self.lists.read_pruned(probed)
             if selective:
                 cand = lists_read.join(match, "neighbor_id", "semi")
@@ -1265,7 +1350,7 @@ class VectorIndex(IncrementalIndex):
                 # into the streaming predicate scan — a semi-join could
                 # only broadcast the (huge) match side or shuffle both
                 cand = lists_read.join(match, "neighbor_id")
-            rows = self._rank_filtered(cand, qarr, qvec, k, shortlist)
+            rows = self._rank(cand, q, probed, k, shortlist).collect()
             if len(rows) >= int(k) or n >= n_cents:
                 break
             if n_match is None:
@@ -1295,43 +1380,4 @@ class VectorIndex(IncrementalIndex):
             persisted.unpersist()
         return self.spark.createDataFrame(
             rows, "neighbor_id long, cosine double"
-        )
-
-    def _rank_filtered(
-        self, cand: DataFrame, qarr, qvec: list[float], k: int,
-        shortlist: int | None,
-    ) -> list:
-        """One escalation level's exact ranking (the mode's own: flat
-        cosine or ADC + re-rank), COLLECTED — the <= k returned rows
-        double as the fill check, so a filled first level costs exactly
-        one job (see ``_search_filtered``)."""
-        if self.pq_m:
-            # ride the shared ADC + exact-re-rank path as a one-row
-            # query group; candidates are already match-filtered, so
-            # the shortlist and the re-rank fetch touch matches only
-            probe_df = self.spark.createDataFrame(
-                [(-1, [float(x) for x in qvec])],
-                "query_id long, __qv array<double>",
-            )
-            cand = cand.withColumn("query_id", F.lit(-1)).withColumn(
-                "__qv", qarr
-            )
-            out = self._probe_pq_rerank(
-                probe_df, cand, k,
-                shortlist if shortlist else max(10, 4 * k), None,
-            )
-            return out.orderBy("rank").select(
-                "neighbor_id", F.round("cosine", 6).alias("cosine")
-            ).collect()
-        scored = cand.select(
-            "neighbor_id",
-            cosine_expr(qarr, F.col("vector")).alias("cosine"),
-        )
-        return (
-            scored.orderBy(
-                F.round(F.col("cosine"), 9).desc(), "neighbor_id"
-            )
-            .limit(k)
-            .select("neighbor_id", F.round("cosine", 6).alias("cosine"))
-            .collect()
         )

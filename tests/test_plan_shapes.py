@@ -417,3 +417,49 @@ def test_warm_bm25_plan_has_one_window_and_no_stats_aggregate(
     assert "CartesianProduct" not in plan
     assert "avg(dl" not in plan
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
+
+
+def test_pq_single_vector_search_plans_are_jvm_only(
+    spark, tmp_path, monkeypatch
+):
+    """A PQ single-vector search picks centroids and builds the ADC
+    lookup table on the driver: both of its plans (the ADC shortlist
+    it collects and the exact re-rank it returns) hold no Python pass,
+    no window and no checkpointed RDD scan."""
+    import numpy as np
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from openverse_catalog_spark.operators.cowtable import CowTable
+    from openverse_catalog_spark.operators.vectorindex import VectorIndex
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(60)]
+    base = CowTable.create(
+        spark, str(tmp_path / "vecs"),
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        keys=("vec_id",),
+    )
+    q = rows[7][1]
+    for residual in (False, True):
+        idx = VectorIndex.create(
+            spark, str(tmp_path / f"idx{residual}"), base,
+            centroid_mod=10, pq_m=4, codebook_mod=7, pq_residual=residual,
+        )
+        idx.search(q, k=3).collect()  # warm the centroid/codebook memos
+        plans = []
+        collect = DataFrame.collect
+
+        def spy(df):
+            plans.append(_plan(df))
+            return collect(df)
+
+        monkeypatch.setattr(DataFrame, "collect", spy)
+        out = idx.search(q, k=3)
+        monkeypatch.undo()
+        plans.append(_plan(out))
+        assert len(plans) == 2, plans
+        for plan in plans:
+            for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython",
+                         "BatchEvalPython", "Window", "ExistingRDD"):
+                assert node not in plan, (residual, node, plan)
+        assert out.collect()[0].neighbor_id == 7

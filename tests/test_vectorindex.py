@@ -594,9 +594,10 @@ def test_id_col_must_be_base_merge_key(spark, tmp_path):
 
 
 def test_pq_search_serves_corpus_with_vec_id_minus_one(spark, tmp_path):
-    """PQ single-vector search rides the batch probe under a
-    placeholder query id of -1; the old self-exclusion filter silently
-    dropped a legitimate corpus row whose vec_id == -1."""
+    """A corpus row whose vec_id is -1 is an ordinary neighbor of a PQ
+    single-vector search: the query is external, so no id of the corpus
+    may be excluded as the query's own (an earlier search ran the batch
+    probe under a placeholder query id of -1 and dropped this row)."""
     rows = [(-1, _vec(12345))] + [(i, _vec(i)) for i in range(15)]
     base = CowTable.create(
         spark, str(tmp_path / "vecs"),
@@ -1176,3 +1177,167 @@ def test_create_learned_and_facade_clause(spark, tmp_path):
             "ATTACH VECTOR INDEX va ON vecs (embedding) LEARNED "
             f"LOCATION '{tmp_path / 'fvl'}'"
         )
+
+
+def _one_row_probe(spark, idx, q, k, nprobe, shortlist, where=None):
+    """The batch ``probe()`` contract for one external query vector:
+    a one-row frame, self-exclusion off, ranked (neighbor_id, cosine)
+    rounded the way ``search`` rounds its output."""
+    qdf = spark.createDataFrame(
+        [(0, [float(x) for x in q])], "vec_id long, embedding array<double>"
+    )
+    out = idx.probe(
+        qdf, k=k, nprobe=nprobe, shortlist=shortlist,
+        exclude_self=False, where=where,
+    )
+    return [
+        (r.neighbor_id, r.cosine)
+        for r in out.orderBy("rank").select(
+            "neighbor_id", F.round("cosine", 6).alias("cosine")
+        ).collect()
+    ]
+
+
+def _mlt_queries(n: int) -> list[list[float]]:
+    """Query vectors for "more like this" searches: indexed vectors
+    slightly perturbed, external random ones, and the vec_id == -1
+    row's own vector."""
+    rng = np.random.default_rng(4242)
+    out = [_vec(12345)]
+    for i in range(n - 1):
+        if i % 2:
+            out.append([float(x) for x in rng.normal(size=DIM)])
+        else:
+            v = np.asarray(_vec(3 * i + 1)) + rng.normal(scale=0.1, size=DIM)
+            out.append([float(x) for x in v])
+    return out
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_pq_search_equals_one_row_probe(spark, tmp_path, residual):
+    """PQ single-vector search (driver-side centroids and ADC lookup
+    table, JVM scoring) returns exactly what the batch probe returns
+    for the same vector as a one-row frame: same shortlist, rounding
+    and tie-breaks, including shortlist == k, a corpus row whose
+    vec_id is -1 and an exact duplicate vector (ids 1 and 202 tie on
+    ADC and cosine)."""
+    rows = [(-1, _vec(12345)), (202, _vec(1))] + [
+        (i, _vec(i)) for i in range(80)
+    ]
+    base = CowTable.create(
+        spark, str(tmp_path / "vecs"),
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        keys=("vec_id",), target_files=4,
+    )
+    idx = VectorIndex.create(
+        spark, str(tmp_path / "idx"), base,
+        centroid_mod=8, pq_m=4, codebook_mod=3, pq_residual=residual,
+    )
+    saw_minus_one = False
+    for n, q in enumerate(_mlt_queries(10)):
+        shortlist = 3 if n % 3 == 0 else 8
+        got = [
+            (r.neighbor_id, r.cosine)
+            for r in idx.search(
+                q, k=3, nprobe=2, shortlist=shortlist
+            ).collect()
+        ]
+        want = _one_row_probe(spark, idx, q, 3, 2, shortlist)
+        assert got == want, (n, shortlist, got, want)
+        assert len(got) == 3
+        saw_minus_one |= got[0][0] == -1
+        if n == 1:  # the query near vec_id 1 ranks its duplicate next
+            assert [g[0] for g in got[:2]] == [1, 202], got
+    assert saw_minus_one
+
+
+def test_pq_filtered_search_equals_probe_and_raw(spark, tmp_path):
+    """Filtered PQ search under a rare predicate that escalates nprobe:
+    every level's ranking equals the batch probe over the same
+    candidates, and with the whole match set on the shortlist the PQ
+    answer equals the raw-vector index's exact one."""
+    rng = np.random.default_rng(77)
+    d = rng.normal(size=DIM)
+    d = d / np.sqrt((d * d).sum())
+    rows = [(-1, _vec(12345), "en")]
+    for i in range(90):
+        if i % 30 == 7:  # 3 rare rows, anti-aligned with the queries
+            v = -d + rng.normal(scale=0.05, size=DIM)
+        else:
+            v = rng.normal(size=DIM)
+        rows.append((i, [float(x) for x in v],
+                     "gd" if i % 30 == 7 else "en"))
+    base = CowTable.create(
+        spark, str(tmp_path / "vecs"),
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, lang string"
+        ),
+        keys=("vec_id",), target_files=4,
+    )
+    raw = VectorIndex.create(
+        spark, str(tmp_path / "raw"), base, centroid_mod=9,
+    )
+    pq = VectorIndex.create(
+        spark, str(tmp_path / "pq"), base,
+        centroid_mod=9, pq_m=4, codebook_mod=3,
+    )
+    n_cents = len(pq._centroid_matrix()[0])
+    where = "lang = 'gd'"
+    for n in range(10):
+        q = [float(x) for x in d + rng.normal(scale=0.3, size=DIM)]
+        # 3 matches <= k: the recall floor escalates until every match
+        # is probed, so the final level's candidates are the full
+        # filtered probe's
+        got = [
+            (r.neighbor_id, r.cosine)
+            for r in pq.search(
+                q, k=3, nprobe=1, shortlist=3, where=where
+            ).collect()
+        ]
+        want = _one_row_probe(spark, pq, q, 3, n_cents, 3, where=where)
+        exact = [
+            (r.neighbor_id, r.cosine)
+            for r in raw.search(q, k=3, nprobe=1, where=where).collect()
+        ]
+        assert got == want == exact, (n, got, want, exact)
+        assert sorted(g[0] for g in got) == [7, 37, 67]
+
+
+def test_single_vector_search_job_budget(spark, tmp_path, jobs_of):
+    """Warm single-vector searches run a fixed number of Spark jobs:
+    flat search is one job, PQ search at most two (the ADC shortlist
+    collect and the exact re-rank), and a PQ search(where=...) whose
+    first level fills k runs the count pinned below."""
+    rows = [(i, _vec(i), "rare" if i % 10 == 0 else "common")
+            for i in range(60)]
+    base = CowTable.create(
+        spark, str(tmp_path / "vecs"),
+        spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, lang string"
+        ),
+        keys=("vec_id",), target_files=4,
+    )
+    flat = VectorIndex.create(
+        spark, str(tmp_path / "flat"), base, centroid_mod=10,
+    )
+    pq = VectorIndex.create(
+        spark, str(tmp_path / "pq"), base,
+        centroid_mod=10, pq_m=4, codebook_mod=7,
+    )
+    q = _vec(777)
+    for idx in (flat, pq):  # warm the centroid / codebook memos
+        idx.search(q, k=3, nprobe=2).collect()
+    counts = {
+        "flat": jobs_of(lambda: flat.search(q, k=3, nprobe=2).collect()),
+        "pq": jobs_of(lambda: pq.search(q, k=3, nprobe=2).collect()),
+        "pq_where": jobs_of(
+            lambda: pq.search(
+                q, k=3, nprobe=2, where="lang = 'common'"
+            ).collect()
+        ),
+    }
+    assert counts["flat"] == 1, counts
+    assert counts["pq"] <= 2, counts
+    # shortlist collect over the match-set join (2), re-rank collect,
+    # the result frame's collect
+    assert counts["pq_where"] == 4, counts

@@ -826,17 +826,8 @@ class LakeCatalog:
                     "retightened": bool(res.get("retightened")),
                 }
             # stats freshness (version-pinned side files, not catalog
-            # state): advance through the O(churn) incremental path so
-            # planner statistics track the published pin
-            st = t.stats()
-            if st is not None and int(st.get("version", 0)) < t.version:
-                try:
-                    adv = t.analyze_incremental(
-                        kmv_k=int(st.get("kmv_k") or 1024)
-                    )
-                    report[name]["stats_version"] = adv["version"]
-                except Exception as exc:  # noqa: BLE001 - unattended
-                    report[name]["stats_error"] = str(exc)
+            # state) so planner statistics track the published pin
+            report[name].update(t._advance_stats())
         # registered derived indexes refresh CAPPED AT THE PIN — the
         # unattended tick leaves indexes fresh, not just tables
         # compacted, and it runs BEFORE vacuum so the feed span each

@@ -43,6 +43,7 @@ new snapshot, never a mix; historical versions stay readable until
 
 from __future__ import annotations
 
+import base64
 import dataclasses
 import datetime
 import json
@@ -50,6 +51,7 @@ import os
 import re
 import shutil
 import uuid
+from bisect import bisect_left
 from urllib.parse import quote
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -753,6 +755,12 @@ def _bloom_point_bits(value, n_bits: int, n_hashes: int) -> list[int]:
     h1 = int(hex_[0:15], 16)
     h2 = int(hex_[16:31], 16)
     return [(h1 + i * (2 * h2 + 1)) % n_bits for i in range(n_hashes)]
+
+
+def _bloom_probeable(value) -> bool:
+    """Only str/int probes hash like the executor-side build (bool is
+    an int subclass but stringifies differently)."""
+    return isinstance(value, (str, int)) and not isinstance(value, bool)
 
 
 def _write_bloom_sidecar(
@@ -2019,6 +2027,65 @@ class CowTable:
             raise ValueError(f"no commit at or before {ts}")
         return best
 
+    # -- pruned reads (manifest data skipping) ------------------------------
+
+    def _col_bounds(self, e: dict, c: str) -> tuple | None:
+        """File ``e``'s (min, max) for column ``c``: the key range for a
+        merge key, the recorded ``stats`` otherwise. None = no stats for
+        ``c`` in this file (pre-stats history, a column added later);
+        (None, None) = every value of ``c`` in the file is NULL."""
+        if c in self.keys:
+            return e["min"].get(c), e["max"].get(c)
+        st = (e.get("stats") or {}).get(c)
+        return None if st is None else (st.get("min"), st.get("max"))
+
+    def _bloom_admits(self, e: dict, c: str, values) -> bool:
+        """False only when file ``e``'s bloom for ``c`` rules out every
+        one of ``values`` (str/int, see ``_bloom_probeable``); a file
+        without a bitmap is kept."""
+        rec = self._bloom_rec(e, c)
+        if rec is None:
+            return True  # no bloom recorded (or saturated-dropped)
+        bits = base64.b64decode(rec["b64"])
+        n_bits, n_hashes = int(rec["bits"]), int(rec["hashes"])
+        return any(
+            all(
+                (bits[i >> 3] >> (i & 7)) & 1
+                for i in _bloom_point_bits(v, n_bits, n_hashes)
+            )
+            for v in values
+        )
+
+    def _admits(
+        self, e: dict, c: str, lo=None, hi=None, vals: list | None = None,
+        bloom: bool = False,
+    ) -> bool:
+        """The one per-column file admission test of every pruned read:
+        can file ``e`` hold a ``c`` value in ``[lo, hi]`` (either side
+        None = unbounded) or, given ``vals`` (sorted, no NULLs), equal to
+        one of them? A file without stats for ``c`` is kept; an
+        all-NULL file is skipped (NULL matches no range or equality);
+        bounds that cannot be ordered against the probe (a string dim
+        over a long column) keep the file, the residual filter decides.
+        ``bloom`` also probes ``c``'s per-file bloom with ``vals``."""
+        b = self._col_bounds(e, c)
+        if b is not None:
+            fmin, fmax = b
+            if fmin is None and fmax is None:
+                return False
+            try:
+                if vals is not None:
+                    i = bisect_left(vals, fmin)
+                    if i >= len(vals) or vals[i] > fmax:
+                        return False
+                elif (lo is not None and fmax is not None and fmax < lo) or (
+                    hi is not None and fmin is not None and fmin > hi
+                ):
+                    return False
+            except TypeError:
+                pass  # mixed types: keep conservatively
+        return not bloom or self._bloom_admits(e, c, vals)
+
     def read_pruned(self, values, version: int | None = None) -> DataFrame:
         """Manifest-pruned snapshot read for ``keys[0] IN values`` (the
         reference's per-provider access pattern): only files whose
@@ -2032,12 +2099,10 @@ class CowTable:
         k0 = self.keys[0]
         want_null = any(v is None for v in values)
         vals = [v for v in values if v is not None]
+        probe = sorted(set(vals))
         picked = []
         for e in m["files"]:
-            lo, hi = e["min"][k0], e["max"][k0]
-            hit = lo is not None and hi is not None and any(
-                lo <= v <= hi for v in vals
-            )
+            hit = bool(probe) and self._admits(e, k0, vals=probe)
             if not hit and want_null:
                 nk = e.get("null_keys")
                 hit = nk is None or bool(nk.get(k0))
@@ -2078,7 +2143,7 @@ class CowTable:
         m = self._manifest(version)
         bloom_cols = set(m.get("bloom_cols") or [])
         norm: dict[str, tuple] = {}
-        eq_probe: dict[str, object] = {}
+        eq: dict[str, list] = {}
         for c, bound in ranges.items():
             if isinstance(bound, tuple):
                 norm[c] = bound
@@ -2094,14 +2159,7 @@ class CowTable:
                         "(None, None) explicitly for an unbounded scan"
                     )
                 norm[c] = (bound, bound)
-                # only str/int probes hash like the executor-side build
-                # (bool is an int subclass but stringifies differently)
-                if (
-                    c in bloom_cols
-                    and isinstance(bound, (str, int))
-                    and not isinstance(bound, bool)
-                ):
-                    eq_probe[c] = bound
+                eq[c] = [bound]
         # partition fields keyed by their SOURCE column: a predicate on
         # the raw column prunes through the transform (hidden partitioning)
         part_by_src: dict[str, list] = {}
@@ -2121,26 +2179,10 @@ class CowTable:
                 f"{m.get('stats_cols')} / {sorted(bloom_cols)}, keys: "
                 f"{list(self.keys)})"
             )
-
-        def entry_bounds(e, c):
-            if c in self.keys:
-                return e["min"].get(c), e["max"].get(c)
-            st = (e.get("stats") or {}).get(c)
-            if st is None:
-                return (), ()  # sentinel: no stats -> keep
-            return st.get("min"), st.get("max")
-
-        def bloom_rules_out(e, c) -> bool:
-            import base64
-
-            rec = self._bloom_rec(e, c)
-            if rec is None:
-                return False  # no bloom recorded (or saturated-dropped)
-            bits = base64.b64decode(rec["b64"])
-            probe = _bloom_point_bits(
-                eq_probe[c], int(rec["bits"]), int(rec["hashes"])
-            )
-            return any(not (bits[i >> 3] >> (i & 7)) & 1 for i in probe)
+        bloom = {
+            c: c in bloom_cols and _bloom_probeable(v[0])
+            for c, v in eq.items()
+        }
 
         def part_rules_out(e, c, lo, hi) -> bool:
             """Hidden-partition pruning: transform the probe bounds and
@@ -2183,25 +2225,13 @@ class CowTable:
 
         picked, rest = [], []
         for e in m["files"]:
-            keep = True
-            for c, (lo, hi) in norm.items():
-                fmin, fmax = entry_bounds(e, c)
-                if fmin == () and fmax == ():
-                    pass  # no stats: range can't prune, bloom still may
-                elif fmin is None and fmax is None:
-                    keep = False  # all-NULL file: predicate can't match
-                    break
-                elif (
-                    lo is not None and fmax is not None and fmax < lo
-                ) or (hi is not None and fmin is not None and fmin > hi):
-                    keep = False
-                    break
-                if part_rules_out(e, c, lo, hi):
-                    keep = False
-                    break
-                if c in eq_probe and bloom_rules_out(e, c):
-                    keep = False
-                    break
+            keep = all(
+                self._admits(
+                    e, c, lo, hi, vals=eq.get(c), bloom=bloom.get(c, False)
+                )
+                and not part_rules_out(e, c, lo, hi)
+                for c, (lo, hi) in norm.items()
+            )
             (picked if keep else rest).append(e)
         if _split:
             return picked, rest
@@ -2219,216 +2249,91 @@ class CowTable:
     def read_join_pruned(
         self,
         dim: DataFrame,
-        col: str,
+        on: str | list[str],
         version: int | None = None,
         max_keys: int = 10_000,
         dim_rows: list | None = None,
     ) -> DataFrame:
         """DYNAMIC FILE PRUNING from a join: rows of this table whose
-        ``col`` matches some value of ``dim[col]`` — but decided at the
-        FILE level before the scan plans. A selective dimension (one
-        provider's popularity constants, a takedown list) usually has a
-        bounded key set: collect it (capped), drop every fact file whose
-        per-file stats prove no key can live there (min/max range via
-        binary search; per-file bloom probes when ``col`` is a
-        bloom_col), and scan only the survivors with a residual ``isin``
-        filter — Spark's runtime DPP for partition columns, extended to
-        ARBITRARY stats columns through the manifest. A dimension wider
-        than ``max_keys`` falls back to an exact semi-join over the full
+        ``on`` column (a name) or column TUPLE (a list of names) matches
+        some row of ``dim`` — but decided at the FILE level before the
+        scan plans. A selective dimension (one provider's popularity
+        constants, a takedown list) usually has a bounded key set:
+        collect it (capped), drop every fact file whose per-file stats
+        prove no key can live there, and scan only the survivors —
+        Spark's runtime DPP for partition columns, extended to
+        ARBITRARY stats columns through the manifest. Each column is
+        tested on its own (min/max range via binary search; bloom
+        probes for a bloom_col) and a file survives only if every
+        prunable column admits one of that column's dim values —
+        conservative, never wrong. One column scans the survivors with
+        a residual ``isin``; several keep exact TUPLE semantics through
+        a residual semi-join against the dim. A dimension wider than
+        ``max_keys`` falls back to an exact semi-join over the full
         snapshot (pruning needs a bounded build side; the result
         contract never changes).
 
+        Raises ValueError, for one column or many, when no column in
+        ``on`` is a merge key, a ``stats_cols`` or a ``bloom_cols``
+        column: nothing could be pruned, and the caller picks its own
+        plan instead of a silent full scan.
+
         ``dim_rows``: the dim's already-collected rows (each indexable
-        by ``col``) — callers that collected the key set for their own
-        bookkeeping pass it so the prune plans NO extra collect job.
-        Must be the COMPLETE key set of ``dim`` (the residual filter
-        uses only these values)."""
-        from bisect import bisect_left
-
+        by every ``on`` column) — callers that collected the key set
+        for their own bookkeeping pass it so the prune plans NO extra
+        collect job. Must be the COMPLETE key set of ``dim`` (the
+        residual uses only these values)."""
+        cols = [on] if isinstance(on, str) else list(on)
+        if not cols:
+            raise ValueError("need at least one join column")
         m = self._manifest(version)
-        rows = (
-            dim.select(col).distinct().limit(max_keys + 1).collect()
-            if dim_rows is None else dim_rows
-        )
-        if len(rows) > max_keys:
-            return self._read_entries(m["files"], m).join(
-                dim.select(col).distinct(), col, "semi"
-            )
-        vals = sorted(
-            {r[col] for r in rows if r[col] is not None}
-        )  # NULL never equi-joins
-        if not vals:
-            return self._read_entries([], m)
-        bloom_ok = col in (m.get("bloom_cols") or []) and all(
-            isinstance(v, (str, int)) and not isinstance(v, bool)
-            for v in vals
-        )
-
-        def in_range(e) -> bool:
-            if col in self.keys:
-                lo, hi = e["min"].get(col), e["max"].get(col)
-            else:
-                st = (e.get("stats") or {}).get(col)
-                if st is None:
-                    return True  # no stats for this column: keep
-                lo, hi = st.get("min"), st.get("max")
-            if lo is None and hi is None:
-                return False  # all-NULL file: equality can't match
-            i = bisect_left(vals, lo)
-            return i < len(vals) and vals[i] <= hi
-
-        def bloom_admits(e) -> bool:
-            import base64
-
-            rec = self._bloom_rec(e, col)
-            if rec is None:
-                return True
-            bits = base64.b64decode(rec["b64"])
-            for v in vals:
-                probe = _bloom_point_bits(
-                    v, int(rec["bits"]), int(rec["hashes"])
-                )
-                if all((bits[i >> 3] >> (i & 7)) & 1 for i in probe):
-                    return True
-            return False
-
-        if (
-            col not in self.keys
-            and col not in (m.get("stats_cols") or [])
-            and not bloom_ok
-        ):
+        bloom_cols = set(m.get("bloom_cols") or [])
+        covered = set(self.keys) | set(m.get("stats_cols") or []) | bloom_cols
+        prunable = [c for c in cols if c in covered]
+        if not prunable:
             raise ValueError(
-                f"no file-level stats for {col!r}; create the table with "
-                f"stats_cols/bloom_cols including it (have stats: "
+                f"no file-level stats for {cols}; create the table with "
+                f"stats_cols/bloom_cols including them (have stats: "
                 f"{m.get('stats_cols')}, blooms: {m.get('bloom_cols')}, "
                 f"keys: {list(self.keys)})"
             )
-        picked = []
-        # bound the driver-side bloom work: ranges are O(log n) per
-        # file, bloom probes O(keys) per file — skip the bloom stage
-        # past ~2M probe ops (pruning stays correct, just coarser)
-        probe_budget_ok = len(vals) * len(m["files"]) <= 2_000_000
-        for e in m["files"]:
-            if not in_range(e):
-                continue
-            if bloom_ok and probe_budget_ok and not bloom_admits(e):
-                continue
-            picked.append(e)
-        return self._read_entries(picked, m).filter(F.col(col).isin(vals))
-
-    def read_join_pruned_multi(
-        self,
-        dim: DataFrame,
-        cols: list[str],
-        version: int | None = None,
-        max_keys: int = 10_000,
-        dim_rows: list | None = None,
-    ) -> DataFrame:
-        """COMPOSITE-KEY dynamic file pruning: rows of this table whose
-        ``cols`` TUPLE matches some row of ``dim`` — pruned at the file
-        level per column independently (a file survives only if EVERY
-        constrained column's recorded range/bloom admits at least one
-        of that column's dim values; per-column independence is
-        conservative, never wrong), then the exact tuple semantics come
-        from a residual semi-join against the dim over the surviving
-        files. The composite analog of ``read_join_pruned`` — what a
-        multi-column materialized-view refresh or a compound-key CDC
-        feed needs. Falls back to a full-snapshot semi-join when the
-        dim is wider than ``max_keys`` tuples or a column has no
-        stats/bloom/key coverage at all (contract never changes)."""
-        from bisect import bisect_left
-
-        if not cols:
-            raise ValueError("need at least one join column")
-        if len(cols) == 1:
-            return self.read_join_pruned(
-                dim, cols[0], version=version, max_keys=max_keys,
-                dim_rows=dim_rows,
-            )
-        m = self._manifest(version)
         dim_keys = dim.select(*cols).distinct()
         rows = (
             dim_keys.limit(max_keys + 1).collect()
             if dim_rows is None else dim_rows
         )
-
-        def full():  # built lazily: the pruned path never plans it
-            return self._read_entries(m["files"], m)
-
         if len(rows) > max_keys:
-            return full().join(dim_keys, list(cols), "semi")
-        stats_cols = set(m.get("stats_cols") or [])
-        bloom_cols = set(m.get("bloom_cols") or [])
-        prunable = [
-            c for c in cols
-            if c in self.keys or c in stats_cols or c in bloom_cols
-        ]
-        if not prunable:
-            return full().join(dim_keys, list(cols), "semi")
-        vals_by_col = {
+            return self._read_entries(m["files"], m).join(
+                dim_keys, cols, "semi"
+            )
+        vals = {  # NULL never equi-joins
             c: sorted({r[c] for r in rows if r[c] is not None})
             for c in prunable
         }
-        if any(not v for v in vals_by_col.values()):
-            # a column whose dim values are all NULL equi-joins nothing
-            return self._read_entries([], m).join(
-                dim_keys, list(cols), "semi"
-            )
-
-        # bound the driver-side bloom work exactly like the single-col
-        # path: ranges are O(log n) per file always; bloom probes are
-        # O(values) per file and skip past ~2M probe ops (pruning stays
-        # correct, just coarser)
-        probe_bloom = (
-            sum(len(v) for v in vals_by_col.values()) * len(m["files"])
-            <= 2_000_000
+        # bound the driver-side bloom work: ranges are O(log n) per
+        # file, bloom probes O(values) per file — skip the bloom stage
+        # past ~2M probe ops (pruning stays correct, just coarser)
+        probe_ok = (
+            sum(map(len, vals.values())) * len(m["files"]) <= 2_000_000
         )
-
-        def col_admits(e, c, vals) -> bool:
-            if c in self.keys:
-                lo, hi = e["min"].get(c), e["max"].get(c)
-            else:
-                st = (e.get("stats") or {}).get(c)
-                if st is None:
-                    lo = hi = ()  # no stats: range can't prune
-                else:
-                    lo, hi = st.get("min"), st.get("max")
-            if lo is None and hi is None:
-                return False  # all-NULL file: equality can't match
-            if lo != () and hi != ():
-                try:
-                    i = bisect_left(vals, lo)
-                    if i >= len(vals) or vals[i] > hi:
-                        return False
-                except TypeError:
-                    pass  # mixed types: keep conservatively
-            if probe_bloom and c in bloom_cols and all(
-                isinstance(v, (str, int)) and not isinstance(v, bool)
-                for v in vals
-            ):
-                import base64
-
-                rec = self._bloom_rec(e, c)
-                if rec is not None:
-                    bits = base64.b64decode(rec["b64"])
-                    for v in vals:
-                        probe = _bloom_point_bits(
-                            v, int(rec["bits"]), int(rec["hashes"])
-                        )
-                        if all(
-                            (bits[i >> 3] >> (i & 7)) & 1 for i in probe
-                        ):
-                            return True
-                    return False
-            return True
-
-        picked = [
-            e for e in m["files"]
-            if all(col_admits(e, c, vals_by_col[c]) for c in prunable)
-        ]
-        return self._read_entries(picked, m).join(
-            dim_keys, list(cols), "semi"
-        )
+        bloom = {
+            c: probe_ok and c in bloom_cols
+            and all(map(_bloom_probeable, vals[c]))
+            for c in prunable
+        }
+        picked = []
+        if all(vals.values()):  # an all-NULL dim column joins nothing
+            picked = [
+                e for e in m["files"]
+                if all(
+                    self._admits(e, c, vals=vals[c], bloom=bloom[c])
+                    for c in prunable
+                )
+            ]
+        df = self._read_entries(picked, m)
+        if len(cols) == 1:
+            return df.filter(F.col(cols[0]).isin(vals[cols[0]]))
+        return df.join(dim_keys, cols, "semi")
 
     # -- change data feed ---------------------------------------------------
 
@@ -3100,11 +3005,12 @@ class CowTable:
         new column."""
         import uuid as _uuid
 
+        from pyspark.errors import ParseException
         from pyspark.sql import types as T
 
         try:
             new_field = T.StructType.fromDDL(f"`{name}` {dtype}")[0]
-        except Exception as exc:
+        except ParseException as exc:
             raise ValueError(
                 f"ADD COLUMN type {dtype!r} is not a valid Spark DDL "
                 f"type: {exc}"
@@ -4401,18 +4307,15 @@ class CowTable:
         for c in cols:
             los, his = [], []
             for e in entries:
-                if c in self.keys:
-                    lo, hi = e["min"].get(c), e["max"].get(c)
-                else:
-                    st = (e.get("stats") or {}).get(c)
-                    if st is None:
-                        raise ValueError(
-                            f"zorder_by column {c!r} has no per-file "
-                            "stats; create the table with stats_cols "
-                            f"including it (have: {m.get('stats_cols')}) "
-                            "or pass explicit bounds as {col: (lo, hi)}"
-                        )
-                    lo, hi = st.get("min"), st.get("max")
+                b = self._col_bounds(e, c)
+                if b is None:
+                    raise ValueError(
+                        f"zorder_by column {c!r} has no per-file "
+                        "stats; create the table with stats_cols "
+                        f"including it (have: {m.get('stats_cols')}) "
+                        "or pass explicit bounds as {col: (lo, hi)}"
+                    )
+                lo, hi = b
                 if lo is not None:
                     los.append(lo)
                 if hi is not None:
@@ -4986,13 +4889,10 @@ class CowTable:
                 for e in m_now["files"]:
                     if e.get("dv"):
                         return None  # DV hides rows from file stats
-                    if c in self.keys:
-                        b = e[which].get(c)
-                    else:
-                        st = (e.get("stats") or {}).get(c)
-                        if st is None:
-                            return None
-                        b = st.get(which)
+                    bounds = self._col_bounds(e, c)
+                    if bounds is None:
+                        return None
+                    b = bounds[0 if which == "min" else 1]
                     if b is not None:
                         vals.append(b)
                 if not vals:
@@ -5192,27 +5092,36 @@ class CowTable:
                     out["compacted"] = (
                         out["compact_result"]["files_written"] > 0
                     )
-        # stats freshness: a table that opted into ANALYZE keeps its
-        # statistics advancing at tick cadence (the autoanalyze the
-        # reference gets from Postgres). Runs BEFORE vacuum so the
-        # change-feed span the incremental path needs is still on disk;
-        # O(churn) via the feed, escalating itself (full re-seed) on
-        # vacuumed spans, schema evolution, or NDV drift.
-        st = self.stats()
-        if st is not None and int(st.get("version", 0)) < self.version:
-            try:
-                adv = self.analyze_incremental(kmv_k=int(
-                    st.get("kmv_k") or 1024
-                ))
-                out["stats_version"] = adv["version"]
-            except Exception as e:  # noqa: BLE001 - unattended loop
-                out["stats_error"] = str(e)
+        # runs BEFORE vacuum so the change-feed span the incremental
+        # path needs is still on disk
+        out.update(self._advance_stats())
         if d["num_versions"] > keep_versions:
             out["vacuumed"] = self.vacuum(
                 keep_versions=keep_versions,
                 retention_seconds=vacuum_retention_seconds,
             )
         return out
+
+    def _advance_stats(self) -> dict:
+        """Stats freshness step of the unattended ticks (``maintain`` and
+        ``LakeCatalog.maintain_tables``): a table that opted into
+        ANALYZE keeps its statistics advancing at tick cadence (the
+        autoanalyze the reference gets from Postgres) — O(churn) via
+        the feed, escalating itself (full re-seed) on vacuumed spans,
+        schema evolution, or NDV drift. Returns the report entry:
+        ``{}`` when current, ``stats_version`` when advanced,
+        ``stats_error`` when the advance failed (the tick reports,
+        never raises)."""
+        st = self.stats()
+        if st is None or int(st.get("version", 0)) >= self.version:
+            return {}
+        try:
+            adv = self.analyze_incremental(
+                kmv_k=int(st.get("kmv_k") or 1024)
+            )
+        except Exception as e:  # noqa: BLE001 - unattended loop
+            return {"stats_error": str(e)}
+        return {"stats_version": adv["version"]}
 
     def clone(self, new_root: str, version: int | None = None) -> "CowTable":
         """Shallow CLONE (Delta semantics): a NEW table whose v1

@@ -136,7 +136,28 @@ def _dt_for(field: T.StructField) -> Datatype:
     )
 
 
-class MaterializedView:
+class _StateFile:
+    """A view's ``mv_state.json`` under ``root``: the applied base
+    version(s) and, for the aggregate view, the pending span."""
+
+    root: str
+
+    @property
+    def _state_path(self) -> str:
+        return f"{self.root}/mv_state.json"
+
+    def _load_state(self) -> dict:
+        with open(self._state_path) as f:
+            return json.load(f)
+
+    def _save_state(self, st: dict) -> None:
+        tmp = f"{self.root}/.state.{uuid.uuid4().hex}.json"
+        with open(tmp, "w") as f:
+            json.dump(st, f)
+        os.replace(tmp, self._state_path)  # atomic on POSIX
+
+
+class MaterializedView(_StateFile):
     """A GROUP BY materialization over ``base``, stored as its own CoW
     table under ``root`` and refreshed incrementally from the base's
     change feed. Group keys must be non-NULL (validated at build);
@@ -164,22 +185,6 @@ class MaterializedView:
         self.aggs = list(aggs)
         self.target_files = target_files
         self._table: CowTable | None = None
-
-    # -- state WAL ----------------------------------------------------------
-
-    @property
-    def _state_path(self) -> str:
-        return f"{self.root}/mv_state.json"
-
-    def _load_state(self) -> dict:
-        with open(self._state_path) as f:
-            return json.load(f)
-
-    def _save_state(self, st: dict) -> None:
-        tmp = f"{self.root}/.state.{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._state_path)  # atomic on POSIX
 
     @property
     def table(self) -> CowTable:
@@ -425,27 +430,18 @@ class MaterializedView:
             )
         bmax = _broadcast_max_rows(self.spark)
 
-        # touched MV groups only. Single group key: prune MV FILES
-        # through the manifest (the MV table is keyed on the group
-        # cols, so per-file key ranges are tight — read_join_pruned
-        # self-caps at 10k keys with a semi-join fallback) — the
-        # refresh then never scans untouched MV files. Composite key /
-        # oversized delta: a size-guarded semi-join (both relations
-        # have at most n_delta rows since delta is grouped by g; past
-        # the bound the hint drops and the joins shuffle instead of
-        # blowing the broadcast limit).
-        cur_small = None
-        try:
-            cur_small = self.table.read_join_pruned_multi(
-                delta.select(*g), g, dim_rows=key_rows
-            )
-        except ValueError:
-            pass
-        if cur_small is None:
-            cur_small = self.table.read().join(
-                _hint_if_small(delta.select(*g).distinct(), n_delta, bmax),
-                on=g, how="left_semi",
-            )
+        # touched MV groups only: prune MV FILES through the manifest
+        # (the MV table is keyed on the group cols, so per-file key
+        # ranges are tight and the read is always prunable;
+        # read_join_pruned self-caps at 10k keys with a semi-join
+        # fallback) — the refresh never scans untouched MV files. The
+        # join below is size-guarded: cur_small has at most n_delta
+        # rows since delta is grouped by g; past the bound the hint
+        # drops and the join shuffles instead of blowing the broadcast
+        # limit.
+        cur_small = self.table.read_join_pruned(
+            delta.select(*g), g, dim_rows=key_rows
+        )
         j = delta.join(_hint_if_small(cur_small, n_delta, bmax), on=g,
                        how="left")
 
@@ -514,14 +510,11 @@ class MaterializedView:
             # dirty-group recompute reads O(dirty groups' rows): prune
             # base FILES through manifest stats/blooms when the group
             # column has them, else a size-guarded semi-join
-            dirty_rows = None
             try:
-                dirty_rows = self.base.read_join_pruned_multi(
+                dirty_rows = self.base.read_join_pruned(
                     dirty_keys, g, version=b_to, dim_rows=d_rows
                 )
-            except ValueError:
-                pass  # no stats/bloom on the group column(s)
-            if dirty_rows is None:
+            except ValueError:  # no stats/bloom on the group column(s)
                 dirty_rows = self.base.read(b_to).join(
                     _hint_if_small(dirty_keys, n_dirty, bmax),
                     on=g, how="left_semi",
@@ -602,7 +595,7 @@ class MaterializedView:
         return {"refreshed": True, "resync": True, "base_version": b_to}
 
 
-class JoinMaterializedView:
+class JoinMaterializedView(_StateFile):
     """A materialized EQUI-JOIN (``left ⋈ right`` on shared join
     columns, inner or left) stored as its own CoW table and maintained
     incrementally from BOTH base tables' change feeds.
@@ -652,20 +645,6 @@ class JoinMaterializedView:
         self.how = how
         self.target_files = target_files
         self._table: CowTable | None = None
-
-    @property
-    def _state_path(self) -> str:
-        return f"{self.root}/mv_state.json"
-
-    def _load_state(self) -> dict:
-        with open(self._state_path) as f:
-            return json.load(f)
-
-    def _save_state(self, st: dict) -> None:
-        tmp = f"{self.root}/.state.{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as f:
-            json.dump(st, f)
-        os.replace(tmp, self._state_path)
 
     @property
     def table(self) -> CowTable:
@@ -796,14 +775,11 @@ class JoinMaterializedView:
             # FILES through the manifest (single- or composite-key;
             # self-capped at 10k keys with a semi-join fallback), else
             # a size-guarded semi-join
-            hit = None
             try:
-                hit = self.left.read_join_pruned_multi(
+                hit = self.left.read_join_pruned(
                     dirty_jv, self.on, version=l_to, dim_rows=jv_rows
                 )
-            except ValueError:
-                pass  # no stats/bloom on the join column(s)
-            if hit is None:
+            except ValueError:  # no stats/bloom on the join column(s)
                 hit = ldf.join(_hint_if_small(dirty_jv, n_jv, bmax),
                                self.on, "leftsemi")
             d2 = hit.select(*keys).distinct()
@@ -821,7 +797,19 @@ class JoinMaterializedView:
                     "right_version": r_to}
         live = ldf.join(_hint_if_small(dirty, n_dirty, bmax), keys, "leftsemi")
         result = self._joined(live, rdf)
-        gone = dirty.join(result.select(*keys), keys, "left_anti")
+        res = self._reconcile(
+            result, dirty.join(result.select(*keys), keys, "left_anti")
+        )
+        self._save_state({"applied_left": l_to, "applied_right": r_to})
+        return {
+            "refreshed": True, "left_version": l_to, "right_version": r_to,
+            "mv_version": res["version"],
+        }
+
+    def _reconcile(self, result: DataFrame, gone: DataFrame) -> dict:
+        """ONE ``merge_when`` commit: upsert every ``result`` row and
+        delete the ``gone`` keys (left-key rows, NULL elsewhere)."""
+        keys = list(self.left.keys)
         src = result.withColumn("__op", F.lit("U")).unionByName(
             gone.select(
                 *[
@@ -831,7 +819,7 @@ class JoinMaterializedView:
                 ]
             ).withColumn("__op", F.lit("D")),
         )
-        res = self.table.merge_when(
+        return self.table.merge_when(
             src,
             delete_cond="s.__op = 'D'",
             update_set="*",
@@ -840,11 +828,6 @@ class JoinMaterializedView:
             target_files=self.target_files,
             check_duplicate_keys=False,  # key-unique by construction
         )
-        self._save_state({"applied_left": l_to, "applied_right": r_to})
-        return {
-            "refreshed": True, "left_version": l_to, "right_version": r_to,
-            "mv_version": res["version"],
-        }
 
     def _full_resync(self, l_to: int, r_to: int) -> dict:
         """Feed span vacuumed: recompute the whole join and reconcile —
@@ -853,26 +836,11 @@ class JoinMaterializedView:
         ldf, rdf = self.left.read(l_to), self.right.read(r_to)
         self._check_right_unique(rdf)
         result = self._joined(ldf, rdf)
-        gone = self.table.read().select(*keys).join(
-            result.select(*keys), keys, "left_anti"
-        )
-        src = result.withColumn("__op", F.lit("U")).unionByName(
-            gone.select(
-                *[
-                    F.col(c).alias(c) if c in keys
-                    else F.lit(None).cast(result.schema[c].dataType).alias(c)
-                    for c in result.columns
-                ]
-            ).withColumn("__op", F.lit("D")),
-        )
-        res = self.table.merge_when(
-            src,
-            delete_cond="s.__op = 'D'",
-            update_set="*",
-            update_cond="s.__op <> 'D'",
-            insert_cond="s.__op <> 'D'",
-            target_files=self.target_files,
-            check_duplicate_keys=False,  # key-unique by construction
+        res = self._reconcile(
+            result,
+            self.table.read().select(*keys).join(
+                result.select(*keys), keys, "left_anti"
+            ),
         )
         self._save_state({"applied_left": l_to, "applied_right": r_to})
         return {

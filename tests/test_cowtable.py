@@ -3267,8 +3267,8 @@ def test_cow_read_join_pruned_multi(spark, tmp_path):
     """Composite-key dynamic file pruning: per-column range/bloom
     checks drop files conservatively, the residual semi-join restores
     exact TUPLE semantics (per-column independence alone would
-    over-match mixed tuples), and the wide-dim / no-stats fallbacks
-    keep the contract."""
+    over-match mixed tuples), and a column set with no stats at all is
+    refused exactly as for one column."""
     rows = [
         (f"f{i:04d}", i % 40, f"s{i % 7}", float(i)) for i in range(800)
     ]
@@ -3283,7 +3283,7 @@ def test_cow_read_join_pruned_multi(spark, tmp_path):
     dim = spark.createDataFrame(
         [(3, "s1"), (3, "s2"), (38, "s0")], "bucket int, shard string"
     )
-    got = t.read_join_pruned_multi(dim, ["bucket", "shard"])
+    got = t.read_join_pruned(dim, ["bucket", "shard"])
     want = {
         (r[0], r[1], r[2])
         for r in rows
@@ -3301,13 +3301,13 @@ def test_cow_read_join_pruned_multi(spark, tmp_path):
     # files are range-clustered on fid, so bucket/shard stats are wide;
     # prune on the key column instead to see file skipping bite
     key_dim = spark.createDataFrame([("f0001",), ("f0002",)], "fid string")
-    pruned = t.read_join_pruned_multi(key_dim, ["fid"])
+    pruned = t.read_join_pruned(key_dim, ["fid"])
     assert len(pruned.inputFiles()) < n_all
     # composite including the key column prunes through the key range
     kb_dim = spark.createDataFrame(
         [("f0001", 1), ("f0002", 2)], "fid string, bucket int"
     )
-    got2 = t.read_join_pruned_multi(kb_dim, ["fid", "bucket"])
+    got2 = t.read_join_pruned(kb_dim, ["fid", "bucket"])
     assert len(got2.inputFiles()) < n_all
     assert {r["fid"] for r in got2.collect()} == {"f0001", "f0002"}
 
@@ -3315,19 +3315,225 @@ def test_cow_read_join_pruned_multi(spark, tmp_path):
     null_dim = spark.createDataFrame(
         [(None, "s1")], "bucket int, shard string"
     )
-    assert t.read_join_pruned_multi(
+    assert t.read_join_pruned(
         null_dim, ["bucket", "shard"]
     ).count() == 0
 
-    # no stats at all on a column set -> full semi-join fallback, same rows
+    # no stats at all on a column set -> refused, the same ValueError
+    # one unprunable column raises (callers fall back to their own plan)
     t2 = CowTable.create(
         spark, str(tmp_path / "nostats"), df, keys=("fid",),
         target_files=2,
     )
-    got3 = t2.read_join_pruned_multi(dim, ["bucket", "shard"])
-    assert {
-        (r["fid"], r["bucket"], r["shard"]) for r in got3.collect()
-    } == want
+    with pytest.raises(ValueError, match="file-level stats"):
+        t2.read_join_pruned(dim, ["bucket", "shard"])
+
+
+# -- every pruned read == its unpruned equivalent --------------------------
+
+
+def _lk_url(i: int) -> str:
+    return f"http://h{(i * 7919) % 997}.example/x{i}"
+
+
+@pytest.fixture(scope="module")
+def pruned_tables(spark, tmp_path_factory):
+    """``lk``: keyed (provider, fid) with tight ``n`` stats (n follows
+    the key order), wide ``shard`` stats, a ``url`` bloom, four
+    NULL-provider rows and one DV-deleted row (fid f0150, n 150).
+    ``pt``: day-partitioned on created_on."""
+    root = tmp_path_factory.mktemp("pruned")
+    rows = [
+        (f"p{i // 100}", f"f{i:04d}", i, f"s{i % 7}", _lk_url(i))
+        for i in range(400)
+    ] + [(None, f"n{i}", 1000 + i, "s0", f"http://null/{i}") for i in range(4)]
+    lk = CowTable.create(
+        spark, str(root / "lk"),
+        spark.createDataFrame(
+            rows, "provider string, fid string, n long, shard string, "
+            "url string",
+        ),
+        keys=("provider", "fid"), target_files=8,
+        stats_cols=("n", "shard"), bloom_cols=("url",),
+    )
+    lk.delete(F.col("fid") == "f0150", mode="dv")
+    pt = CowTable.create(
+        spark, str(root / "pt"), _ts_rows(spark),
+        keys=("provider", "foreign_id"), target_files=8,
+        partition_by=("day(created_on)",),
+    )
+    return {"lk": lk, "pt": pt}
+
+
+def _semi(t, dim, on):
+    return t.read().join(dim, on, "semi")
+
+
+_N = "n long"
+_PN = "provider string, n long"
+_DAY3 = ("2023-05-03 00:00:00", "2023-05-03 23:59:59")
+
+#: case -> (table, pruned read, unpruned equivalent, files the pruned
+#: read scans, as counted before the reads shared one admission test).
+#: ``s`` is the Spark session.
+_PRUNED_CASES = {
+    "read_pruned": (
+        "lk",
+        lambda t, s: t.read_pruned(["p1", "p3"]),
+        lambda t, s: t.read().filter(F.col("provider").isin("p1", "p3")),
+        6,
+    ),
+    "read_pruned_null": (
+        "lk",
+        lambda t, s: t.read_pruned(["p2", None]),
+        lambda t, s: t.read().filter(
+            (F.col("provider") == "p2") | F.col("provider").isNull()
+        ),
+        4,
+    ),
+    "where_range": (
+        "lk",
+        lambda t, s: t.read_where({"n": (120, 180)}),
+        lambda t, s: t.read().filter(F.col("n").between(120, 180)),
+        4,
+    ),
+    "where_open_range": (
+        "lk",
+        lambda t, s: t.read_where({"n": (None, 40), "shard": ("s1", None)}),
+        lambda t, s: t.read().filter(
+            (F.col("n") <= 40) & (F.col("shard") >= "s1")
+        ),
+        1,
+    ),
+    "where_eq": (
+        "lk",
+        lambda t, s: t.read_where({"n": 250}),
+        lambda t, s: t.read().filter(F.col("n") == 250),
+        2,
+    ),
+    "where_bloom_eq": (
+        "lk",
+        lambda t, s: t.read_where({"url": _lk_url(123)}),
+        lambda t, s: t.read().filter(F.col("url") == _lk_url(123)),
+        1,
+    ),
+    "where_partition": (
+        "pt",
+        lambda t, s: t.read_where({"created_on": _DAY3}),
+        lambda t, s: t.read().filter(
+            F.col("created_on").between(*_DAY3)
+        ),
+        1,
+    ),
+    "join_one_col": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame([(149,), (150,), (151,), (320,)], _N), "n"
+        ),
+        lambda t, s: _semi(
+            t, s.createDataFrame([(149,), (150,), (151,), (320,)], _N), "n"
+        ),
+        4,
+    ),
+    "join_one_col_bloom": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame(
+                [(_lk_url(10),), (_lk_url(123),), ("http://nowhere/x",)],
+                "url string",
+            ),
+            "url",
+        ),
+        lambda t, s: t.read().filter(
+            F.col("url").isin(_lk_url(10), _lk_url(123))
+        ),
+        2,
+    ),
+    "join_one_col_all_null": (
+        "lk",
+        lambda t, s: t.read_join_pruned(s.createDataFrame([(None,)], _N), "n"),
+        lambda t, s: t.read().limit(0),
+        0,
+    ),
+    "join_one_col_max_keys": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame([(150,), (151,)], _N), "n", max_keys=1
+        ),
+        lambda t, s: t.read().filter(F.col("n") == 151),
+        9,
+    ),
+    "join_two_col": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame(
+                [("p1", 150), ("p1", 151), ("p3", 151), ("p3", 320)], _PN
+            ),
+            ["provider", "n"],
+        ),
+        lambda t, s: t.read().filter(F.col("n").isin(151, 320)),
+        3,
+    ),
+    "join_two_col_all_null": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame([("p1", None)], _PN), ["provider", "n"]
+        ),
+        lambda t, s: t.read().limit(0),
+        0,
+    ),
+    "join_two_col_max_keys": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame([("p1", 150), ("p1", 151)], _PN),
+            ["provider", "n"], max_keys=1,
+        ),
+        lambda t, s: t.read().filter(F.col("n") == 151),
+        9,
+    ),
+    "join_two_col_mixed_type": (
+        "lk",
+        lambda t, s: t.read_join_pruned(
+            s.createDataFrame(
+                [("p1", "151"), ("p3", "320")], "provider string, n string"
+            ),
+            ["provider", "n"],
+        ),
+        lambda t, s: t.read().filter(F.col("n").isin(151, 320)),
+        6,
+    ),
+}
+
+
+def _rows(df):
+    """Rows as sorted column->value items: a semi-join on USING columns
+    moves them first, and NULLs must sort."""
+    return sorted(
+        (tuple(sorted(r.asDict().items())) for r in df.collect()), key=repr
+    )
+
+
+@pytest.mark.parametrize("case", sorted(_PRUNED_CASES))
+def test_pruned_read_equals_unpruned(spark, pruned_tables, case):
+    """Each pruned read returns exactly the rows of its unpruned
+    filter / semi-join over ``read()`` (DV-deleted row, NULL keys and
+    tuple semantics included) and scans exactly as many files as the
+    pruning rules admitted before they shared one admission test."""
+    table, pruned, full, n_files = _PRUNED_CASES[case]
+    t = pruned_tables[table]
+    got = pruned(t, spark)
+    assert _rows(got) == _rows(full(t, spark))
+    assert len(got.inputFiles()) == n_files
+
+
+def test_read_join_pruned_mixed_type_dim_keeps_files(spark, pruned_tables):
+    """A string dim over the long ``n`` stats column cannot be ordered
+    against the files' bounds: the files are kept and the residual
+    decides, exactly as for a two-column join — no TypeError."""
+    t = pruned_tables["lk"]
+    dim = spark.createDataFrame([("151",), ("320",)], "n string")
+    got = t.read_join_pruned(dim, "n")
+    assert _rows(got) == _rows(t.read().filter(F.col("n").isin(151, 320)))
 
 
 def test_cow_analyze_incremental(spark, tmp_path):
@@ -4169,8 +4375,12 @@ def test_cow_add_column_metadata_only(spark, tmp_path):
     assert got["f003"] == 4.5 and got["f004"] is None
     with pytest.raises(ValueError, match="already exists"):
         t.add_column("rating", "double")
-    with pytest.raises(ValueError, match="not a valid"):
+    v = t.version
+    with pytest.raises(ValueError, match="not a valid Spark DDL"):
         t.add_column("bad", "quintuple")
+    with pytest.raises(ValueError, match="not a valid Spark DDL"):
+        t.add_column("x", "notatype")
+    assert t.version == v, "a refused type commits nothing"
 
     # dead-data isolation: drop a populated column, re-add the name —
     # every row must read NULL even though old files still carry the

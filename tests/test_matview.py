@@ -25,6 +25,7 @@ from openverse_catalog_spark.schemas.columns import (
     Datatype,
     UpsertStrategy,
 )
+from tests.test_cowtable import _rows
 
 COLS = [
     ColumnSpec("id", Datatype.int, required=True,
@@ -957,3 +958,115 @@ def test_join_mv_capped_refresh_and_facade_pins(spark, tmp_path):
     # and REFRESH stays capped at the pins (no past-cap brick)
     r2 = f.sql("REFRESH MATERIALIZED VIEW jm").head()
     assert r2["left_version"] == cat._entry("lt")["version"]
+
+
+# -- job budgets of a warm refresh ------------------------------------------
+
+_GS_COLS = [
+    ColumnSpec("id", Datatype.int, required=True,
+               upsert_strategy=UpsertStrategy.no_change),
+    ColumnSpec("grp", Datatype.char),
+    ColumnSpec("sub", Datatype.char),
+    ColumnSpec("val", Datatype.double),
+]
+_GS = "id bigint, grp string, sub string, val double"
+
+#: Spark jobs of a warm ``MaterializedView.refresh`` after one upsert +
+#: min-holder delete, by group key (measured on the 60-row fixture). The
+#: base has no stats on the group columns, so the dirty-group recompute
+#: takes the refresh's own size-guarded semi-join for either key.
+_MV_REFRESH_JOBS = {("grp",): 13, ("grp", "sub"): 15}
+#: Spark jobs of a warm ``JoinMaterializedView.refresh`` with both feeds
+#: non-empty
+_JOIN_MV_REFRESH_JOBS = 23
+
+
+@pytest.mark.parametrize("group", sorted(_MV_REFRESH_JOBS))
+def test_mv_warm_refresh_job_budget(spark, tmp_path, jobs_of, group):
+    """A warm refresh whose delete removes a group's min holder runs the
+    whole path: delta aggregate, pruned read of the touched view groups,
+    dirty-group recompute over the base, one merge."""
+    base = CowTable.create(
+        spark, str(tmp_path / "b"),
+        spark.createDataFrame(
+            [(i, f"g{i % 5}", f"s{i % 3}", float(i)) for i in range(60)], _GS
+        ),
+        keys=("id",), target_files=2,
+    )
+    mv = MaterializedView(
+        spark, base, str(tmp_path / "mv"), list(group),
+        [AggSpec("n", "count"), AggSpec("total", "sum", "val"),
+         AggSpec("lo", "min", "val")],
+    )
+    mv.build()
+    for i, victim in enumerate((0, 5)):  # min holders of g0 / (g0, s*)
+        base.merge(
+            spark.createDataFrame(
+                [(100 + i, "g1", "s2", 7.5), (3, "g3", "s0", 0.25 + i)], _GS
+            ),
+            _GS_COLS, deterministic=True,
+        )
+        base.delete(F.col("id") == victim)
+        jobs = jobs_of(mv.refresh)  # the second, warm refresh is pinned
+    truth = base.read().groupBy(*group).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("val").alias("total"),
+        F.min("val").alias("lo"),
+    )
+    assert _rows(mv.read()) == _rows(truth)
+    assert jobs == _MV_REFRESH_JOBS[group]
+
+
+def test_join_mv_warm_refresh_job_budget(spark, tmp_path, jobs_of):
+    """A warm join-view refresh with churn on both sides: the right
+    feed's join values prune left files through ``cat`` stats."""
+    from openverse_catalog_spark.operators.matview import (
+        JoinMaterializedView,
+    )
+
+    left = CowTable.create(
+        spark, str(tmp_path / "l"),
+        spark.createDataFrame(
+            [(f"i{n:02d}", n % 4, 10.0 * n) for n in range(40)],
+            "iid string, cat int, price double",
+        ),
+        keys=("iid",), target_files=3, stats_cols=("cat",),
+    )
+    right = CowTable.create(
+        spark, str(tmp_path / "r"),
+        spark.createDataFrame(
+            [(c, f"c{c}") for c in range(4)], "cat int, label string"
+        ),
+        keys=("cat",), target_files=1,
+    )
+    mv = JoinMaterializedView(
+        spark, left, right, str(tmp_path / "mv"), on=["cat"]
+    )
+    mv.build()
+    lcols = [
+        ColumnSpec("iid", Datatype.char,
+                   upsert_strategy=UpsertStrategy.no_change),
+        ColumnSpec("cat", Datatype.int),
+        ColumnSpec("price", Datatype.double),
+    ]
+    rcols = [
+        ColumnSpec("cat", Datatype.int,
+                   upsert_strategy=UpsertStrategy.no_change),
+        ColumnSpec("label", Datatype.char),
+    ]
+    for i in range(2):
+        left.merge(
+            spark.createDataFrame(
+                [(f"i{i:02d}", 2, 1.0 + i), (f"n{i}", 1, 5.0)],
+                "iid string, cat int, price double",
+            ),
+            lcols, deterministic=True,
+        )
+        right.merge(
+            spark.createDataFrame([(i, f"new{i}")], "cat int, label string"),
+            rcols, deterministic=True,
+        )
+        jobs = jobs_of(mv.refresh)  # the second, warm refresh is pinned
+    truth = left.read().join(right.read(), "cat").select(*mv.read().columns)
+    assert _rows(mv.read()) == _rows(truth)
+    assert jobs == _JOIN_MV_REFRESH_JOBS
+

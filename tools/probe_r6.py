@@ -4,7 +4,7 @@ Covers (a) knn_ivf_pq RE-probed after the matmul-encode fix (its only
 prior probe, 0.75x/row, predates commit fecb781), (b) the queries that
 never had a probe — knn_ivf_pq_residual, mv_join_incremental (the
 slowest query in the suite), stream_cdc_apply, corpus_unigram_vocab /
-encode — (c) the probe_r5e pair whose results were never written into
+encode — (c) an earlier-probed pair whose results were never written into
 SCALING.md (merge_cow_partitioned, search_hybrid_rrf), and (d) this
 round's new operators (mv_join_agg_incremental, stream_cdc_tombstones).
 

@@ -2086,20 +2086,15 @@ class CowTable:
                 pass  # mixed types: keep conservatively
         return not bloom or self._bloom_admits(e, c, vals)
 
-    def read_pruned(self, values, version: int | None = None) -> DataFrame:
-        """Manifest-pruned snapshot read for ``keys[0] IN values`` (the
-        reference's per-provider access pattern): only files whose
-        recorded keys[0] range can contain one of the values — or that
-        may hold NULL keys when NULL is asked for — enter the scan's
-        file index; every other file is never listed, opened, or read.
-        This is the reader-side dividend of the same per-file stats the
-        MERGE uses for skipping. A residual ``isin`` filter keeps the
-        result exact regardless of pruning."""
+    def pruned_entries(self, values, version: int | None = None) -> list:
+        """The manifest entries :meth:`read_pruned` scans for ``keys[0]
+        IN values``: files whose recorded keys[0] range can contain one
+        of the values, or that may hold NULL keys when NULL is asked
+        for. Their ``rows`` bound the read's size without a scan."""
         m = self._manifest(version)
         k0 = self.keys[0]
         want_null = any(v is None for v in values)
-        vals = [v for v in values if v is not None]
-        probe = sorted(set(vals))
+        probe = sorted({v for v in values if v is not None})
         picked = []
         for e in m["files"]:
             hit = bool(probe) and self._admits(e, k0, vals=probe)
@@ -2108,6 +2103,22 @@ class CowTable:
                 hit = nk is None or bool(nk.get(k0))
             if hit:
                 picked.append(e)
+        return picked
+
+    def read_pruned(self, values, version: int | None = None) -> DataFrame:
+        """Manifest-pruned snapshot read for ``keys[0] IN values`` (the
+        reference's per-provider access pattern): only the files of
+        :meth:`pruned_entries` enter the scan's file index; every other
+        file is never listed, opened, or read. This is the reader-side
+        dividend of the same per-file stats the MERGE uses for
+        skipping. A residual ``isin`` filter keeps the result exact
+        regardless of pruning."""
+        version = self.version if version is None else version
+        m = self._manifest(version)
+        k0 = self.keys[0]
+        want_null = any(v is None for v in values)
+        vals = [v for v in values if v is not None]
+        picked = self.pruned_entries(values, version)
         cond = F.col(k0).isin(vals) if vals else F.lit(False)
         if want_null:
             cond = cond | F.col(k0).isNull()
@@ -2302,10 +2313,16 @@ class CowTable:
             dim_keys.limit(max_keys + 1).collect()
             if dim_rows is None else dim_rows
         )
-        if len(rows) > max_keys:
-            return self._read_entries(m["files"], m).join(
-                dim_keys, cols, "semi"
+
+        def semi(df: DataFrame) -> DataFrame:
+            # a USING semi-join moves the join columns first: project
+            # back to the table's column order
+            return df.join(dim_keys, cols, "semi").select(
+                [df[c] for c in df.columns]
             )
+
+        if len(rows) > max_keys:
+            return semi(self._read_entries(m["files"], m))
         vals = {  # NULL never equi-joins
             c: sorted({r[c] for r in rows if r[c] is not None})
             for c in prunable
@@ -2333,7 +2350,7 @@ class CowTable:
         df = self._read_entries(picked, m)
         if len(cols) == 1:
             return df.filter(F.col(cols[0]).isin(vals[cols[0]]))
-        return df.join(dim_keys, cols, "semi")
+        return semi(df)
 
     # -- change data feed ---------------------------------------------------
 

@@ -15,10 +15,18 @@ index refresh costs O(changed documents), never O(corpus):
   files whose term range can contain a query term — the same
   file-skipping dividend every other keyed read in the engine gets.
 * ``doclen`` — a CoW table keyed ``doc_id`` with each document's token
-  count (the BM25 length normalizer); corpus totals (N, avgdl) derive
-  from it with one thin-table aggregate, memoized per doclen version
-  (a committed manifest never changes, so the totals of version ``v``
-  are exact until a refresh or compaction commits ``v + 1``).
+  count (the BM25 length normalizer). A query handle memoizes it per
+  doclen version (a committed manifest never changes, so version ``v``
+  is exact until a refresh or compaction commits ``v + 1``): one
+  collect into sorted numpy arrays, from which (N, avgdl) and every
+  candidate's length come, or, for a doclen too big for the driver,
+  one thin-table aggregate for (N, avgdl) alone.
+* queries: a BM25 probe collects the term-pruned postings in one
+  Arrow collect and scores them on the driver, returning its top-k as
+  a local relation (one Spark job per probe, two with a filter); only
+  inputs past ``SearchIndex.DRIVER_MAX_ROWS`` rows keep a distributed
+  window/join/aggregate plan. Phrase queries verify adjacency against
+  the stored positions in Spark.
 * a ``state.json`` recording the base version the index reflects.
 
 The maintenance protocol (pending-span WAL, txn-fenced reconcile,
@@ -41,6 +49,9 @@ from __future__ import annotations
 
 import os
 import re
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -51,6 +62,14 @@ from openverse_catalog_spark.session import literal_df
 
 K1 = 1.2
 B = 0.75
+_E6 = Decimal("1e-6")
+
+
+def _spark_round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` of a double: HALF_UP on the double's
+    shortest decimal form (``BigDecimal.valueOf``), not on its binary
+    value — ``numpy.round`` differs on ties and near-ties."""
+    return float(Decimal(repr(x)).quantize(_E6, ROUND_HALF_UP))
 
 
 def _tokens(text: Column) -> Column:
@@ -123,6 +142,7 @@ class SearchIndex(IncrementalIndex):
             spark, f"{self.root}/doclen", keys=("doc_id",)
         )
         self._stats: tuple[int, int, float | None] | None = None
+        self._doclens: tuple | None = None  # (v, sorted ids, their dl)
 
     def _identity(self) -> dict:
         return {
@@ -457,14 +477,38 @@ class SearchIndex(IncrementalIndex):
             .select(F.col(self.id_col).alias("doc_id"))
         )
 
-    def _corpus_stats(self) -> tuple[int, int, float | None]:
-        """``(v, N, avgdl)`` of the doclen table at its current version
-        ``v``. Manifests are immutable, so the totals of version ``v``
-        are exact for as long as ``v`` is the head; any refresh or
+    # the driver scores a probe when the doclen table and the postings
+    # files the query terms admit each hold at most this many rows: at
+    # the cap the doclen memo is ~12 MB of numpy arrays and the collected
+    # postings a few tens of MB of Arrow; bigger inputs keep the
+    # distributed plan
+    DRIVER_MAX_ROWS = 1_000_000
+
+    def _corpus_stats(
+        self, v: int, lens: bool = False
+    ) -> tuple[int, int, float | None]:
+        """``(v, N, avgdl)`` of the doclen table at version ``v``.
+        Manifests are immutable, so the totals of version ``v`` are
+        exact for as long as ``v`` is the head; any refresh or
         compaction (through this handle or another) commits a new
-        version and the next call recomputes. One entry per handle."""
-        v = self.doclen.version
-        if self._stats is None or self._stats[0] != v:
+        version and the next call recomputes. One entry per handle.
+
+        ``lens`` also memoizes the version's ``(doc_id, dl)`` pairs as
+        numpy arrays sorted by doc_id (``self._doclens``, for the
+        driver-side scorer): one collect instead of the aggregate, and
+        N and avgdl derive from it exactly as Spark's ``count`` and
+        ``avg`` of an integer column do (a double sum of integers is
+        exact below 2**53)."""
+        if lens and (self._doclens is None or self._doclens[0] != v):
+            t = self.doclen.read(v).select("doc_id", "dl").toArrow()
+            ids = t.column("doc_id").to_numpy()
+            dls = t.column("dl").to_numpy()
+            order = np.argsort(ids, kind="stable")
+            self._doclens = (v, ids[order], dls[order])
+            n = len(ids)
+            total = int(dls.sum(dtype=np.int64))
+            self._stats = (v, n, total / n if n else None)
+        elif self._stats is None or self._stats[0] != v:
             row = self.doclen.read(v).agg(
                 F.count("*").alias("n"), F.avg("dl").alias("avgdl")
             ).head()
@@ -476,10 +520,22 @@ class SearchIndex(IncrementalIndex):
     ) -> DataFrame:
         """Top-k BM25 served FROM THE INDEX: the corpus is never
         tokenized at query time. Postings files are pruned by the term
-        key range; each term's doc-frequency is one window count over
-        the pruned postings and idf is computed inline from it; (N,
-        avgdl) come from :meth:`_corpus_stats` as literals; the final
-        top-k is TakeOrdered.
+        key range; (N, avgdl) come from the per-doclen-version memo of
+        :meth:`_corpus_stats`. Returns ``(doc_id, score)`` rows ranked
+        by ``score`` desc, ``doc_id`` asc, where ``score`` is the
+        doc's BM25 sum rounded to 6 decimals.
+
+        A probe whose doclen table and admitted postings files each
+        hold at most ``DRIVER_MAX_ROWS`` rows (sizes the manifests
+        record; no scan decides it) is scored ON THE DRIVER: the
+        pruned ``(term, doc_id, tf)`` rows arrive in one Arrow collect,
+        df, idf, per-doc sums and the exact top-k are numpy work
+        against the memoized doclen arrays, and the k rows come back as
+        a local relation, so the caller's action runs no further job.
+        Bigger inputs keep the distributed plan: df from one window
+        count over the pruned postings, a doclen join, a per-doc
+        aggregate and TakeOrdered. Both paths return the same rows,
+        order and score doubles.
 
         Query terms pass through the SAME tokenizer the index applied
         at build time (lowercase, [a-z] runs of length >= 3), so
@@ -490,22 +546,112 @@ class SearchIndex(IncrementalIndex):
         ``where`` runs a FILTERED search (ES-style filter context —
         the reference's index consumers filter by license/provider on
         every request): the predicate pre-filters against the BASE at
-        the applied version and candidates semi-join the match set
-        BEFORE scoring. Corpus statistics (idf, N, avgdl) stay
-        CORPUS-WIDE — the Lucene/ES convention: a filter restricts
-        candidates, it does not re-weigh term rarity."""
+        the applied version and only matching candidates are scored.
+        Corpus statistics (idf, N, avgdl) stay CORPUS-WIDE — the
+        Lucene/ES convention: a filter restricts candidates, it does
+        not re-weigh term rarity."""
         qt = list(dict.fromkeys(_query_terms(terms)))
-        v, n, avgdl = self._corpus_stats()
-        dl = self.doclen.read(v)
-        if not qt or n == 0:
-            return dl.select(
+        v = self.doclen.version
+        docs = self.doclen.live_rows(v)
+        if not qt or docs == 0:
+            return self.doclen.read(v).select(
                 "doc_id", F.lit(0.0).alias("score")
             ).where(F.lit(False))
+        pv = self.postings.version
+        admitted = sum(
+            e["rows"] for e in self.postings.pruned_entries(qt, pv)
+        )
+        if max(docs, admitted) <= self.DRIVER_MAX_ROWS:
+            return self._bm25_local(qt, k, where, v, pv)
+        return self._bm25_spark(qt, k, where, v, pv)
+
+    def _bm25_local(
+        self, qt: list[str], k: int, where: str | None, v: int, pv: int
+    ) -> DataFrame:
+        """Driver-side scorer of :meth:`bm25`: the same arithmetic as
+        the Spark plan, in the same operation order, so the doubles
+        agree bit for bit — idf through the JVM's ``StrictMath.log``
+        (Spark's ``log``; libm and numpy differ in the last bit), and
+        the 6-decimal rounding of :func:`_spark_round6`."""
+        _, n, avgdl = self._corpus_stats(v, lens=True)
+        ids, dls = self._doclens[1:]
+        # read_pruned appends the exact residual isin itself; a NULL id
+        # neither counts in the window's count(doc_id) nor joins
+        post = (
+            self.postings.read_pruned(qt, pv)
+            .select("term", "doc_id", "tf")
+            .where(F.col("doc_id").isNotNull())
+        )
+        if where is not None:
+            # one query: every pruned posting (df stays corpus-wide),
+            # marked by whether its doc passes the filter
+            match = self._match_set(where).withColumn("hit", F.lit(True))
+            post = post.join(match, "doc_id", "left").select(
+                "term", "doc_id", "tf",
+                F.col("hit").isNotNull().alias("hit"),
+            )
+        id_type = post.schema["doc_id"].dataType.simpleString()
+        t = post.toArrow()
+        terms = t.column("term").to_numpy()
+        docs = t.column("doc_id").to_numpy()
+        tf = t.column("tf").to_numpy().astype(np.float64)
+        uterms, tidx = np.unique(terms, return_inverse=True)
+        # (term, doc_id) is the postings merge key: a term's rows are
+        # its distinct docs, so its row count is its df
+        log = self.spark._jvm.java.lang.StrictMath.log
+        idf = np.array([
+            log(1.0 + ((n - df) + 0.5) / (df + 0.5))
+            for df in np.bincount(tidx, minlength=len(uterms)).tolist()
+        ])
+        # each posting's dl by binary search in the memo; a posting
+        # with no doclen row counted in df but is not scored (the
+        # Spark plan's inner dl join)
+        pos = np.minimum(np.searchsorted(ids, docs), len(ids) - 1)
+        keep = ids[pos] == docs
+        if where is not None:
+            keep &= t.column("hit").to_numpy()
+        tf, dl = tf[keep], dls[pos[keep]].astype(np.float64)
+        term_score = (
+            idf[tidx[keep]] * tf * (K1 + 1.0)
+            / (tf + K1 * (1.0 - B + B * dl / avgdl))
+        )
+        udocs, didx = np.unique(docs[keep], return_inverse=True)
+        raw = np.bincount(didx, weights=term_score, minlength=len(udocs))
+        # rounding is monotone and moves a score by at most half a unit
+        # of the 6th decimal, so a doc over 1e-6 below the k-th raw
+        # score rounds strictly below k others (2e-6 leaves float
+        # slack): only the docs above that line need the exact rounding
+        near = np.arange(len(raw))
+        if 0 < k < len(raw):
+            kth = np.partition(raw, len(raw) - k)[len(raw) - k]
+            near = np.flatnonzero(raw >= kth - 2e-6)
+        ranked = sorted(
+            zip(udocs[near].tolist(),
+                map(_spark_round6, raw[near].tolist())),
+            key=lambda r: (-r[1], r[0]),
+        )
+        rows = ranked[:max(k, 0)]
+        schema = f"doc_id {id_type}, score double"
+        if not rows:  # an empty createDataFrame would still run a job
+            return literal_df(self.spark, [(None, None)], schema).where(
+                F.lit(False)
+            )
+        return literal_df(self.spark, rows, schema)
+
+    def _bm25_spark(
+        self, qt: list[str], k: int, where: str | None, v: int, pv: int
+    ) -> DataFrame:
+        """Distributed plan of :meth:`bm25` for inputs too big to hold
+        on the driver: each term's doc-frequency is one window count
+        over the pruned postings and idf is computed inline from it;
+        (N, avgdl) are literals; the final top-k is TakeOrdered."""
+        _, n, avgdl = self._corpus_stats(v)
+        dl = self.doclen.read(v)
         # read_pruned appends the exact residual isin itself — the
         # pruned read is already filtered, not just file-skipped.
         # count == countDistinct per term: (term, doc_id) is the
         # postings merge key, so a term's rows are its distinct docs
-        post = self.postings.read_pruned(qt).withColumn(
+        post = self.postings.read_pruned(qt, pv).withColumn(
             "df", F.count("doc_id").over(Window.partitionBy("term"))
         )
         cand = post

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 
@@ -117,20 +118,18 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.adaptive.enabled", "true"),
     ]
-    try:
-        # size shuffles to the session's actual parallelism instead of the
-        # 200 default — right for this engine's workloads at any scale
-        if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-            confs.append(
-                ("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
-            )
-    except Exception:
-        pass
+    # size shuffles to the session's actual parallelism instead of the
+    # 200 default — right for this engine's workloads at any scale (the
+    # read passes a default, so an unset key cannot fail it)
+    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
+        confs.append(
+            ("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+        )
     for k, v in confs:
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable in this session; get_spark sets it at build
+        except AnalysisException:
+            pass  # CANNOT_MODIFY_(STATIC_)CONFIG; get_spark sets it at build
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):

@@ -3506,8 +3506,7 @@ _PRUNED_CASES = {
 
 
 def _rows(df):
-    """Rows as sorted column->value items: a semi-join on USING columns
-    moves them first, and NULLs must sort."""
+    """Rows as sorted column->value items (NULLs must sort)."""
     return sorted(
         (tuple(sorted(r.asDict().items())) for r in df.collect()), key=repr
     )
@@ -3517,11 +3516,13 @@ def _rows(df):
 def test_pruned_read_equals_unpruned(spark, pruned_tables, case):
     """Each pruned read returns exactly the rows of its unpruned
     filter / semi-join over ``read()`` (DV-deleted row, NULL keys and
-    tuple semantics included) and scans exactly as many files as the
-    pruning rules admitted before they shared one admission test."""
+    tuple semantics included), in the table's column order, and scans
+    exactly as many files as the pruning rules admitted before they
+    shared one admission test."""
     table, pruned, full, n_files = _PRUNED_CASES[case]
     t = pruned_tables[table]
     got = pruned(t, spark)
+    assert got.columns == t.read().columns
     assert _rows(got) == _rows(full(t, spark))
     assert len(got.inputFiles()) == n_files
 

@@ -1086,3 +1086,45 @@ def test_mine_bitext_backward_bounded_to_winners(spark):
     }
     for sid, row in got.items():
         assert row == full[sid], (sid, row, full[sid])
+
+
+def test_ensure_runtime_confs_skips_only_refused_keys(spark):
+    """A conf the session refuses to set at runtime (the error a static
+    key raises) is skipped and the others are still set; any other
+    error from ``conf.set`` propagates."""
+    from types import SimpleNamespace
+
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from openverse_catalog_spark.session import ensure_runtime_confs
+
+    with pytest.raises(AnalysisException) as refused:
+        spark.conf.set("spark.sql.warehouse.dir", "/nonexistent")
+
+    class Conf:
+        def __init__(self, fail_on, error):
+            self.fail_on, self.error, self.set_keys = fail_on, error, []
+
+        def get(self, k, default=None):
+            return default
+
+        def set(self, k, v):
+            if k == self.fail_on:
+                raise self.error
+            self.set_keys.append(k)
+
+    def session(conf):
+        return SimpleNamespace(
+            conf=conf, sparkContext=SimpleNamespace(defaultParallelism=3)
+        )
+
+    conf = Conf("spark.sql.ansi.enabled", refused.value)
+    ensure_runtime_confs(session(conf))
+    assert "spark.sql.ansi.enabled" not in conf.set_keys
+    assert {"spark.sql.session.timeZone",
+            "spark.sql.shuffle.partitions"} <= set(conf.set_keys)
+    with pytest.raises(RuntimeError, match="boom"):
+        ensure_runtime_confs(
+            session(Conf("spark.sql.ansi.enabled", RuntimeError("boom")))
+        )

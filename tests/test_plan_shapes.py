@@ -391,15 +391,7 @@ def test_cohort_retention_broadcasts_cohort_map(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_warm_bm25_plan_has_one_window_and_no_stats_aggregate(
-    spark, tmp_path
-):
-    """A warm BM25 probe takes df from ONE window over the pruned
-    postings and (N, avgdl) from the per-version memo as literals: no
-    cross join for the corpus totals and no avg(dl) aggregate left in
-    the query plan."""
-    import re
-
+def _bm25_index(spark, tmp_path):
     from openverse_catalog_spark.operators.cowtable import CowTable
     from openverse_catalog_spark.operators.searchindex import SearchIndex
 
@@ -410,13 +402,55 @@ def test_warm_bm25_plan_has_one_window_and_no_stats_aggregate(
         spark.createDataFrame(rows, "doc_id long, text string"),
         keys=("doc_id",),
     )
-    idx = SearchIndex.create(spark, str(tmp_path / "idx"), base)
+    return SearchIndex.create(spark, str(tmp_path / "idx"), base)
+
+
+def test_warm_bm25_plan_has_one_window_and_no_stats_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """A warm BM25 probe on the distributed path takes df from ONE
+    window over the pruned postings and (N, avgdl) from the per-version
+    memo as literals: no cross join for the corpus totals and no
+    avg(dl) aggregate left in the query plan."""
+    import re
+
+    from openverse_catalog_spark.operators.searchindex import SearchIndex
+
+    monkeypatch.setattr(SearchIndex, "DRIVER_MAX_ROWS", 0)
+    idx = _bm25_index(spark, tmp_path)
     idx.bm25(["alpha"], 5).collect()
     plan = _plan(idx.bm25(["alpha", "charlie"], 5))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "avg(dl" not in plan
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
+
+
+def test_warm_bm25_driver_path_collects_one_scan_plan(
+    spark, tmp_path, monkeypatch
+):
+    """A warm BM25 probe on the driver path collects the term-pruned
+    postings through one plan with no shuffle, no window and no stats
+    aggregate, and returns a local relation."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    idx = _bm25_index(spark, tmp_path)
+    idx.bm25(["alpha"], 5).collect()  # warm the doclen memo
+    plans = []
+    to_arrow = DataFrame.toArrow
+
+    def spy(df):
+        plans.append(_plan(df))
+        return to_arrow(df)
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    out = idx.bm25(["alpha", "charlie"], 5)
+    monkeypatch.undo()
+    assert len(plans) == 1, plans
+    for node in ("Exchange", "Window", "avg(dl"):
+        assert node not in plans[0], (node, plans[0])
+    assert "LocalTableScan" in _plan(out)
+    assert len(out.collect()) == 5
 
 
 def test_pq_single_vector_search_plans_are_jvm_only(

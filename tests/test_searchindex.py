@@ -642,19 +642,32 @@ def _sourced_index(spark, tmp_path, n=300):
     )
 
 
-def test_bm25_warm_probe_job_budget(spark, tmp_path, jobs_of):
-    """A warm probe runs 4 jobs (postings scan with the df window, the
+def test_bm25_warm_probe_job_budget(spark, tmp_path, jobs_of, monkeypatch):
+    """A warm probe on the driver path runs 1 job (the pruned postings
+    collect; the k rows come back as a local relation) and a filtered
+    one at most 2 (+ the match-set broadcast). On the distributed path
+    a warm probe runs 4 jobs (postings scan with the df window, the
     doclen broadcast, the doc-score aggregate, TakeOrdered) and a
-    filtered one 5 (+ the match-set scan): corpus totals come from the
-    per-version memo, not from two re-planned aggregates per probe."""
+    filtered one 5 (+ the match-set scan). Either way corpus totals
+    come from the per-version memo, not from a re-planned aggregate."""
     _, idx = _sourced_index(spark, tmp_path)
-    idx.bm25(["alpha"], 5).collect()  # warm: the one stats miss
-    assert jobs_of(lambda: idx.bm25(["bravo", "delta"], 10).collect()) == 4
-    assert jobs_of(
-        lambda: idx.bm25(
-            ["bravo", "delta"], 10, where="source = 'a'"
-        ).collect(),
-    ) == 5
+
+    def plain():
+        return jobs_of(lambda: idx.bm25(["bravo", "delta"], 10).collect())
+
+    def filtered():
+        return jobs_of(
+            lambda: idx.bm25(
+                ["bravo", "delta"], 10, where="source = 'a'"
+            ).collect(),
+        )
+
+    idx.bm25(["alpha"], 5).collect()  # warm: the one doclen miss
+    assert plain() == 1
+    assert filtered() <= 2
+    monkeypatch.setattr(SearchIndex, "DRIVER_MAX_ROWS", 0)
+    assert plain() == 4  # (N, avgdl) already memoized by the lens collect
+    assert filtered() == 5
 
 
 def test_bm25_stats_memo_follows_other_handle_refresh(spark, tmp_path):
@@ -715,6 +728,147 @@ def test_bm25_degenerate_inputs_return_empty(spark, tmp_path):
     assert eidx.doclen.read().count() == 0
     out = eidx.bm25(["alpha"], 5)
     assert out.columns == ["doc_id", "score"] and out.collect() == []
+
+
+@pytest.fixture
+def spark_plan(monkeypatch):
+    """Serve every bm25 probe through the distributed plan (the path a
+    corpus too big for the driver takes)."""
+    monkeypatch.setattr(SearchIndex, "DRIVER_MAX_ROWS", 0)
+
+
+def test_bm25_index_equals_scan_under_random_churn_spark_plan(
+    spark, tmp_path, spark_plan
+):
+    test_bm25_index_equals_scan_under_random_churn(spark, tmp_path)
+
+
+def test_filtered_bm25_and_phrase_spark_plan(spark, tmp_path, spark_plan):
+    test_filtered_bm25_and_phrase(spark, tmp_path)
+
+
+def test_bm25_degenerate_inputs_return_empty_spark_plan(
+    spark, tmp_path, spark_plan
+):
+    test_bm25_degenerate_inputs_return_empty(spark, tmp_path)
+
+
+def _on_both_paths(monkeypatch, probe):
+    """``probe()``'s (doc_id, score) rows on the driver path, then on
+    the distributed path."""
+    got = [[(r.doc_id, r.score) for r in probe().collect()]]
+    with monkeypatch.context() as m:
+        m.setattr(SearchIndex, "DRIVER_MAX_ROWS", 0)
+        got.append([(r.doc_id, r.score) for r in probe().collect()])
+    return got
+
+
+def test_bm25_paths_agree_on_k_filters_and_string_ids(
+    spark, tmp_path, monkeypatch
+):
+    """Both bm25 paths return the same rows, order and scores when k
+    exceeds the candidate count (also past the 256 rows a literal
+    local relation holds), when the filter matches no candidate, and
+    over string doc ids, whose type the result keeps."""
+    base, idx = _sourced_index(spark, tmp_path)
+    sizes = []
+    for terms, k in ((["alpha"], 1000), (["foxtrot", "pad"], 300),
+                     (["echo"], 10)):
+        drv, spk = _on_both_paths(monkeypatch, lambda: idx.bm25(terms, k))
+        want = [(r.doc_id, r.score)
+                for r in _scan_bm25(base.read(), terms, k).collect()]
+        assert drv == spk == want, (terms, k)
+        sizes.append(len(want))
+    assert sizes[0] < 1000 and 256 < sizes[1] < 300 and sizes[2] == 10
+    drv, spk = _on_both_paths(
+        monkeypatch, lambda: idx.bm25(["bravo"], 500, where="doc_id < 12")
+    )
+    assert drv == spk and 0 < len(drv) < 12
+    drv, spk = _on_both_paths(
+        monkeypatch,
+        lambda: idx.bm25(["alpha", "bravo"], 10, where="source = 'zzz'"),
+    )
+    assert drv == spk == []
+    assert idx.bm25(["alpha"], 10, where="source = 'zzz'").columns == [
+        "doc_id", "score"
+    ]
+
+    words = ("alpha", "bravo", "charlie", "delta")
+    rows = [(f"doc-{i:03d}", " ".join(w for j, w in enumerate(words)
+                                      if (i + j) % 3) + " pad" * (i % 5))
+            for i in range(60)]
+    sbase = CowTable.create(
+        spark, str(tmp_path / "sdocs"),
+        spark.createDataFrame(rows, "doc_id string, text string"),
+        keys=("doc_id",),
+    )
+    sidx = SearchIndex.create(spark, str(tmp_path / "sidx"), sbase)
+    drv, spk = _on_both_paths(
+        monkeypatch, lambda: sidx.bm25(["bravo", "delta", "pad"], 15)
+    )
+    want = [(r.doc_id, r.score) for r in _scan_bm25(
+        sbase.read(), ["bravo", "delta", "pad"], 15).collect()]
+    assert drv == spk == want and len(want) == 15
+    out = sidx.bm25(["bravo"], 3)
+    assert dict(out.dtypes) == {"doc_id": "string", "score": "double"}
+
+
+def test_bm25_paths_agree_across_a_rounding_boundary(
+    spark, tmp_path, monkeypatch
+):
+    """Docs of the query ``alpha bravo`` whose raw scores lie 7e-7
+    apart on either side of the 6-decimal boundary 1.3529865: the one
+    above rounds to 1.352987 and ranks first although its doc_id is
+    the larger. Both paths and the full scan must agree on every cut
+    around the pair (a rounding that put both on one side would order
+    them by doc_id instead)."""
+    import math
+
+    from openverse_catalog_spark.operators.searchindex import B, K1
+
+    grid = [(a, b, p) for a in range(6) for b in range(6)
+            for p in range(10) if a + b + p]
+    lens = [a + b + p for a, b, p in grid] + [1 + x % 5 for x in range(111)]
+    texts = [" ".join(["alpha"] * a + ["bravo"] * b + ["pad"] * p)
+             for a, b, p in grid]
+    texts += ["zulu " * n for n in lens[len(grid):]]
+    rows = [(1000 - i, t) for i, t in enumerate(texts)]
+
+    # the pair's raw scores, by the formula, from the corpus statistics
+    n, avgdl = len(lens), sum(lens) / len(lens)
+
+    def idf(df):
+        return math.log(1.0 + ((n - df) + 0.5) / (df + 0.5))
+
+    def raw(a, b, p):
+        dl = a + b + p
+        return sum(
+            idf(df) * tf * (K1 + 1.0)
+            / (tf + K1 * (1.0 - B + B * dl / avgdl))
+            for tf, df in ((a, sum(1 for g in grid if g[0])),
+                           (b, sum(1 for g in grid if g[1])))
+            if tf
+        )
+
+    lo, hi = (5, 3, 5), (1, 2, 0)
+    assert raw(*lo) < 1.3529865 - 5e-8 < 1.3529865 + 5e-8 < raw(*hi)
+    lo_id, hi_id = 1000 - grid.index(lo), 1000 - grid.index(hi)
+    assert hi_id > lo_id
+
+    base = CowTable.create(
+        spark, str(tmp_path / "docs"), mk_docs(spark, *rows),
+        keys=("doc_id",), target_files=3,
+    )
+    idx = SearchIndex.create(spark, str(tmp_path / "idx"), base)
+    terms = ["alpha", "bravo"]
+    full = [(r.doc_id, r.score)
+            for r in _scan_bm25(base.read(), terms, 1000).collect()]
+    ids = [d for d, _ in full]
+    assert dict(full)[hi_id] == 1.352987 and dict(full)[lo_id] == 1.352986
+    assert ids.index(hi_id) < ids.index(lo_id)
+    for k in range(ids.index(hi_id), ids.index(lo_id) + 2):
+        drv, spk = _on_both_paths(monkeypatch, lambda: idx.bm25(terms, k))
+        assert drv == spk == full[:k], k
 
 
 def test_open_legacy_state_refuses_wrong_base_accepts_right(spark, tmp_path):

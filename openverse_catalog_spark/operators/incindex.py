@@ -36,12 +36,66 @@ lakehouse replacement those consumers share.
 from __future__ import annotations
 
 import json
+import math
 import os
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from openverse_catalog_spark.operators.cowtable import RetentionError
+
+# wide enough for every finite double at any scale a probe rounds to
+_ROUND_CTX = Context(prec=400)
+
+
+def _spark_round(x: float, scale: int) -> float:
+    """Spark's ``round(x, scale)`` of a double: HALF_UP on the double's
+    shortest decimal form (``BigDecimal.valueOf``), not on its binary
+    value — ``numpy.round`` differs on ties and near-ties. NaN and the
+    infinities pass through, and a result of zero is +0.0 (a
+    ``BigDecimal`` has no negative zero), as in Spark."""
+    x = float(x)
+    if not math.isfinite(x):
+        return x
+    q = Decimal(repr(x)).quantize(
+        Decimal(1).scaleb(-scale), ROUND_HALF_UP, _ROUND_CTX
+    )
+    return float(q) + 0.0
+
+
+def _spark_top(ids, vals, k: int, scale: int, null=None) -> list[int]:
+    """Positions of the first ``k`` rows of Spark's ``ORDER BY
+    round(v, scale) DESC, id`` over the numpy arrays ``ids`` and
+    ``vals`` (doubles; ``null`` marks NULL values): NaN sorts above
+    every value and NULL after all of them, as Spark orders doubles.
+    Rounding is monotone and moves a value by at most half a unit of
+    the last kept decimal, so a value more than one unit below the
+    k-th largest raw value rounds strictly below k others (two units
+    leave float slack): only the values above that line are rounded."""
+    k = max(int(k), 0)
+    null = np.zeros(len(vals), dtype=bool) if null is None else null
+    nan = np.isnan(vals) & ~null
+
+    def by_id(mask) -> list[int]:
+        pos = np.flatnonzero(mask)
+        return pos[np.argsort(ids[pos], kind="stable")].tolist()
+
+    out = by_id(nan)[:k]
+    num = np.flatnonzero(~nan & ~null)
+    r = k - len(out)
+    if r > 0 and len(num):
+        v = vals[num]
+        if r < len(num):
+            kth = np.partition(v, len(v) - r)[len(v) - r]
+            num = num[v >= kth - 2 * 10.0 ** -scale]
+        out += sorted(
+            num.tolist(),
+            key=lambda i: (-_spark_round(vals[i], scale), ids[i]),
+        )[:r]
+    return out + by_id(null)[:k - len(out)]
 
 
 def net_feed_transitions(

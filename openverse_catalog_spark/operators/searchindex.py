@@ -49,7 +49,6 @@ from __future__ import annotations
 
 import os
 import re
-from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 
@@ -57,19 +56,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openverse_catalog_spark.operators.cowtable import CowTable
-from openverse_catalog_spark.operators.incindex import IncrementalIndex
+from openverse_catalog_spark.operators.incindex import (
+    IncrementalIndex,
+    _spark_round,
+    _spark_top,
+)
 from openverse_catalog_spark.session import literal_df
 
 K1 = 1.2
 B = 0.75
-_E6 = Decimal("1e-6")
-
-
-def _spark_round6(x: float) -> float:
-    """Spark's ``round(x, 6)`` of a double: HALF_UP on the double's
-    shortest decimal form (``BigDecimal.valueOf``), not on its binary
-    value — ``numpy.round`` differs on ties and near-ties."""
-    return float(Decimal(repr(x)).quantize(_E6, ROUND_HALF_UP))
 
 
 def _tokens(text: Column) -> Column:
@@ -572,11 +567,11 @@ class SearchIndex(IncrementalIndex):
         the Spark plan, in the same operation order, so the doubles
         agree bit for bit — idf through the JVM's ``StrictMath.log``
         (Spark's ``log``; libm and numpy differ in the last bit), and
-        the 6-decimal rounding of :func:`_spark_round6`."""
+        the 6-decimal rounding of :func:`~.incindex._spark_round`."""
         _, n, avgdl = self._corpus_stats(v, lens=True)
         ids, dls = self._doclens[1:]
-        # read_pruned appends the exact residual isin itself; a NULL id
-        # neither counts in the window's count(doc_id) nor joins
+        # read_pruned appends the exact residual IN filter itself; a
+        # NULL id neither counts in the window's count(doc_id) nor joins
         post = (
             self.postings.read_pruned(qt, pv)
             .select("term", "doc_id", "tf")
@@ -617,20 +612,10 @@ class SearchIndex(IncrementalIndex):
         )
         udocs, didx = np.unique(docs[keep], return_inverse=True)
         raw = np.bincount(didx, weights=term_score, minlength=len(udocs))
-        # rounding is monotone and moves a score by at most half a unit
-        # of the 6th decimal, so a doc over 1e-6 below the k-th raw
-        # score rounds strictly below k others (2e-6 leaves float
-        # slack): only the docs above that line need the exact rounding
-        near = np.arange(len(raw))
-        if 0 < k < len(raw):
-            kth = np.partition(raw, len(raw) - k)[len(raw) - k]
-            near = np.flatnonzero(raw >= kth - 2e-6)
-        ranked = sorted(
-            zip(udocs[near].tolist(),
-                map(_spark_round6, raw[near].tolist())),
-            key=lambda r: (-r[1], r[0]),
-        )
-        rows = ranked[:max(k, 0)]
+        top = _spark_top(udocs, raw, k, 6)
+        rows = list(zip(
+            udocs[top].tolist(), [_spark_round(raw[i], 6) for i in top]
+        ))
         schema = f"doc_id {id_type}, score double"
         if not rows:  # an empty createDataFrame would still run a job
             return literal_df(self.spark, [(None, None)], schema).where(
@@ -647,7 +632,7 @@ class SearchIndex(IncrementalIndex):
         (N, avgdl) are literals; the final top-k is TakeOrdered."""
         _, n, avgdl = self._corpus_stats(v)
         dl = self.doclen.read(v)
-        # read_pruned appends the exact residual isin itself — the
+        # read_pruned appends the exact residual IN filter itself — the
         # pruned read is already filtered, not just file-skipped.
         # count == countDistinct per term: (term, doc_id) is the
         # postings merge key, so a term's rows are its distinct docs

@@ -46,9 +46,10 @@ re-rank only the top-shortlist candidates against the BASE table's raw
 vectors at the index's applied version — the index itself never stores
 a raw vector. A batch ``probe`` runs ADC as a Python pass against the
 broadcast codebooks; a single-vector ``search`` builds the query's
-lookup table on the driver (FAISS's per-query ADC table) and scores in
-the JVM, so it costs two Spark jobs: the shortlist collect and the
-re-rank.
+lookup table on the driver (FAISS's per-query ADC table) and scores
+on the driver from two Arrow collects, so it costs two Spark jobs: the
+probed codes, then the shortlisted base vectors; the top k return as a
+local relation.
 
 The reference has no vector index (its search handoff is lexical
 Elasticsearch, ``data_refresh_task_factory.py:183-240``); this is the
@@ -64,7 +65,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openverse_catalog_spark.operators.cowtable import CowTable
-from openverse_catalog_spark.operators.incindex import IncrementalIndex
+from openverse_catalog_spark.operators.incindex import (
+    IncrementalIndex,
+    _spark_round,
+    _spark_top,
+)
 from openverse_catalog_spark.operators.knn import (
     MAX_BROADCAST_QUERIES,
     _adc_generator,
@@ -76,6 +81,7 @@ from openverse_catalog_spark.operators.knn import (
     _write_codebooks,
     cosine_expr,
 )
+from openverse_catalog_spark.session import literal_df
 
 
 def _sample_centroids(
@@ -123,6 +129,65 @@ def _vec_literal(spark: SparkSession, values) -> Column:
     arr = spark.sparkContext._gateway.new_array(jvm.double, len(raw))
     jvm.java.nio.ByteBuffer.wrap(raw.tobytes()).asDoubleBuffer().get(arr)
     return Column(jvm.org.apache.spark.sql.functions.lit(arr))
+
+
+def _cosines(q, vectors):
+    """``cosine_expr(q, v)`` of every Arrow list ``v`` in ``vectors``
+    (a ``list<double>`` column) with the JVM expression's operation
+    order, so the doubles are Spark's: dot and squared norms are
+    sequential ``acc + x * y`` sums from 0.0, then ``dot / (|q| *
+    |v|)``. Returns ``(cosine, null)`` numpy arrays; ``null`` marks what
+    Spark gives NULL: a NULL vector, a NULL element, a length other
+    than ``len(q)`` (``zip_with`` pads with NULLs) and a zero divisor
+    (non-ANSI divide by zero)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    col = vectors.combine_chunks()
+    d = len(q)
+    lens = pc.list_value_length(col).fill_null(-1).to_numpy()
+    ok = lens == d
+    # row i's elements start at the summed lengths before it (flatten
+    # drops NULL lists)
+    starts = np.cumsum(np.maximum(lens, 0)) - np.maximum(lens, 0)
+    pos = starts[ok][:, None] + np.arange(d)
+    flat = col.flatten()
+    vals = flat.fill_null(0.0).to_numpy()[pos]
+    elem_null = flat.is_null().to_numpy(zero_copy_only=False)[pos]
+    dot = np.zeros(len(pos))
+    sq = np.zeros(len(pos))
+    qq = 0.0
+    for j in range(d):
+        x = vals[:, j]
+        dot = dot + q[j] * x
+        sq = sq + x * x
+        qq = qq + q[j] * q[j]
+    den = np.sqrt(qq) * np.sqrt(sq)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        c = dot / den
+    cos = np.zeros(len(lens))
+    null = ~ok
+    cos[ok] = c
+    null[ok] = elem_null.any(axis=1) | (den == 0.0)
+    return cos, null
+
+
+# every single-vector search's result, whatever the base key's type
+_RESULT = "neighbor_id long, cosine double"
+
+
+def _rank_vectors(t, q, k: int) -> list[tuple]:
+    """The first ``k`` ``(neighbor_id, cosine)`` rows of the Arrow
+    table ``t`` of ``(neighbor_id, vector)`` rows as the JVM ranking
+    orders them: :func:`_cosines` against ``q``, ranked by
+    (round(cosine, 9) desc, neighbor_id) with NaN first and NULL last,
+    cosine rounded to 6."""
+    ids = t.column("neighbor_id").to_numpy()
+    cos, null = _cosines(q, t.column("vector"))
+    top = _spark_top(ids, cos, k, 9, null)
+    return list(zip(ids[top].tolist(), [
+        None if null[i] else _spark_round(cos[i], 6) for i in top
+    ]))
 
 
 class VectorIndex(IncrementalIndex):
@@ -1159,19 +1224,21 @@ class VectorIndex(IncrementalIndex):
         """Single-vector top-k, the inline-SQL shape
         (``VECTOR_SEARCH('i', '...', k)``): the nprobe nearest
         centroids resolve DRIVER-side against the small centroid
-        matrix (no Spark job), the lists read is manifest-pruned to
-        those centroids, and scoring is a pure JVM expression against
-        the query literal — no Python in the scan, in both modes.
-        Returns (neighbor_id, cosine) ranked by the 9-decimal-rounded
-        score with an id tie-break (duplicate vectors rank
-        deterministically).
+        matrix (no Spark job) and the lists read is manifest-pruned to
+        those centroids. Returns (neighbor_id, cosine) ranked by the
+        9-decimal-rounded score with an id tie-break (duplicate vectors
+        rank deterministically), cosine rounded to 6.
 
-        PQ mode builds the query's ADC lookup table on the driver too
-        and runs two jobs: the ADC shortlist collect, then the exact
-        re-rank of the shortlisted base rows when the caller acts on
-        the returned frame. ``shortlist`` (default max(10, 4k), never
-        below k) is the ADC cut; results equal the batch ``probe`` of
-        the same vector as a one-row frame with ``exclude_self=False``.
+        Flat mode scores with a pure JVM expression against the query
+        literal: one job, run by the caller's action. PQ mode ranks by
+        ADC against the query's lookup table, built on the driver, and
+        re-ranks the ``shortlist`` best (default max(10, 4k), never
+        below k) by exact cosine against the BASE rows at the index's
+        applied version. Both passes run on the driver over two Arrow
+        collects — the probed codes, then the shortlisted base vectors
+        — and the k rows come back as a local relation, with the rows
+        and doubles of the batch ``probe`` of the same vector as a
+        one-row frame with ``exclude_self=False``.
 
         ``where`` runs a FILTERED search with a recall floor: the
         predicate pre-filters against the base (see ``_match_set``) and
@@ -1209,22 +1276,19 @@ class VectorIndex(IncrementalIndex):
     ) -> DataFrame:
         """The mode's exact single-vector ranking of the probed
         candidates ``cand`` (list rows of the ``probed`` centroids,
-        possibly match-filtered): cosine against the query literal,
-        top k by (round(cosine, 9) desc, neighbor_id), output cosine
-        rounded to 6. PQ mode first cuts the candidates to the ADC
-        shortlist (one collect) and ranks the shortlisted BASE rows at
-        the index's applied version instead — what the codes were
-        encoded from; the index itself stores no raw vector."""
-        if self.pq_m:
-            shortlist = max(int(shortlist or max(10, 4 * k)), int(k))
-            ids = self._pq_shortlist(cand, q, probed, shortlist)
-            cand = _as_double(
-                self.base.read_pruned(ids, version=self.applied_version),
-                self.vec_col,
-            ).select(
-                F.col(self.id_col).alias("neighbor_id"),
-                F.col(self.vec_col).alias("vector"),
-            )
+        possibly match-filtered): top k by (round(cosine, 9) desc,
+        neighbor_id), output cosine rounded to 6. Flat mode ranks the
+        lists' vectors in one JVM plan; PQ mode ranks on the driver
+        (:meth:`_rank_pq`)."""
+        if not self.pq_m:
+            return self._rank_spark(cand, q, k)
+        shortlist = max(int(shortlist or max(10, 4 * k)), int(k))
+        return self._rank_pq(cand, q, probed, k, shortlist)
+
+    def _rank_spark(self, cand: DataFrame, q, k: int) -> DataFrame:
+        """JVM ranking of ``(neighbor_id, vector)`` rows: cosine
+        against the query literal, top k by (round(cosine, 9) desc,
+        neighbor_id), cosine rounded to 6."""
         qlit = _vec_literal(self.spark, q)
         scored = cand.select(
             "neighbor_id",
@@ -1238,54 +1302,64 @@ class VectorIndex(IncrementalIndex):
             .select("neighbor_id", F.round("cosine", 6).alias("cosine"))
         )
 
-    def _pq_shortlist(
-        self, cand: DataFrame, q, probed: list[int], shortlist: int,
-    ) -> list[int]:
-        """Neighbor ids of the ``shortlist`` best candidates by ADC, in
-        ONE collect with no Python in the scan. The query's lookup
-        table ``lut[j, c] = dot(q̂_j, codebook[c, j])`` is computed on
-        the driver (FAISS's per-query ADC table) and enters the plan as
-        one n_k-double array literal per subspace, so a candidate's ADC
-        is a JVM sum of m ``element_at`` lookups by its codes. (One
-        m x n_k literal referenced by all m lookups is copied m times
-        into every task and plan description: several times slower per
-        search at n_k = 8000.) Residual codes add dot(q̂, centroid)
-        back per probed list through a literal map (linear in the
-        probed-centroid count per row; small nprobe keeps it cheap).
-        Cut order is the batch probe's: round(adc, 9) desc, then
-        neighbor_id."""
-        import functools
-        import operator
-
+    def _rank_pq(
+        self, cand: DataFrame, q, probed: list[int], k: int,
+        shortlist: int,
+    ) -> DataFrame:
+        """PQ ranking of :meth:`_rank` on the driver, in the operation
+        order of Spark's arithmetic so the doubles equal the batch
+        ``probe``'s: the candidates' codes arrive in one Arrow collect;
+        a candidate's ADC against the query's lookup table ``lut[j, c]
+        = dot(q̂_j, codebook[c, j])`` (FAISS's per-query ADC table) is
+        its m lookups added left to right, then, with residual codes,
+        dot(q̂, centroid); the shortlist is cut by (round(adc, 9) desc,
+        neighbor_id); the shortlisted BASE rows at the index's applied
+        version — what the codes were encoded from; the index stores
+        no raw vector — arrive in a second collect and
+        :func:`_rank_vectors` ranks them. The k rows return as a local
+        relation; no candidates skip the second collect. Driver memory
+        grows with the candidates the probe reads (nprobe lists, or
+        only their matching rows under ``where``), not with the
+        corpus."""
         import numpy as np
 
-        cb = self._codebook_tensor()  # (n_k, m, dsub)
-        m = cb.shape[1]
-        qn = q / np.linalg.norm(q)
-        lut = np.einsum("jd,cjd->jc", qn.reshape(m, -1), cb)
-        codes = F.col("codes")
-        adc = functools.reduce(operator.add, [
-            F.element_at(_vec_literal(self.spark, lut[j]), codes[j] + 1)
-            for j in range(m)
-        ])
-        if self.pq_residual:
-            c_ids, c_mat = self._centroid_matrix()
-            cdot = c_mat[np.searchsorted(c_ids, probed)] @ qn
-            adc = adc + F.element_at(
-                F.map_from_arrays(
-                    F.lit(np.asarray(probed, dtype="int64")),
-                    _vec_literal(self.spark, cdot),
-                ),
-                F.col("centroid_id"),
+        t = cand.select("neighbor_id", "centroid_id", "codes").toArrow()
+        ids = t.column("neighbor_id").to_numpy()
+        rows = []
+        if len(ids):
+            cb = self._codebook_tensor()  # (n_k, m, dsub)
+            m = cb.shape[1]
+            qn = q / np.linalg.norm(q)
+            lut = np.einsum("jd,cjd->jc", qn.reshape(m, -1), cb)
+            codes = (
+                t.column("codes").combine_chunks().flatten().to_numpy()
+                .reshape(len(ids), m)
             )
-        rows = (
-            cand.select("neighbor_id", adc.alias("adc"))
-            .orderBy(F.round(F.col("adc"), 9).desc(), "neighbor_id")
-            .limit(shortlist)
-            .select("neighbor_id")
-            .collect()
-        )
-        return [r[0] for r in rows]
+            adc = lut[0][codes[:, 0]]
+            for j in range(1, m):
+                adc = adc + lut[j][codes[:, j]]
+            if self.pq_residual:
+                c_ids, c_mat = self._centroid_matrix()
+                cdot = c_mat[np.searchsorted(c_ids, probed)] @ qn
+                cents = t.column("centroid_id").to_numpy()
+                adc = adc + cdot[np.searchsorted(probed, cents)]
+            short = ids[_spark_top(ids, adc, shortlist, 9)].tolist()
+            if short:
+                base = _as_double(
+                    self.base.read_pruned(
+                        short, version=self.applied_version
+                    ),
+                    self.vec_col,
+                ).select(
+                    F.col(self.id_col).alias("neighbor_id"),
+                    F.col(self.vec_col).alias("vector"),
+                )
+                rows = _rank_vectors(base.toArrow(), q, k)
+        if not rows:  # an empty createDataFrame would still run a job
+            return literal_df(self.spark, [(None, None)], _RESULT).where(
+                F.lit(False)
+            )
+        return literal_df(self.spark, rows, _RESULT)
 
     # pre-filter only below this match-set fraction of the corpus: a
     # non-selective predicate (most of a 100 TB corpus matches) would
@@ -1308,10 +1382,11 @@ class VectorIndex(IncrementalIndex):
           scan and collect the <= k result rows. If k fills — the
           overwhelmingly common case for a non-selective predicate
           (say 90% of a 100 TB corpus matches) — that ONE ranking (the
-          cosine collect; in PQ mode the ADC shortlist collect plus the
-          re-rank collect) is the whole search: the match set is never
-          counted, let alone materialized; Catalyst/AQE broadcasts the
-          small candidate side into the streaming predicate scan.
+          cosine collect; in PQ mode the codes collect plus the
+          shortlisted base-vector collect) is the whole search: the
+          match set is never counted, let alone materialized;
+          Catalyst/AQE broadcasts the small candidate side into the
+          streaming predicate scan.
         * UNDER-FILL pays the match-set count — exactly then does the
           recall floor min(k, total matches) need it — and the measured
           fraction picks the escalation arm: SELECTIVE (fraction <=
@@ -1378,6 +1453,5 @@ class VectorIndex(IncrementalIndex):
         if persisted is not None:
             # rows are already collected; never leak cache across calls
             persisted.unpersist()
-        return self.spark.createDataFrame(
-            rows, "neighbor_id long, cosine double"
-        )
+        # a local relation: the caller's action runs no further job
+        return literal_df(self.spark, rows, _RESULT)

@@ -176,18 +176,49 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
     return out
 
 
+def _sql_scalar(v) -> str | None:
+    """``v`` as exact Spark SQL literal text when it is an exact
+    ``int`` (in the long range), ``float``, ``bool`` or ``None``; None
+    for anything else (strings bind as parameters). The test is
+    ``type(v) is``, so a subclass with its own ``__repr__`` can never
+    write into the query text. ``repr`` of a float round-trips through
+    the parser's ``Double.parseDouble`` (both are correctly rounded);
+    NaN and the infinities have no literal and cast from a string."""
+    t = type(v)
+    if v is None:
+        return "NULL"
+    if t is bool:
+        return "true" if v else "false"
+    if t is int:
+        return str(v) if -(2**63) <= v < 2**63 else None
+    if t is float:
+        if v != v:
+            return "CAST('NaN' AS DOUBLE)"
+        if v in (float("inf"), float("-inf")):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(v) + "D"
+    return None
+
+
 def literal_df(spark: SparkSession, rows, schema: str):
-    """A small literal frame as a LOCAL RELATION (parameterized VALUES
-    + CAST projection): rows and schema are identical to
-    ``spark.createDataFrame(rows, schema)`` — pinned by test — but
-    actions execute driver-side (``LocalTableScan``) instead of
-    scheduling a job over a parallelized RDD. Measured on local[32]:
-    ``head()`` on a 1-row createDataFrame result costs ~0.7 s PER
-    ACTION; the literal form ~0.04 s. Values bind as named parameters
-    (never string-spliced), the CAST pins each column to the declared
-    type, and the no-ELSE CASE keeps every column nullable exactly
-    like createDataFrame. Non-scalar cells, empty row sets and large
-    row sets (>256: parameter-count blowup) keep the original path."""
+    """A small literal frame as a LOCAL RELATION (a ``VALUES`` list +
+    CAST projection): rows and schema are identical to
+    ``spark.createDataFrame(rows, schema)`` (pinned by
+    ``tests/test_session.py``) but actions execute driver-side
+    (``LocalTableScan``) instead of scheduling a job over a
+    parallelized RDD. Measured on local[32]: ``head()`` on a 1-row
+    createDataFrame result costs ~0.7 s PER ACTION; the literal form
+    ~0.04 s.
+
+    Exact ``int``/``float``/``bool``/``None`` values are written into
+    the ``VALUES`` text as exact literals (:func:`_sql_scalar`), so
+    building the frame is a constant number of py4j calls however many
+    numbers it holds; strings bind as named parameters (never
+    string-spliced). The CAST pins each column to the declared type,
+    and the no-ELSE CASE keeps every column nullable exactly like
+    createDataFrame. Non-scalar cells, ints outside the long range,
+    empty row sets and large row sets (>256: parameter-count blowup)
+    keep the original path."""
     if (
         not rows
         or len(rows) > 256
@@ -197,8 +228,7 @@ def literal_df(spark: SparkSession, rows, schema: str):
             # its KEYS, which would silently bind as column values
             not isinstance(r, (tuple, list))
             or any(
-                type(v) not in (bool, int, float, str, type(None))
-                for v in r
+                type(v) is not str and _sql_scalar(v) is None for v in r
             )
             for r in rows
         )
@@ -210,12 +240,15 @@ def literal_df(spark: SparkSession, rows, schema: str):
     args: dict = {}
     tuples = []
     for ri, r in enumerate(rows):
-        names = []
+        cells = []
         for ci, v in enumerate(r):
-            k = f"p{ri}_{ci}"
-            args[k] = v
-            names.append(f":{k}")
-        tuples.append("(" + ",".join(names) + ")")
+            if type(v) is str:
+                k = f"p{ri}_{ci}"
+                args[k] = v
+                cells.append(f":{k}")
+            else:
+                cells.append(_sql_scalar(v))
+        tuples.append("(" + ",".join(cells) + ")")
     proj = ", ".join(
         f"CASE WHEN 1=1 THEN CAST(c{i} AS "
         f"{f.dataType.simpleString()}) END AS `{f.name}`"
@@ -224,5 +257,5 @@ def literal_df(spark: SparkSession, rows, schema: str):
     cols = ",".join(f"c{i}" for i in range(len(sch.fields)))
     return spark.sql(
         f"SELECT {proj} FROM (VALUES {','.join(tuples)}) AS __v({cols})",
-        args=args,
+        args=args or None,
     )

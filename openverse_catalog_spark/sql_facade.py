@@ -473,21 +473,13 @@ class SqlFacade:
     # -- statement results ---------------------------------------------------
 
     def _result_df(self, rows, schema: str) -> DataFrame:
-        """Statement-result frame as a LOCAL RELATION (parameterized
-        VALUES + CAST projection): rows and schema are identical to
-        ``spark.createDataFrame(rows, schema)`` — pinned by test — but
+        """Statement-result frame as a LOCAL RELATION
+        (:func:`~openverse_catalog_spark.session.literal_df`): rows and
+        schema equal ``spark.createDataFrame(rows, schema)``'s, but
         actions execute driver-side (``LocalTableScan``) instead of
-        scheduling a job over a parallelized RDD. Measured on
-        local[32]: ``head()`` on a 1-row createDataFrame result costs
-        ~0.7 s PER ACTION (RDD job + take machinery); the literal form
-        ~0.04 s (guide §1.2 — every DDL/DML statement returns one of
-        these and most callers action it at least once, so the old
-        shape taxed the whole facade surface). Values are bound as
-        named parameters (never string-spliced), the CAST pins each
-        column to the declared type, and the no-ELSE CASE keeps every
-        column nullable exactly like createDataFrame. Non-scalar
-        cells, empty row sets and large row sets keep the original
-        path."""
+        scheduling a job over a parallelized RDD — every DDL/DML
+        statement returns one of these and most callers action it at
+        least once."""
         from openverse_catalog_spark.session import literal_df
 
         return literal_df(self.spark, rows, schema)

@@ -39,6 +39,41 @@ def jobs_of(spark):
     return count
 
 
+@pytest.fixture
+def py4j_calls_of():
+    """Counter of the py4j round trips an action makes:
+    ``py4j_calls_of(action)`` runs ``action()`` with py4j's
+    ``ClientServerConnection.send_command`` wrapped and returns how many
+    commands the driver sent to the JVM — driver-side cost that, unlike
+    wall time, does not move with the load on the host. Object releases
+    are not counted: py4j sends them for proxies that earlier code
+    dropped, in batches whenever its release queue flushes."""
+    from py4j import protocol
+    from py4j.clientserver import ClientServerConnection
+
+    release = (
+        protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    )
+
+    def count(action) -> int:
+        send = ClientServerConnection.send_command
+        n = 0
+
+        def counting(self, command, *args, **kwargs):
+            nonlocal n
+            n += not command.startswith(release)
+            return send(self, command, *args, **kwargs)
+
+        ClientServerConnection.send_command = counting
+        try:
+            action()
+        finally:
+            ClientServerConnection.send_command = send
+        return n
+
+    return count
+
+
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -396,6 +396,28 @@ def test_cow_fully_guarded_batch_is_noop(spark, tmp_path):
     assert ("met", "fX") not in got and ("met", "fY") not in got
 
 
+def test_read_pruned_int_keys_py4j_budget(spark, tmp_path, py4j_calls_of):
+    """An int-key pruned read writes its residual ``IN`` list as one
+    expression: building the read takes the same py4j round trips for
+    2 000 ids as for 4 (``isin`` sent one literal per id), and a 4-id
+    lookup with its collect stays within the pinned budget."""
+    t = CowTable.create(
+        spark, str(tmp_path / "t"),
+        spark.range(400).selectExpr("id AS k", "id % 7 AS v"),
+        keys=("k",), target_files=4,
+    )
+    few = [3, 117, 229, 341]
+    many = list(range(0, 4000, 2))
+    t.read_pruned(few).collect()  # warm the manifest
+    assert py4j_calls_of(lambda: t.read_pruned(many)) == py4j_calls_of(
+        lambda: t.read_pruned(few)
+    )
+    got = []
+    calls = py4j_calls_of(lambda: got.extend(t.read_pruned(few).collect()))
+    assert sorted(r.k for r in got) == few
+    assert calls <= 27, calls
+
+
 def test_cow_read_pruned_scans_subset_and_is_exact(spark, tmp_path):
     """read_pruned must (a) return exactly the filtered snapshot and
     (b) physically scan only files whose key range can hold the asked

@@ -457,9 +457,10 @@ def test_pq_single_vector_search_plans_are_jvm_only(
     spark, tmp_path, monkeypatch
 ):
     """A PQ single-vector search picks centroids and builds the ADC
-    lookup table on the driver: both of its plans (the ADC shortlist
-    it collects and the exact re-rank it returns) hold no Python pass,
-    no window and no checkpointed RDD scan."""
+    lookup table on the driver, then ranks there: its two
+    Arrow-collected plans (the probed codes, then the shortlisted base
+    vectors) hold no Python pass, window, exchange or checkpointed RDD
+    scan, and the returned frame is a local relation."""
     import numpy as np
     from pyspark.sql.classic.dataframe import DataFrame
 
@@ -474,26 +475,54 @@ def test_pq_single_vector_search_plans_are_jvm_only(
         keys=("vec_id",),
     )
     q = rows[7][1]
+
+    def plans_of(search) -> tuple[list[str], object]:
+        plans = []
+        to_arrow = DataFrame.toArrow
+
+        def spy(df):
+            plans.append(_plan(df))
+            return to_arrow(df)
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, "toArrow", spy)
+            return plans, search()
+
     for residual in (False, True):
         idx = VectorIndex.create(
             spark, str(tmp_path / f"idx{residual}"), base,
             centroid_mod=10, pq_m=4, codebook_mod=7, pq_residual=residual,
         )
         idx.search(q, k=3).collect()  # warm the centroid/codebook memos
-        plans = []
-        collect = DataFrame.collect
-
-        def spy(df):
-            plans.append(_plan(df))
-            return collect(df)
-
-        monkeypatch.setattr(DataFrame, "collect", spy)
-        out = idx.search(q, k=3)
-        monkeypatch.undo()
-        plans.append(_plan(out))
+        plans, out = plans_of(lambda: idx.search(q, k=3))
         assert len(plans) == 2, plans
         for plan in plans:
             for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython",
-                         "BatchEvalPython", "Window", "ExistingRDD"):
+                         "BatchEvalPython", "Window", "Exchange",
+                         "ExistingRDD"):
                 assert node not in plan, (residual, node, plan)
+        assert "LocalTableScan" in _plan(out)
         assert out.collect()[0].neighbor_id == 7
+
+
+def test_read_pruned_int_keys_push_in_into_parquet_scan(spark, tmp_path):
+    """The residual filter of an int-key pruned read (one SQL ``IN``
+    expression) still reaches the parquet scan as a pushed ``In`` for a
+    short list and a long one (``InSet`` in the optimized plan)."""
+    import re
+
+    from openverse_catalog_spark.operators.cowtable import CowTable
+
+    t = CowTable.create(
+        spark, str(tmp_path / "t"),
+        spark.range(200).selectExpr("id AS k", "id % 3 AS v"),
+        keys=("k",), target_files=2,
+    )
+    for ids in ([3, 150], list(range(0, 200, 9))):
+        df = t.read_pruned(ids)
+        plan = _plan(df)
+        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+        assert any(re.search(r"\bIn\(k, ", p) for p in pushed), plan
+        opt = df._jdf.queryExecution().optimizedPlan().toString()
+        assert (" IN (" if len(ids) <= 10 else " INSET ") in opt, opt
+        assert sorted(r.k for r in df.collect()) == ids

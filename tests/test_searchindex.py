@@ -642,14 +642,19 @@ def _sourced_index(spark, tmp_path, n=300):
     )
 
 
-def test_bm25_warm_probe_job_budget(spark, tmp_path, jobs_of, monkeypatch):
+def test_bm25_warm_probe_job_budget(
+    spark, tmp_path, jobs_of, monkeypatch, py4j_calls_of
+):
     """A warm probe on the driver path runs 1 job (the pruned postings
     collect; the k rows come back as a local relation) and a filtered
-    one at most 2 (+ the match-set broadcast). On the distributed path
-    a warm probe runs 4 jobs (postings scan with the df window, the
-    doclen broadcast, the doc-score aggregate, TakeOrdered) and a
-    filtered one 5 (+ the match-set scan). Either way corpus totals
-    come from the per-version memo, not from a re-planned aggregate."""
+    one at most 2 (+ the match-set broadcast), and makes a pinned
+    number of py4j round trips (the result's numbers are written into
+    one ``VALUES`` text, not bound as one parameter each at about four
+    round trips per number). On the distributed path a warm probe
+    runs 4 jobs (postings scan with the df window, the doclen
+    broadcast, the doc-score aggregate, TakeOrdered) and a filtered
+    one 5 (+ the match-set scan). Either way corpus totals come from
+    the per-version memo, not from a re-planned aggregate."""
     _, idx = _sourced_index(spark, tmp_path)
 
     def plain():
@@ -665,6 +670,10 @@ def test_bm25_warm_probe_job_budget(spark, tmp_path, jobs_of, monkeypatch):
     idx.bm25(["alpha"], 5).collect()  # warm: the one doclen miss
     assert plain() == 1
     assert filtered() <= 2
+    calls = py4j_calls_of(
+        lambda: idx.bm25(["bravo", "delta"], 10).collect()
+    )
+    assert calls <= 133, calls
     monkeypatch.setattr(SearchIndex, "DRIVER_MAX_ROWS", 0)
     assert plain() == 4  # (N, avgdl) already memoized by the lens collect
     assert filtered() == 5

@@ -11,7 +11,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from openverse_catalog_spark.operators.cowtable import CowTable
-from openverse_catalog_spark.operators.vectorindex import VectorIndex
+from openverse_catalog_spark.operators.vectorindex import (
+    VectorIndex,
+    _rank_vectors,
+)
 DIM = 8
 
 
@@ -1303,11 +1306,17 @@ def test_pq_filtered_search_equals_probe_and_raw(spark, tmp_path):
         assert sorted(g[0] for g in got) == [7, 37, 67]
 
 
-def test_single_vector_search_job_budget(spark, tmp_path, jobs_of):
+def test_single_vector_search_job_budget(
+    spark, tmp_path, jobs_of, py4j_calls_of
+):
     """Warm single-vector searches run a fixed number of Spark jobs:
-    flat search is one job, PQ search at most two (the ADC shortlist
-    collect and the exact re-rank), and a PQ search(where=...) whose
-    first level fills k runs the count pinned below."""
+    flat search is one job, PQ search at most two (the codes collect
+    and the shortlisted base vectors' collect; the result is a local
+    relation), and a PQ search(where=...) whose first level fills k
+    runs the count pinned below. A PQ search also makes a pinned
+    number of py4j round trips (the load-independent driver cost): no
+    ADC or cosine expression tree, per-id ``isin`` literal or re-rank
+    plan crosses to the JVM."""
     rows = [(i, _vec(i), "rare" if i % 10 == 0 else "common")
             for i in range(60)]
     base = CowTable.create(
@@ -1338,6 +1347,149 @@ def test_single_vector_search_job_budget(spark, tmp_path, jobs_of):
     }
     assert counts["flat"] == 1, counts
     assert counts["pq"] <= 2, counts
-    # shortlist collect over the match-set join (2), re-rank collect,
-    # the result frame's collect
-    assert counts["pq_where"] == 4, counts
+    # codes collect over the match-set join (2), the base vectors'
+    # collect; the result is a local relation
+    assert counts["pq_where"] == 3, counts
+    calls = py4j_calls_of(lambda: pq.search(q, k=3, nprobe=2).collect())
+    assert calls <= 187, calls
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_pq_search_edges(spark, tmp_path, jobs_of, residual):
+    """PQ search at the edges of its driver ranking: no candidates (an
+    empty local relation whose collect runs no job), k above the
+    candidate count, a shortlist above the candidate count, and a
+    duplicate vector that ties its original on ADC and cosine and
+    ranks after it by id — each equal to the batch probe."""
+    rows = [(i, _vec(i)) for i in range(40)] + [(103, _vec(3))]
+    base = CowTable.create(
+        spark, str(tmp_path / "vecs"),
+        spark.createDataFrame(rows, "vec_id long, embedding array<double>"),
+        keys=("vec_id",), target_files=3,
+    )
+    idx = VectorIndex.create(
+        spark, str(tmp_path / "idx"), base,
+        centroid_mod=8, pq_m=4, codebook_mod=3, pq_residual=residual,
+    )
+    n_cents = len(idx._centroid_matrix()[0])
+    q = np.asarray(_vec(3))
+    probed = sorted(int(c) for c in idx._centroid_order(q)[:2])
+
+    none = idx.lists.read_pruned(probed).where(F.lit(False))
+    empty = idx._rank(none, q, probed, 3, None)
+    assert jobs_of(empty.collect) == 0
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == (
+        "struct<neighbor_id:bigint,cosine:double>"
+    )
+    assert idx.search(list(q), k=3, where="vec_id < -5").collect() == []
+
+    def search(**kw):
+        return [
+            (r.neighbor_id, r.cosine)
+            for r in idx.search(list(q), **kw).collect()
+        ]
+
+    every = search(k=100, nprobe=n_cents)
+    assert sorted(g[0] for g in every) == sorted(i for i, _ in rows)
+    assert every == _one_row_probe(spark, idx, q, 100, n_cents, 400)
+
+    wide = search(k=3, nprobe=2, shortlist=500)
+    assert wide == _one_row_probe(spark, idx, q, 3, 2, 500)
+    assert [g[0] for g in wide[:2]] == [3, 103]
+    assert wide[0][1] == wide[1][1] == 1.0
+
+
+def test_search_of_int_keyed_base_returns_long_ids(spark, tmp_path):
+    """A base keyed by an ``int`` column: flat, PQ, filtered PQ and
+    empty PQ searches all return ``neighbor_id bigint`` (the lists
+    store ids as long) with the rows of the same base keyed by long."""
+    want_schema = "struct<neighbor_id:bigint,cosine:double>"
+    got = {}
+    for key_type in ("int", "long"):
+        base = CowTable.create(
+            spark, str(tmp_path / f"vecs_{key_type}"),
+            spark.createDataFrame(
+                [(i, _vec(i)) for i in range(30)],
+                f"vec_id {key_type}, embedding array<double>",
+            ),
+            keys=("vec_id",),
+        )
+        flat = VectorIndex.create(
+            spark, str(tmp_path / f"flat_{key_type}"), base,
+            centroid_mod=6,
+        )
+        pq = VectorIndex.create(
+            spark, str(tmp_path / f"pq_{key_type}"), base,
+            centroid_mod=6, pq_m=4, codebook_mod=3,
+        )
+        q = _vec(4)
+        outs = [
+            flat.search(q, k=4),
+            pq.search(q, k=4),
+            pq.search(q, k=4, where="vec_id % 2 = 0"),
+            pq.search(q, k=4, where="vec_id < 0"),
+        ]
+        for out in outs:
+            assert out.schema.simpleString() == want_schema, key_type
+        got[key_type] = [
+            [(r.neighbor_id, r.cosine) for r in out.collect()]
+            for out in outs
+        ]
+    assert got["int"] == got["long"]
+    assert [len(g) for g in got["int"]] == [4, 4, 4, 0]
+
+
+def test_rank_vectors_equals_jvm_ranking(spark, tmp_path):
+    """The driver ranking of collected ``(neighbor_id, vector)`` rows
+    equals the JVM plan's rows, order and doubles at every k: a NULL
+    vector, a NULL element, a zero vector, a norm that underflows to
+    zero, and vectors shorter or longer than the query get a NULL
+    cosine and rank last; NaN (a NaN or infinite element) ranks first;
+    two cosines on either side of a 9-decimal rounding boundary and two
+    that round to the same 9 decimals order as Spark orders them."""
+    import math
+
+    def unit(c):
+        return [c, math.sqrt(1.0 - c * c), 0.0]
+
+    rng = np.random.default_rng(9)
+    rows = [
+        (1, None), (2, [0.0, 0.0, 0.0]), (3, [1.0, 2.0]),
+        (4, [1.0, 2.0, 3.0, 4.0]), (5, [1.0, None, 2.0]),
+        (6, [float("nan"), 1.0, 1.0]), (7, [1e-170, 0.0, 0.0]),
+        # equal at 9 decimals: the lower raw cosine has the lower id
+        (8, unit(0.4999999996)), (9, unit(0.5000000004)),
+        # either side of 0.7000000005
+        (10, unit(0.70000000049)), (11, unit(0.70000000051)),
+        (12, [float("inf"), 1.0, 1.0]), (13, [1.0, 1.0, 1.0]),
+        (14, [1.0, 1.0, 1.0]),
+    ] + [(i, [float(x) for x in rng.normal(size=3)]) for i in range(20, 40)]
+    frame = spark.createDataFrame(
+        rows, "neighbor_id long, vector array<double>"
+    )
+    base = CowTable.create(
+        spark, str(tmp_path / "vecs"),
+        spark.createDataFrame(
+            [(i, _vec(i)[:3]) for i in range(10)],
+            "vec_id long, embedding array<double>",
+        ),
+        keys=("vec_id",),
+    )
+    idx = VectorIndex.create(
+        spark, str(tmp_path / "idx"), base, centroid_mod=5,
+    )
+    q = np.asarray([1.0, 0.0, 0.0])
+    t = frame.toArrow()
+    for k in (1, 2, 3, 5, 9, 12, 20, len(rows), len(rows) + 5):
+        want = [
+            (r.neighbor_id, repr(r.cosine))
+            for r in idx._rank_spark(frame, q, k).collect()
+        ]
+        got = [(i, repr(c)) for i, c in _rank_vectors(t, q, k)]
+        assert got == want, (k, got, want)
+    ranked = [i for i, _ in _rank_vectors(t, q, len(rows))]
+    assert ranked[:2] == [6, 12]  # NaN first, by id
+    assert ranked[-6:] == [1, 2, 3, 4, 5, 7]  # NULL last, by id
+    assert ranked.index(8) < ranked.index(9)
+    assert ranked.index(11) < ranked.index(10)

@@ -249,6 +249,15 @@ def _data_rel(entry_path: str) -> str:
     return entry_path.rsplit("/", 1)[-1]
 
 
+def _split(entries: list[dict], hit) -> tuple[list[dict], list[dict]]:
+    """(the entries ``hit`` accepts, the rest), each in manifest order."""
+    yes: list[dict] = []
+    no: list[dict] = []
+    for e in entries:
+        (yes if hit(e) else no).append(e)
+    return yes, no
+
+
 def _rel_path(dir_path: str, full: str) -> str:
     """Path of ``full`` relative to ``dir_path``. ``input_file_name``
     URIs carry a scheme prefix, and partition-pure writes nest files
@@ -464,7 +473,7 @@ def _footer_file_stats(
     written byte to recompute numbers sitting in the footer).
 
     Partitioned tables take the same path: files are PARTITION-PURE
-    (``_write_clustered`` routes every row of a file through one
+    (``CowTable._write`` routes every row of a file through one
     partition tuple), so each partition field is CONSTANT within a
     file and ``pmin == pmax == _transform_probe(spec, footer_min)`` —
     the footer min is an actual row value, and the probe is the exact
@@ -915,6 +924,21 @@ class BatchSummary:
         return not self.boxes and self.range_box is None and not self.has_null
 
 
+@dataclasses.dataclass(frozen=True)
+class WritePlan:
+    """A commit's data layout: ``CowTable._plan_write`` decides it,
+    ``CowTable._write`` carries it out. ``kind`` is ``"single"``,
+    ``"bounds"`` (``n - 1`` driver-derived ``bounds``) or
+    ``"sampled"``; ``order`` the clustering columns (merge keys, or
+    ``("__z",)``); ``checkpoint`` lazily checkpoints the input."""
+
+    kind: str
+    n: int
+    bounds: tuple[tuple, ...] = ()
+    order: tuple[str, ...] = ()
+    checkpoint: bool = False
+
+
 class CowTable:
     """Handle on a copy-on-write table rooted at ``root``."""
 
@@ -1128,62 +1152,85 @@ class CowTable:
                     e["bloom_sc"] = sc_rel
         return entries
 
-    def _range_bounds(
-        self, summary: BatchSummary | None, entries: list[dict],
+    def _plan_write(
+        self,
+        summary: BatchSummary | None,
+        entries: list[dict],
         target_files: int,
-    ) -> list[tuple] | None:
-        """Driver-derived range-split bounds for a commit's clustered
-        write, replacing ``repartitionByRange``'s sampling pass (one
-        Spark job per commit that re-executed the write lineage — guide
-        §2.4: remove the shuffle's sampling pass outright). Candidates:
-        the batch's exact per-key multiset (``summary.multiset`` —
-        ``_batch_summary`` collects it anyway; ``summary=None`` for
-        writes with no batch, whose rows all come from ``entries``)
-        plus, for rewritten files, the manifest entries' key endpoints
-        weighted by row count (files are range-clustered, so endpoint
-        grain tracks the old layout). Returns None — caller falls back
-        to the sampling write — when the summary has no multiset
-        (overflow, float/decimal keys), the table is partitioned
-        (transform columns aren't derivable driver-side), or any
-        value's Python ordering could diverge from the SQL ordering
-        (floats/decimals)."""
+        cols=(),
+        checkpoint: bool = False,
+        order: tuple[str, ...] | None = None,
+    ) -> WritePlan:
+        """The one layout decision for a commit's data write, from the
+        batch ``summary`` (None without a batch), the rewritten
+        ``entries``, the written frame's ``cols``, ``create``'s opt-in
+        ``checkpoint`` and a non-key ``order`` (z-order). First match:
+
+        ========================================  =======  ==========
+        input                                     kind     checkpoint
+        ========================================  =======  ==========
+        ``target_files <= 1``                     single   no
+        z-order, a partition spec, a ``__rt``     sampled  see below
+        column, or a summary with no multiset
+        (overflow box, float/decimal keys)
+        no candidate, a key value whose Python    sampled  see below
+        order may differ from SQL's, or fewer
+        file-end candidates than buckets
+        candidates whose bounds come out empty    single   no
+        otherwise                                 bounds   no
+        ========================================  =======  ==========
+
+        A sampled plan checkpoints iff a summary exists or ``create``
+        opted in: ``repartitionByRange``'s sampling pass executes the
+        whole child plan before the exchange executes it again, so a
+        join lineage (source x affected files) is materialized once
+        (measured 1.99 -> 1.51 s, one job fewer), while a scan lineage
+        is cheaper to re-scan than to cache (1.14 -> 1.28 s).
+
+        A bounds plan drops the sampling job and runs the lineage once.
+        Candidates: the batch's exact key multiset, plus each rewritten
+        entry's END key weighted by its rows (files are range-clustered
+        and disjoint, so that is the CDF step); a single int key also
+        interpolates interior points, so bounds can split inside a wide
+        file. Partition transforms are not derivable on the driver, and
+        the router needs ``__rt`` for itself."""
+        order = tuple(order or self.keys)
+
+        def sampled() -> WritePlan:
+            return WritePlan(
+                "sampled", target_files, order=order,
+                checkpoint=summary is not None or checkpoint,
+            )
+
+        if target_files <= 1:
+            return WritePlan("single", 1, order=order)
         multiset = [] if summary is None else summary.multiset
         if (
-            multiset is None or target_files <= 1 or self.partition_spec
+            order != self.keys or self.partition_spec or "__rt" in cols
+            or multiset is None
         ):
-            return None
+            return sampled()
         keys = self.keys
-        cands: list[tuple] = []
-        try:
-            for kt, cnt in multiset:
-                for v in kt:
-                    if v is not None and not isinstance(
-                        v, _BOUNDS_SAFE_TYPES
-                    ):
-                        return None
-                cands.append((kt, float(cnt)))
-            # a rewritten file's rows appear as cumulative mass at its
-            # END key (files are range-clustered and disjoint, so "by
-            # this file's max, its rows have passed" is the correct CDF
-            # step); a single INT key additionally interpolates interior
-            # points so bounds can split inside a wide file
-            interp = (
-                len(keys) == 1
-                and all(
-                    isinstance(e["min"].get(keys[0]), int)
-                    and isinstance(e["max"].get(keys[0]), int)
-                    and not isinstance(e["min"].get(keys[0]), bool)
-                    for e in entries
-                )
-                if entries else False
+
+        def safe(kt) -> bool:
+            return all(
+                v is None or isinstance(v, _BOUNDS_SAFE_TYPES) for v in kt
             )
-            for e in entries:
-                hi = tuple(e["max"].get(k) for k in keys)
-                for v in hi:
-                    if v is not None and not isinstance(
-                        v, _BOUNDS_SAFE_TYPES
-                    ):
-                        return None
+
+        try:
+            interp = bool(entries) and len(keys) == 1 and all(
+                isinstance(e["min"].get(keys[0]), int)
+                and isinstance(e["max"].get(keys[0]), int)
+                and not isinstance(e["min"].get(keys[0]), bool)
+                for e in entries
+            )
+            cands = [(kt, float(cnt)) for kt, cnt in multiset]
+            ends = [tuple(e["max"].get(k) for k in keys) for e in entries]
+            if not all(safe(kt) for kt, _ in cands) or not all(
+                safe(hi) for hi in ends
+            ):
+                return sampled()
+            for e, hi in zip(entries, ends):
                 w = float(e.get("rows") or 0)
                 if w <= 0:
                     continue
@@ -1195,22 +1242,24 @@ class CowTable:
                             for i in range(1, 8)
                         }
                     )
-                    for p in pts:
-                        cands.append(((p,), w / len(pts)))
+                    cands += [((p,), w / len(pts)) for p in pts]
                 else:
                     cands.append((hi, w))
-            if not cands:
-                return None
-            if not multiset and not interp and len(entries) < target_files:
+            if not cands or (
+                not multiset and not interp and len(entries) < target_files
+            ):
                 # pure file-end candidates can't split inside a file:
                 # fewer files than buckets would collapse the layout —
                 # let the sampler keep target sizing
-                return None
-            return _determine_bounds(cands, target_files)
+                return sampled()
+            bounds = _determine_bounds(cands, target_files)
         except (TypeError, KeyError):
-            return None  # mixed/unorderable stat types: sample instead
+            return sampled()  # mixed/unorderable stat types
+        if not bounds:
+            return WritePlan("single", 1, order=order)
+        return WritePlan("bounds", len(bounds) + 1, tuple(bounds), order)
 
-    def _route_expr(self, phys_df: DataFrame, bounds: list[tuple]):
+    def _route_expr(self, phys_df: DataFrame, bounds: tuple[tuple, ...]):
         """Partition-routing column for a bounds-driven clustered write:
         rows compare against the driver-derived bounds (ascending,
         NULLs first — RangePartitioner's ordering) to get a bucket id,
@@ -1250,81 +1299,29 @@ class CowTable:
             w = w.when(le(bounds[i]), F.lit(slots[i]))
         return w.otherwise(F.lit(slots[len(bounds)]))
 
-    def _write_clustered(
-        self, phys_df: DataFrame, target_files: int, data_dir: str,
-        checkpoint: bool = False, bounds: list[tuple] | None = None,
-    ) -> None:
-        """The one data-file writer every commit path uses. Without a
-        partition spec: the classic merge-key range clustering. With
-        one: rows range-cluster on (partition transforms, merge key)
-        and the write goes through ``partitionBy`` on derived ``__p_*``
-        columns, so files are PARTITION-PURE — a file never spans a
-        partition tuple (Iceberg's write distribution; each task opens
-        one file per tuple in its range, so a table gets >= one file
-        per live partition and partition pruning is exact at every
-        boundary, not just away from file edges). The ``__p_*`` columns
-        exist only in the directory layout — parquet files keep the
-        full real schema, so entry-path reads are unchanged.
+    def _write(
+        self, phys_df: DataFrame, plan: WritePlan
+    ) -> tuple[str, list[dict]]:
+        """The one data-file writer every commit path uses: write
+        ``phys_df`` as ``plan`` says into a commit-unique ``data/c<id>``
+        directory (concurrent attempts never collide; a losing or
+        crashed one leaves only an orphan for vacuum) and return (that
+        directory, its manifest entries). No emptiness probe: an empty
+        frame writes no part files and yields no entries.
 
-        ``checkpoint=True``: lazily localCheckpoint the input first.
-        ``repartitionByRange``'s range-sampling pass executes the FULL
-        child plan a first time (projecting only the sort keys from its
-        rows), then the real exchange executes it again — a commit
-        whose lineage is a join (merge/merge_when rewrite sets) pays
-        the join twice. The lazy checkpoint makes the sampling pass
-        materialize the rows once and the exchange read the cached
-        blocks (measured: join-lineage write 1.99 -> 1.51 s, one fewer
-        job). Callers with scan-like lineage (create, predicated
-        rewrites) keep the default: re-scanning parquet is cheaper
-        than caching (1.14 -> 1.28 s). Rows, range bounds and file
-        counts are unchanged — the sample sees identical values.
-        ``target_files == 1`` plans no sampling pass at all, so the
-        checkpoint would be pure overhead; it is skipped.
-
-        ``bounds`` (driver-derived via :meth:`_range_bounds`): range-
-        cluster WITHOUT the sampling pass — rows route to buckets by
-        comparing against the known bounds and a plain hash exchange on
-        the inverse-hash slot places each bucket on its own partition.
-        One job fewer per commit AND the write lineage executes exactly
-        once, so the caller's lazy checkpoint becomes unnecessary too.
-        Only for unpartitioned tables (partition transforms aren't
-        derivable driver-side); empty bounds degrade to the single-file
-        write which never sampled anyway."""
-        if (
-            bounds is not None and not self.partition_spec
-            and "__rt" not in phys_df.columns
-        ):
-            if len(bounds) == 0:
-                target_files = 1  # single bucket: no exchange sampling
-            else:
-                n = len(bounds) + 1
-                route = self._route_expr(phys_df, bounds)
-                (
-                    phys_df.withColumn("__rt", route)
-                    .repartition(n, F.col("__rt"))
-                    .drop("__rt")
-                    .write.mode("error")
-                    .parquet(data_dir)
-                )
-                return
-        if checkpoint and target_files > 1:
+        Bounds: each row's bucket comes from comparing against the
+        bounds, and a hash exchange on the bucket's inverse-hash slot
+        places bucket j on partition j. Single/sampled: range-partition
+        on (partition transforms, ``plan.order``); a non-key order is a
+        derived column (``__z``), also sorted within files and dropped.
+        A partition spec writes through ``partitionBy`` on ``__p_*``
+        columns, so files are PARTITION-PURE (Iceberg's write
+        distribution: pruning is exact at every boundary); the
+        ``__p_*`` columns exist only in the directory layout."""
+        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
+        data_dir = f"{self.root}/{rel_dir}"
+        if plan.checkpoint:
             phys_df = phys_df.localCheckpoint(eager=False)
-        tagged, pcols = self._with_partition_cols(phys_df)
-        writer = tagged.repartitionByRange(
-            target_files, *[F.col(c) for c in (*pcols, *self.keys)]
-        ).write.mode("error")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(data_dir)
-
-    def _with_partition_cols(
-        self, phys_df: DataFrame
-    ) -> tuple[DataFrame, list[str]]:
-        """Tag a physical frame with one ``__p_<field>`` column per
-        partition field whose source column it carries — the
-        directory-layout columns a partition-pure write clusters and
-        splits on. Returns the tagged frame and the added column
-        names (none for an unpartitioned table)."""
         pcols: list[str] = []
         colmap = self.column_mapping
         for s in self.partition_spec:
@@ -1338,7 +1335,27 @@ class CowTable:
                     ),
                 )
                 pcols.append(pc)
-        return phys_df, pcols
+        if plan.kind == "bounds":
+            out = (
+                phys_df.withColumn(
+                    "__rt", self._route_expr(phys_df, plan.bounds)
+                )
+                .repartition(plan.n, F.col("__rt"))
+                .drop("__rt")
+            )
+        else:
+            out = phys_df.repartitionByRange(
+                plan.n, *[F.col(c) for c in (*pcols, *plan.order)]
+            )
+            if plan.order != self.keys:
+                out = out.sortWithinPartitions(*pcols, *plan.order).drop(
+                    *plan.order
+                )
+        writer = out.write.mode("error")
+        if pcols:
+            writer = writer.partitionBy(*pcols)
+        writer.parquet(data_dir)
+        return data_dir, self._collect_entries(data_dir, rel_dir)
 
     # -- bootstrap ----------------------------------------------------------
 
@@ -1391,17 +1408,12 @@ class CowTable:
         # instead of failing on the husk for the whole retention
         # window — an at-least-once stream that bootstraps a side
         # table (apply_changes' tombstone store) replays cleanly.
-        # Write-first, no head(1) probe: an empty frame writes no part
-        # files and _collect_entries returns [] from the part-less dir
-        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
-        data_dir = f"{t.root}/{rel_dir}"
         # checkpoint=True: callers whose df lineage is expensive
         # (tokenize/aggregate/GEMM pipelines) opt in so the range
-        # sample doesn't execute that lineage a second time; the
-        # default stays off for scan-like frames where re-scanning
-        # parquet beats caching
-        t._write_clustered(df, target_files, data_dir, checkpoint=checkpoint)
-        entries = t._collect_entries(data_dir, rel_dir)
+        # sample doesn't execute that lineage a second time
+        _, entries = t._write(
+            df, t._plan_write(None, [], target_files, checkpoint=checkpoint)
+        )
         # an EMPTY create initializes a zero-file snapshot (the schema in
         # the manifest keeps it readable) — the streaming-ingest path
         # starts from this and lets micro-batch merges populate it
@@ -2695,7 +2707,7 @@ class CowTable:
         a groupBy whose AQE execution costs two stage-jobs per commit;
         grouping the <= ``_MAX_BATCH_KEYS`` rows is driver-side Counter
         work. It yields the exact per-key multiset, from which
-        ``_range_bounds`` derives the clustered write's split points
+        ``_plan_write`` derives the clustered write's split points
         with NO sampling job; boxes, the NULL flag and the dup flag
         come from the same rows and are IDENTICAL to the aggregation's
         (min/max/isNull are insensitive to row multiplicity).
@@ -3189,12 +3201,22 @@ class CowTable:
     def _noop_result(m: dict, **extra) -> dict:
         """The result of a write that commits nothing: head ``m`` stays
         the current version and every file is skipped."""
+        return CowTable._commit_result(m, 0, [], False, **extra)
+
+    @staticmethod
+    def _commit_result(
+        mm: dict, rewritten: int, new_entries: list[dict], relinked: bool,
+        **extra,
+    ) -> dict:
+        """The result of a data-writing commit: committed manifest
+        ``mm``, ``rewritten`` files replaced, ``new_entries`` written."""
         return {
-            "version": m["version"],
-            "files_rewritten": 0,
-            "files_skipped": len(m["files"]),
-            "files_written": 0,
-            "rows": m["rows"],
+            "version": mm["version"],
+            "files_rewritten": rewritten,
+            "files_skipped": len(mm["files"]) - len(new_entries),
+            "files_written": len(new_entries),
+            "rows": mm["rows"],
+            "relinked": relinked,
             **extra,
         }
 
@@ -3455,7 +3477,9 @@ class CowTable:
         """MERGE the batch into a new snapshot. Untouched files carry over
         by reference; affected files + the batch run the standard
         ``merge_upsert`` and are rewritten range-clustered. Returns the
-        commit summary {version, files_rewritten, files_skipped, rows}.
+        commit summary {version, files_rewritten, files_skipped,
+        files_written, rows, relinked, write}; ``write`` is the layout
+        ``_plan_write`` chose (single, bounds or sampled).
 
         Source preprocessing (url dedupe + cross-partition url-conflict
         guard) runs against the FULL current snapshot projected to
@@ -3614,10 +3638,9 @@ class CowTable:
             ):
                 return empty_noop
             return self._noop_result(m, rows_rejected=rows_rejected)
-        affected, untouched = [], []
-        for e in m["files"]:
-            hit = self._entry_hit(e, summary)
-            (affected if hit else untouched).append(e)
+        affected, untouched = _split(
+            m["files"], lambda e: self._entry_hit(e, summary)
+        )
         if kwargs.get("validate_unique"):
             # uniqueness repair must see the whole table (a url dup can
             # span a file the batch never touches) — disable skipping
@@ -3649,21 +3672,9 @@ class CowTable:
         # (cost: one agg pass over the rewrite set — only when
         # constraints exist)
         self._enforce_constraints(merged, "merge")
-        # data files go to a commit-unique directory: concurrent
-        # attempts never collide on the filesystem, and a losing or
-        # crashed attempt leaves only an unreferenced dir for vacuum
-        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
-        data_dir = f"{self.root}/{rel_dir}"
-        # bounds known -> no range-sampling job AND the join lineage
-        # executes exactly once (the checkpoint existed only because
-        # sampling ran it twice); unknown -> sampling path unchanged
-        bounds = self._range_bounds(summary, affected, target_files)
-        self._write_clustered(
-            self._to_physical(merged), target_files, data_dir,
-            checkpoint=bounds is None,  # join lineage: source x affected
-            bounds=bounds,
-        )
-        new_entries = self._collect_entries(data_dir, rel_dir)
+        phys = self._to_physical(merged)
+        plan = self._plan_write(summary, affected, target_files, phys.columns)
+        data_dir, new_entries = self._write(phys, plan)
         mm, relinked = self._publish(
             m, affected, untouched, new_entries, "merge",
             # uniqueness repair read the WHOLE table and schema
@@ -3676,15 +3687,10 @@ class CowTable:
             [data_dir], pre_commit_hook, txn=txn,
             schema_json=merged.schema.json() if new_fields else None,
         )
-        return {
-            "version": mm["version"],
-            "files_rewritten": len(affected),
-            "files_skipped": len(mm["files"]) - len(new_entries),
-            "files_written": len(new_entries),
-            "rows": mm["rows"],
-            "rows_rejected": rows_rejected,
-            "relinked": relinked,
-        }
+        return self._commit_result(
+            mm, len(affected), new_entries, relinked,
+            rows_rejected=rows_rejected, write=plan.kind,
+        )
 
     # -- conditional MERGE (ANSI WHEN clauses) --------------------------------
 
@@ -3811,10 +3817,9 @@ class CowTable:
             )
         if summary.empty:
             return noop  # empty source: no box ⇔ no row
-        affected, untouched = [], []
-        for e in m["files"]:
-            (affected if self._entry_hit(e, summary)
-             else untouched).append(e)
+        affected, untouched = _split(
+            m["files"], lambda e: self._entry_hit(e, summary)
+        )
         tgt = (
             self._read_entries(affected, m) if affected
             else self.spark.createDataFrame([], schema)
@@ -3890,20 +3895,11 @@ class CowTable:
         # coercion); keep every written file at the manifest width
         out = self._conform_widths(out, schema, [])
         self._enforce_constraints(out, "merge_when")
-        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
-        data_dir = f"{self.root}/{rel_dir}"
         # write FIRST instead of probing emptiness with head(1): the
-        # probe cost a full extra pass over the merge join, while an
-        # empty result writes no part files at all (empty tasks emit
-        # nothing) and _collect_entries returns [] from the part-less
-        # dir without planning a scan
-        bounds = self._range_bounds(summary, affected, target_files)
-        self._write_clustered(
-            self._to_physical(out), target_files, data_dir,
-            checkpoint=bounds is None,  # join lineage: source x affected
-            bounds=bounds,
-        )
-        new_entries = self._collect_entries(data_dir, rel_dir)
+        # probe cost a full extra pass over the merge join
+        phys = self._to_physical(out)
+        plan = self._plan_write(summary, affected, target_files, phys.columns)
+        data_dir, new_entries = self._write(phys, plan)
         if not new_entries and not affected:
             shutil.rmtree(data_dir, ignore_errors=True)
             return noop
@@ -3914,14 +3910,9 @@ class CowTable:
             ),
             [data_dir], pre_commit_hook, txn=txn,
         )
-        return {
-            "version": mm["version"],
-            "files_rewritten": len(affected),
-            "files_skipped": len(mm["files"]) - len(new_entries),
-            "files_written": len(new_entries),
-            "rows": mm["rows"],
-            "relinked": relinked,
-        }
+        return self._commit_result(
+            mm, len(affected), new_entries, relinked, write=plan.kind
+        )
 
     # -- predicated UPDATE / DELETE (batched_update / delete_records) -------
 
@@ -3944,13 +3935,7 @@ class CowTable:
         hit_paths = {
             "/" + r["__f"].removeprefix("file:").lstrip("/") for r in hits
         }
-        touched, carried = [], []
-        for e in m["files"]:
-            if self._abs(e["path"]) in hit_paths:
-                touched.append(e)
-            else:
-                carried.append(e)
-        return touched, carried
+        return _split(m["files"], lambda e: self._abs(e["path"]) in hit_paths)
 
     def update(
         self,
@@ -4028,106 +4013,24 @@ class CowTable:
     ) -> dict:
         if mode not in ("copy", "dv"):
             raise ValueError(f"mode must be 'copy' or 'dv', got {mode!r}")
-        attempt = (
-            self._dv_rewrite_attempt if mode == "dv"
-            else self._rewrite_attempt
-        )
         return self._retrying(
-            lambda: attempt(
+            lambda: self._rewrite_attempt(
                 op, condition, set_exprs, target_files, pre_commit_hook,
-                audit_path, reason,
+                audit_path, reason, mode,
             ),
             max_retries,
         )
 
     def _rewrite_attempt(
         self, op, condition, set_exprs, target_files, pre_commit_hook,
-        audit_path=None, reason=None,
+        audit_path, reason, mode,
     ) -> dict:
-        m = self._manifest()
-        self._refresh_props(m)
-        touched, carried = self._files_matching(m, condition)
-        if not touched:
-            return self._noop_result(m)
-        slice_df = self._read_entries(touched, m)
-        if op == "update":
-            unknown = set(set_exprs) - set(slice_df.columns)
-            if unknown:
-                raise ValueError(
-                    f"UPDATE sets unknown columns {sorted(unknown)}; "
-                    "evolve the schema via merge(allow_new_columns=True)"
-                )
-            # every SET RHS sees the OLD row: one select over the
-            # original columns (sequential withColumn would leak a
-            # newly-set value into a later expression)
-            out = slice_df.select(
-                *[
-                    F.when(condition, set_exprs[c])
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in slice_df.columns
-                ]
-            )
-        else:
-            out = slice_df.filter(~F.coalesce(condition, F.lit(False)))
-        if op == "update":
-            # SET expressions can widen (when/otherwise coercion) —
-            # conform to the manifest width before writing
-            out = self._conform_widths(out, self._schema(m), [])
-            self._enforce_constraints(out, "update")
-        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
-        data_dir = f"{self.root}/{rel_dir}"
-        # write FIRST (no head(1) emptiness probe — it cost an extra
-        # pass over the rewrite): a delete that emptied every touched
-        # file writes no part files and _collect_entries returns []
-        # from the part-less dir, so the commit simply drops them.
-        # Range bounds derive from the touched entries' own stats (for
-        # a delete the weights overcount the surviving rows — balance
-        # only, never correctness), killing the sampling job
-        self._write_clustered(
-            self._to_physical(out), target_files, data_dir,
-            bounds=self._range_bounds(None, touched, target_files),
-        )
-        new_entries = self._collect_entries(data_dir, rel_dir)
-        mm, relinked = self._publish(
-            m, touched, carried, new_entries, op,
-            lambda added, removed: self._predicate_relink_safe(
-                added, condition
-            ),
-            [data_dir], pre_commit_hook,
-        )
-        if op == "delete" and audit_path is not None:
-            # audit AFTER the commit so only the attempt that actually
-            # committed writes its victim set (a conflict-losing attempt
-            # recomputes victims against the winner's snapshot on retry
-            # and must not have audited the stale set). The touched old
-            # files remain on disk until vacuum, so the slice is still
-            # readable here.
-            (
-                slice_df.filter(F.coalesce(condition, F.lit(False)))
-                .withColumn("deleted_reason", F.lit(reason))
-                .withColumn("deleted_on", F.current_timestamp())
-                .write.mode("append")
-                .parquet(audit_path)
-            )
-        return {
-            "version": mm["version"],
-            "files_rewritten": len(touched),
-            "files_skipped": len(mm["files"]) - len(new_entries),
-            "files_written": len(new_entries),
-            "rows": mm["rows"],
-            "relinked": relinked,
-        }
+        """One predicated UPDATE/DELETE attempt. One find-scan marks the
+        touched files. ``mode="copy"`` rewrites them without the
+        deleted rows, or with the updated ones.
 
-    def _dv_rewrite_attempt(
-        self, op, condition, set_exprs, target_files, pre_commit_hook,
-        audit_path=None, reason=None,
-    ) -> dict:
-        """Merge-on-read UPDATE/DELETE: victims die by POSITION in a
-        deletion-vector sidecar instead of a copy-on-write rewrite.
-        One find-scan marks the touched files; the victims' (file, pos)
+        ``mode="dv"`` (merge-on-read): victims die by POSITION in a
+        deletion-vector sidecar instead. The victims' (file, pos)
         identities — unioned with any vector those files already carry,
         vectors are CUMULATIVE per file — land in one tiny parquet
         sidecar under data/; touched entries keep their data file but
@@ -4142,123 +4045,152 @@ class CowTable:
         touched, carried = self._files_matching(m, condition)
         if not touched:
             return self._noop_result(m)
-        raw = self._scan(
-            [self._abs(e["path"]) for e in touched], m, positions=True
-        )
-        old_pos = self._dv_positions(touched)
-        live = raw
-        if old_pos is not None:
-            live = raw.join(
-                self._dv_hint(old_pos, touched),
-                (raw["__dv_file"] == old_pos["file"])
-                & (raw["__dv_pos"] == old_pos["pos"]),
-                "left_anti",
+        hit = F.coalesce(condition, F.lit(False))
+        if mode == "copy":
+            src = self._read_entries(touched, m)
+            victims = src.filter(hit)
+        else:
+            raw = self._scan(
+                [self._abs(e["path"]) for e in touched], m, positions=True
             )
-        victims = live.filter(
-            F.coalesce(condition, F.lit(False))
-        ).localCheckpoint(eager=False)
-        data_cols = [c for c in victims.columns
-                     if c not in ("__dv_file", "__dv_pos")]
+            old_pos = self._dv_positions(touched)
+            live = raw
+            if old_pos is not None:
+                live = raw.join(
+                    self._dv_hint(old_pos, touched),
+                    (raw["__dv_file"] == old_pos["file"])
+                    & (raw["__dv_pos"] == old_pos["pos"]),
+                    "left_anti",
+                )
+            src = live.filter(hit).localCheckpoint(eager=False)
+            victims = src.drop("__dv_file", "__dv_pos")
         if op == "update":
-            unknown = set(set_exprs) - set(data_cols)
+            unknown = set(set_exprs) - set(victims.columns)
             if unknown:
                 raise ValueError(
                     f"UPDATE sets unknown columns {sorted(unknown)}; "
                     "evolve the schema via merge(allow_new_columns=True)"
                 )
-        vic_pos = victims.select(
-            F.col("__dv_file").alias("file"), F.col("__dv_pos").alias("pos")
-        )
-        allpos = vic_pos
-        if old_pos is not None:
-            # carry forward the touched files' existing vectors so each
-            # file's newest DV stays its complete cumulative set
-            bases = [
-                _data_rel(e["path"]) for e in touched if e.get("dv")
-            ]
-            allpos = allpos.unionByName(
-                old_pos.filter(F.col("file").isin(bases))
-            ).distinct()
-        rel_dv = f"data/dv{uuid.uuid4().hex[:12]}"
-        dv_dir = f"{self.root}/{rel_dv}"
-        allpos.coalesce(1).write.mode("error").parquet(dv_dir)
-        dead = {
-            r["file"]: r["n"]
-            # explicit schema: a no-victim no-prior-DV write leaves a
-            # part-less dir, which schema inference would reject
-            for r in self.spark.read.schema(allpos.schema).parquet(dv_dir)
-            .groupBy("file").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        new_touched = []
-        n_dv_changed = 0
-        for e in touched:
-            b = _data_rel(e["path"])
-            n_dead = dead.get(b, 0)
-            old_dead = (e.get("dv") or {}).get("deleted", 0)
-            if n_dead == old_dead:
-                new_touched.append(e)  # flagged by the raw scan only
-                continue
-            n_dv_changed += 1
-            phys = e.get("phys", e["rows"] + old_dead)
-            if phys - n_dead <= 0:
-                continue  # fully dead file: drop the entry outright
-            new_touched.append(
-                {
-                    **e,
-                    "rows": phys - n_dead,
-                    "phys": phys,
-                    "dv": {"path": rel_dv, "deleted": n_dead},
-                }
+        dirs, dv_entries, extra = [], [], {}
+        if mode == "copy":
+            # every SET RHS sees the OLD row: one select over the
+            # original columns (sequential withColumn would leak a
+            # newly-set value into a later expression). A delete that
+            # emptied every touched file writes no part files, so the
+            # commit simply drops them
+            out = src.select(
+                *[
+                    F.when(condition, set_exprs[c])
+                    .otherwise(F.col(c))
+                    .alias(c)
+                    if c in set_exprs
+                    else F.col(c)
+                    for c in src.columns
+                ]
+            ) if op == "update" else src.filter(~hit)
+            # range bounds derive from the touched entries' own stats
+            # (for a delete the weights overcount the surviving rows —
+            # balance only, never correctness)
+            rewritten = touched
+        else:
+            allpos = src.select(
+                F.col("__dv_file").alias("file"),
+                F.col("__dv_pos").alias("pos"),
             )
-        if n_dv_changed == 0:
-            # every matching row was already DV-dead: nothing to commit
-            # (no dedicated head(1) probe — emptiness falls out of the
-            # per-file dead counts, which are computed anyway)
-            shutil.rmtree(dv_dir, ignore_errors=True)
-            return self._noop_result(m)
-        new_entries: list[dict] = []
-        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
-        data_dir = f"{self.root}/{rel_dir}"
-        if op == "update":
+            if old_pos is not None:
+                # carry forward the touched files' existing vectors so
+                # each file's newest DV stays its complete cumulative set
+                bases = [
+                    _data_rel(e["path"]) for e in touched if e.get("dv")
+                ]
+                allpos = allpos.unionByName(
+                    old_pos.filter(F.col("file").isin(bases))
+                ).distinct()
+            rel_dv = f"data/dv{uuid.uuid4().hex[:12]}"
+            dv_dir = f"{self.root}/{rel_dv}"
+            allpos.coalesce(1).write.mode("error").parquet(dv_dir)
+            dead = {
+                r["file"]: r["n"]
+                # explicit schema: a no-victim no-prior-DV write leaves
+                # a part-less dir, which schema inference would reject
+                for r in self.spark.read.schema(allpos.schema)
+                .parquet(dv_dir)
+                .groupBy("file").agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+            n_dv_changed = 0
+            for e in touched:
+                n_dead = dead.get(_data_rel(e["path"]), 0)
+                old_dead = (e.get("dv") or {}).get("deleted", 0)
+                if n_dead == old_dead:
+                    dv_entries.append(e)  # flagged by the raw scan only
+                    continue
+                n_dv_changed += 1
+                phys = e.get("phys", e["rows"] + old_dead)
+                if phys - n_dead <= 0:
+                    continue  # fully dead file: drop the entry outright
+                dv_entries.append(
+                    {
+                        **e,
+                        "rows": phys - n_dead,
+                        "phys": phys,
+                        "dv": {"path": rel_dv, "deleted": n_dead},
+                    }
+                )
+            if n_dv_changed == 0:
+                # every matching row was already DV-dead: nothing to
+                # commit (no dedicated head(1) probe — emptiness falls
+                # out of the per-file dead counts, computed anyway)
+                shutil.rmtree(dv_dir, ignore_errors=True)
+                return self._noop_result(m)
+            dirs, extra = [dv_dir], {"files_dv": n_dv_changed}
             # every victim matches the predicate, so SET applies
-            # unconditionally — each RHS still sees only OLD columns
-            upd = victims.select(
+            # unconditionally — each RHS still sees only OLD columns;
+            # a delete writes no data file
+            out = victims.select(
                 *[
                     (set_exprs[c] if c in set_exprs else F.col(c)).alias(c)
-                    for c in data_cols
+                    for c in victims.columns
                 ]
+            ) if op == "update" else None
+            rewritten = []
+        if op == "update":
+            # SET expressions can widen (when/otherwise coercion) —
+            # conform to the manifest width before writing
+            out = self._conform_widths(out, self._schema(m), [])
+            self._enforce_constraints(out, "update")
+        new_entries, plan = [], None
+        if out is not None:
+            phys_df = self._to_physical(out)
+            plan = self._plan_write(
+                None, rewritten, target_files, phys_df.columns
             )
-            # SET expressions can widen — conform to the manifest width
-            upd = self._conform_widths(upd, self._schema(m), [])
-            self._enforce_constraints(upd, "update")
-            self._write_clustered(
-                self._to_physical(upd), target_files, data_dir
-            )
-            new_entries = self._collect_entries(data_dir, rel_dir)
+            data_dir, new_entries = self._write(phys_df, plan)
+            dirs.append(data_dir)
         mm, relinked = self._publish(
-            m, touched, carried, new_touched + new_entries, op,
+            m, touched, carried, dv_entries + new_entries, op,
             lambda added, removed: self._predicate_relink_safe(
                 added, condition
             ),
-            [dv_dir, data_dir], pre_commit_hook,
+            dirs, pre_commit_hook,
         )
         if op == "delete" and audit_path is not None:
+            # audit AFTER the commit so only the attempt that actually
+            # committed writes its victim set (a conflict-losing attempt
+            # recomputes victims against the winner's snapshot on retry
+            # and must not have audited the stale set). The touched old
+            # files remain on disk until vacuum, so the slice is still
+            # readable here.
             (
-                victims.drop("__dv_file", "__dv_pos")
-                .withColumn("deleted_reason", F.lit(reason))
+                victims.withColumn("deleted_reason", F.lit(reason))
                 .withColumn("deleted_on", F.current_timestamp())
                 .write.mode("append")
                 .parquet(audit_path)
             )
-        return {
-            "version": mm["version"],
-            "files_rewritten": 0,
-            "files_dv": n_dv_changed,
-            "files_skipped": len(mm["files"]) - len(new_entries),
-            "files_written": len(new_entries),
-            "rows": mm["rows"],
-            "relinked": relinked,
-        }
+        return self._commit_result(
+            mm, len(rewritten), new_entries, relinked,
+            write=plan.kind if plan else None, **extra,
+        )
 
     # -- maintenance --------------------------------------------------------
 
@@ -4281,7 +4213,8 @@ class CowTable:
         streaming/merge ingest path produces (each micro-batch MERGE
         writes its own files; scan cost grows with file count, not
         bytes). Returns {version, files_compacted, files_kept,
-        files_written, rows}; no new version if <2 small files exist.
+        files_written, rows, relinked, write, retightened}; no new
+        version if <2 small files exist.
 
         OPTIMIZE ZORDER: pass ``zorder_by=["x", "y"]`` to rewrite files
         clustered on the Morton interleave of the named columns
@@ -4323,13 +4256,17 @@ class CowTable:
         (e.g. a provider merge landed mid-compaction) discards the
         attempt's files and re-plans compaction against the new
         snapshot, so a compactor can run alongside live ingestion."""
-        return self._retrying(
+        out = self._retrying(
             lambda: self._compact_attempt(
                 target_rows, pre_commit_hook, zorder_by, zorder_bits,
                 zorder_where, zorder_incremental,
             ),
             max_retries,
         )
+        # OPTIMIZE's own names for the rewritten / carried file counts
+        out["files_compacted"] = out.pop("files_rewritten")
+        out["files_kept"] = out.pop("files_skipped")
+        return out
 
     def _zorder_bounds(
         self, entries: list[dict], cols, m: dict
@@ -4454,12 +4391,9 @@ class CowTable:
                 "bounds": {c: list(b) for c, b in zorder_by.items()},
             }
             if zorder_incremental:
-                matching = [
-                    e for e in small if e.get("cluster") == cluster_tag
-                ]
-                fresh_in = [
-                    e for e in small if e.get("cluster") != cluster_tag
-                ]
+                matching, fresh_in = _split(
+                    small, lambda e: e.get("cluster") == cluster_tag
+                )
                 # already-clustered files normally carry by reference,
                 # but they must not escape maintenance forever: DV
                 # carriers re-enter (the rewrite is what materializes
@@ -4493,26 +4427,14 @@ class CowTable:
         else:
             # deletion-vector carriers are compaction candidates
             # regardless of size: OPTIMIZE is what materializes DVs
-            small = [
-                e for e in m["files"]
-                if e["rows"] < target_rows or e.get("dv")
-            ]
-            small_paths = {e["path"] for e in small}
-            keep = [
-                e for e in m["files"] if e["path"] not in small_paths
-            ]
+            small, keep = _split(
+                m["files"], lambda e: e["rows"] < target_rows or e.get("dv")
+            )
         # bin-packing needs >= 2 small files to be worth a commit; a
         # z-order rewrite is meaningful even for one file (row order
         # inside it changes, so row-group pruning improves)
         if len(small) < (1 if zorder_by else 2):
-            return {
-                "version": m["version"],
-                "files_compacted": 0,
-                "files_kept": len(m["files"]),
-                "files_written": 0,
-                "rows": m["rows"],
-                "retightened": False,
-            }
+            return self._noop_result(m, retightened=False)
         small_rows = sum(e["rows"] for e in small)
         n_files = max(1, -(-small_rows // target_rows))
         # schema-pinned (mixed pre-evolution files) + DV-applied: the
@@ -4520,6 +4442,9 @@ class CowTable:
         df = self._read_entries(small, m)
         clamp_doc = None
         if zorder_by:
+            # bounds freshly computed from the rewritten files' stats
+            # cover every row by construction: drift resets
+            drifted_rows = 0
             if bounds_reused:
                 # measure drift: COUNT of rewritten rows falling
                 # outside the pinned bounds on ANY z column, one agg
@@ -4567,21 +4492,11 @@ class CowTable:
                     else 0
                 )
                 drifted_rows = carry + int(n_out or 0)
-                clamp_doc = {
-                    "cols": z_cols, "bits": zorder_bits,
-                    "drifted_rows": drifted_rows,
-                    "fraction": drifted_rows / max(1, int(m["rows"])),
-                }
-            else:
-                # bounds freshly computed from the rewritten files'
-                # stats cover every row by construction: drift resets
-                clamp_doc = {
-                    "cols": z_cols, "bits": zorder_bits,
-                    "drifted_rows": 0, "fraction": 0.0,
-                }
-        rel_dir = f"data/c{uuid.uuid4().hex[:12]}"
-        data_dir = f"{self.root}/{rel_dir}"
-        if zorder_by:
+            clamp_doc = {
+                "cols": z_cols, "bits": zorder_bits,
+                "drifted_rows": drifted_rows,
+                "fraction": drifted_rows / max(1, int(m["rows"])),
+            }
             from openverse_catalog_spark.operators.layout import (
                 minmax_bucket,
                 zvalue,
@@ -4592,33 +4507,20 @@ class CowTable:
                 for c, (lo, hi) in zorder_by.items()
             ]
             # a hidden-partitioned table z-orders WITHIN partitions:
-            # partition tuple leads the clustering and the write splits
-            # per tuple, so OPTIMIZE ZORDER never un-purifies files
-            # (partition pruning survives the rewrite; the z-curve
-            # clusters inside each partition's files)
-            zdf, pcols = self._with_partition_cols(self._to_physical(
+            # the partition tuple leads the clustering, so OPTIMIZE
+            # ZORDER never un-purifies files (the z-curve clusters
+            # inside each partition's files)
+            phys = self._to_physical(
                 df.withColumn("__z", zvalue(buckets, zorder_bits))
-            ))
-            writer = (
-                zdf.repartitionByRange(
-                    n_files, *[F.col(c) for c in pcols], F.col("__z")
-                )
-                .sortWithinPartitions(*pcols, "__z")
-                .drop("__z")
-                .write.mode("error")
             )
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(data_dir)
+            plan = self._plan_write(None, small, n_files, order=("__z",))
         else:
             # bin-packing many small files into few: the compacted
             # entries' own stats are file-grain candidates, so the
             # range split needs no sampling pass
-            self._write_clustered(
-                self._to_physical(df), n_files, data_dir,
-                bounds=self._range_bounds(None, small, n_files),
-            )
-        new_entries = self._collect_entries(data_dir, rel_dir)
+            phys = self._to_physical(df)
+            plan = self._plan_write(None, small, n_files, phys.columns)
+        data_dir, new_entries = self._write(phys, plan)
         if cluster_tag is not None:
             # stamp the spec each file was clustered under — what a
             # later zorder_incremental run skips on (and reuses the
@@ -4634,15 +4536,10 @@ class CowTable:
             lambda added, removed: True,
             [data_dir], pre_commit_hook, zorder_clamp=clamp_doc,
         )
-        return {
-            "version": mm["version"],
-            "files_compacted": len(small),
-            "files_kept": len(mm["files"]) - len(new_entries),
-            "files_written": len(new_entries),
-            "rows": mm["rows"],
-            "relinked": relinked,
-            "retightened": retightened,
-        }
+        return self._commit_result(
+            mm, len(small), new_entries, relinked,
+            retightened=retightened, write=plan.kind,
+        )
 
     def analyze(
         self,

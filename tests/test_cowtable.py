@@ -15,8 +15,19 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from openverse_catalog_spark.operators.cowtable import BatchSummary, CowTable
+from openverse_catalog_spark.operators.cowtable import (
+    BatchSummary,
+    CowTable,
+    _determine_bounds,
+    _hash_route_slots,
+    _m3_hash_int,
+)
 from openverse_catalog_spark.operators.merge import merge_upsert
+from openverse_catalog_spark.schemas.columns import (
+    ColumnSpec,
+    Datatype,
+    UpsertStrategy,
+)
 from tests.test_merge_upsert import COLS, mk, row
 
 
@@ -2240,12 +2251,6 @@ def test_partitioned_table_keeps_sampling_path(spark, tmp_path):
     """Partitioned tables must fall back to the sampling write (their
     partition transforms are not derivable driver-side): merge stays
     correct and files stay partition-pure."""
-    from openverse_catalog_spark.schemas.columns import (
-        ColumnSpec,
-        Datatype,
-        UpsertStrategy,
-    )
-
     df = spark.range(400).select(
         F.col("id").cast("string").alias("k"),
         (F.col("id") % 4).cast("string").alias("p"),
@@ -2255,10 +2260,6 @@ def test_partitioned_table_keeps_sampling_path(spark, tmp_path):
         spark, str(tmp_path / "t"), df, keys=("k",),
         target_files=4, partition_by=("p",),
     )
-    summary = BatchSummary(
-        boxes=[("x", "x", "x")], has_null=False, multiset=[(("x",), 1)]
-    )
-    assert t._range_bounds(summary, [], 4) is None
     batch = spark.createDataFrame(
         [("7", "3", 999)], "k string, p string, v long"
     )
@@ -2270,17 +2271,189 @@ def test_partitioned_table_keeps_sampling_path(spark, tmp_path):
         ColumnSpec("v", Datatype.int,
                    upsert_strategy=UpsertStrategy.newest_non_null),
     ]
-    t.merge(batch, cols, target_files=2)
+    res = t.merge(batch, cols, target_files=2)
+    assert res["write"] == "sampled"
     assert t.read().filter("k = '7'").head()["v"] == 999
 
 
-def test_range_bounds_rejects_unsafe_types(spark, tmp_path):
-    t = CowTable(spark, str(tmp_path / "t"), keys=("k",))
-    # float keys: Python/SQL NaN ordering diverges -> sampling path
-    summary = BatchSummary(
-        boxes=[(1.5, 1.5, 1.5)], has_null=False, multiset=[((1.5,), 3)]
+def _summary(multiset=None, range_box=None):
+    return BatchSummary(
+        boxes=[], has_null=False, range_box=range_box, multiset=multiset
     )
-    assert t._range_bounds(summary, [], 4) is None
+
+
+def _entry(lo, hi, rows):
+    return {"min": {"k": lo}, "max": {"k": hi}, "rows": rows}
+
+
+_STR_SUMMARY = _summary([((f"k{i:02d}",), 1) for i in range(20)])
+
+
+@pytest.mark.parametrize(
+    "summary,entries,n,kw,partitioned,want",
+    [
+        # one target file: nothing to split, nothing to sample
+        (_STR_SUMMARY, [], 1, {}, False, ("single", False)),
+        # zero-weight candidates: bounds come out empty
+        (_summary([(("x",), 0)]), [], 4, {}, False, ("single", False)),
+        # the batch's exact multiset decides the split points
+        (_STR_SUMMARY, [], 4, {}, False, ("bounds", False)),
+        # a no-batch rewrite: one int key interpolates inside files
+        (None, [_entry(0, 599, 600), _entry(600, 1199, 600)], 4,
+         {}, False, ("bounds", False)),
+        # overflow: a global range box and no multiset
+        (_summary(range_box=(("a",), ("z",))), [], 4, {}, False,
+         ("sampled", True)),
+        # float keys: Python and SQL NaN ordering diverge
+        (_summary([((1.5,), 3)]), [], 4, {}, False, ("sampled", True)),
+        # partition transforms are not derivable on the driver
+        (_STR_SUMMARY, [], 4, {}, True, ("sampled", True)),
+        # two file-end candidates cannot fill four buckets
+        (None, [_entry("a", "f", 10), _entry("g", "m", 10)], 4,
+         {}, False, ("sampled", False)),
+        # an input column named like the router's own
+        (_STR_SUMMARY, [], 4, {"cols": ["k", "__rt"]}, False,
+         ("sampled", True)),
+        # create: scan lineage by default, opt-in checkpoint
+        (None, [], 8, {}, False, ("sampled", False)),
+        (None, [], 8, {"checkpoint": True}, False, ("sampled", True)),
+        # z-order clusters on its own column
+        (None, [_entry(0, 599, 600), _entry(600, 1199, 600)], 4,
+         {"order": ("__z",)}, False, ("sampled", False)),
+    ],
+    ids=[
+        "one_file", "empty_bounds", "multiset", "int_interpolated",
+        "overflow_box", "float_keys", "partitioned", "few_file_ends",
+        "route_col", "create", "create_checkpoint", "zorder",
+    ],
+)
+def test_plan_write_kinds(spark, tmp_path, summary, entries, n, kw,
+                          partitioned, want):
+    """Every branch of the write planner, pinned: which layout a
+    commit takes and whether its input is checkpointed."""
+    t = CowTable(
+        spark, str(tmp_path / "t"), keys=("k",),
+        partition_by=("p",) if partitioned else None,
+    )
+    plan = t._plan_write(summary, entries, n, **kw)
+    assert (plan.kind, plan.checkpoint) == want
+    if plan.kind == "bounds":
+        assert plan.n == len(plan.bounds) + 1 <= n
+    assert plan.order == kw.get("order", ("k",))
+
+
+def test_murmur3_int_matches_spark_hash(spark):
+    """The driver-side Murmur3 port must agree with F.hash (seed 42)
+    for every int32 — the routing slots depend on it bit-for-bit."""
+    xs = list(range(64)) + [997, 65536, 2**31 - 1, 123456789]
+    df = spark.createDataFrame([(x,) for x in xs], "x int")
+    got = {r["x"]: r["h"] for r in df.select(
+        "x", F.hash("x").alias("h")).collect()}
+    for x in xs:
+        assert _m3_hash_int(x) == got[x], x
+
+
+def test_hash_route_slots_cover_partitions():
+    for n in (2, 3, 4, 5, 8, 16, 33):
+        slots = _hash_route_slots(n)
+        assert len(slots) == n
+        assert [(_m3_hash_int(v) % n) for v in slots] == list(range(n))
+
+
+def test_determine_bounds_weighted_quantiles():
+    # uniform weights: quartile split points
+    cands = [((i,), 1.0) for i in range(100)]
+    assert _determine_bounds(cands, 4) == [(24,), (49,), (74,)]
+    # duplicate-heavy head: duplicate bounds are skipped, later keys
+    # become bounds until the cumulative target catches up
+    cands = [((0,), 97.0), ((1,), 1.0), ((2,), 1.0), ((3,), 1.0)]
+    assert _determine_bounds(cands, 4) == [(0,), (1,), (2,)]
+    # None sorts first
+    cands = [((None,), 50.0), ((5,), 50.0)]
+    assert _determine_bounds(cands, 2) == [(None,)]
+
+
+def _mk_cols():
+    return [
+        ColumnSpec("k", Datatype.char, upsert_strategy=UpsertStrategy.no_change),
+        ColumnSpec("v", Datatype.int,
+                   upsert_strategy=UpsertStrategy.newest_non_null),
+    ]
+
+
+def test_bounds_write_balanced_and_equivalent(spark, tmp_path):
+    """A merge through the bounds path lands the same rows as the
+    semantic model, with range-disjoint files balanced at the exact
+    per-key quantiles (no sampling job ran: the multiset decided)."""
+    df = spark.range(1000).select(
+        F.format_string("id%04d", "id").alias("k"),
+        F.col("id").cast("long").alias("v"),
+    )
+    t = CowTable.create(
+        spark, str(tmp_path / "t"), df, keys=("k",), target_files=4
+    )
+    batch = spark.range(0, 1000, 7).select(
+        F.format_string("id%04d", "id").alias("k"),
+        (F.col("id") + 10000).cast("long").alias("v"),
+    )
+    res = t.merge(batch, _mk_cols(), target_files=4)
+    assert res["files_written"] == 4 and res["write"] == "bounds"
+    got = {r["k"]: r["v"] for r in t.read().collect()}
+    assert got == {
+        f"id{i:04d}": (i + 10000 if i % 7 == 0 else i) for i in range(1000)
+    }
+    ent = sorted(
+        t._manifest()["files"], key=lambda e: e["min"]["k"]
+    )
+    # exact quantile balance: the full-multiset bounds split 1000 rows
+    # into 4 x 250, and per-file ranges are disjoint and ordered
+    assert [e["rows"] for e in ent] == [250, 250, 250, 250]
+    for a, b in zip(ent, ent[1:]):
+        assert a["max"]["k"] < b["min"]["k"]
+
+
+def test_bounds_write_null_keys_route_first(spark, tmp_path):
+    """NULL keys route to the first bucket (range ordering is
+    ascending-nulls-first) and survive the merge unchanged."""
+    rows = [(None, 0)] + [(f"k{i:03d}", i) for i in range(1, 200)]
+    df = spark.createDataFrame(rows, "k string, v long")
+    t = CowTable.create(
+        spark, str(tmp_path / "t"), df, keys=("k",), target_files=2
+    )
+    batch = spark.createDataFrame(
+        [(None, 100), ("k050", 5050)], "k string, v long"
+    )
+    t.merge(batch, _mk_cols(), target_files=3)
+    got = {r["k"]: r["v"] for r in t.read().collect()}
+    assert got[None] == 100 and got["k050"] == 5050
+    assert len(got) == 200
+
+
+def test_rewrite_bounds_from_entries_int_interpolation(spark, tmp_path):
+    """Predicated UPDATE derives bounds from the touched entries' int
+    key stats (interior interpolation) — no sampling job — and the
+    rewritten table is value-identical."""
+    df = spark.range(1200).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    cols = [
+        ColumnSpec("k", Datatype.int,
+                   upsert_strategy=UpsertStrategy.no_change),
+        ColumnSpec("v", Datatype.int,
+                   upsert_strategy=UpsertStrategy.newest_non_null),
+    ]
+    t = CowTable.create(
+        spark, str(tmp_path / "t"), df, keys=("k",), target_files=4
+    )
+    t.update(F.col("k") % 3 == 0, {"v": F.lit(-1)}, target_files=4)
+    got = {r["k"]: r["v"] for r in t.read().collect()}
+    assert got == {i: (-1 if i % 3 == 0 else 2 * i) for i in range(1200)}
+    # interpolated entry candidates keep multiple balanced files
+    ent = t._manifest()["files"]
+    assert len(ent) >= 3
+    assert max(e["rows"] for e in ent) <= 2.5 * min(
+        e["rows"] for e in ent
+    )
 
 
 def test_entry_hit_overflow_range_box_composite_keys(spark, tmp_path):
@@ -4488,7 +4661,7 @@ def test_cow_tombstone_store_replay_after_half_written_create(
         keys=("fid",), target_files=1,
     )
     # simulate the torn first create: a data dir WITH a parquet file,
-    # no manifests dir entry — exactly what _write_clustered leaves if
+    # no manifests dir entry — exactly what CowTable._write leaves if
     # the process dies before _commit links v1.json
     husk = tmp_path / "tc" / "_tombstones" / "data" / "cdeadbeef0000"
     os.makedirs(husk)

@@ -503,3 +503,27 @@ def test_python_pass_partition_floor(spark):
         ).collect()
     )
     assert got == bare and len(got) == 50
+
+
+def test_python_pass_floor_at_10x_input(spark):
+    """Floor-aware pin at a larger synthetic input: a single-partition
+    50k-row frame expands to the session's parallelism with rows
+    intact; an already-32-partition frame passes through with no added
+    exchange."""
+    from openverse_catalog_spark.operators.multimodal import (
+        _python_pass_src,
+    )
+
+    par = spark.sparkContext.defaultParallelism
+    one = spark.range(50_000, numPartitions=1).select(
+        F.col("id").alias("doc_id")
+    )
+    floored = _python_pass_src(one)
+    assert floored.rdd.getNumPartitions() == par
+    assert floored.count() == 50_000
+    wide = spark.range(50_000, numPartitions=par).select(
+        F.col("id").alias("doc_id")
+    )
+    passed = _python_pass_src(wide)
+    assert passed.rdd.getNumPartitions() == par
+    assert "Exchange" not in passed._jdf.queryExecution().executedPlan().toString()

@@ -8,9 +8,10 @@ routed hash exchange), the search-index postings/doclen diff sources
 source (full-outer join -> union+aggregate).
 
 Usage: python tools/plans_r12.py <out_dir> <suffix>
-Run once in the round-start clone with suffix "before" and once at
-HEAD with suffix "after". Internal captures hook CowTable entry points
-so the same script works on both trees.
+Run once per tree to compare, e.g. with suffix "before" and "after".
+The clustered-write capture hooks ``CowTable._write`` and rebuilds the
+exchange its ``WritePlan`` asks for, so it needs a tree that has the
+write planner; the search/vector-index captures work on both shapes.
 """
 
 from __future__ import annotations
@@ -57,30 +58,30 @@ def main() -> None:
     from openverse_catalog_spark.operators import searchindex as sx
 
     write_caps: list[str] = []
-    orig_write = cw.CowTable._write_clustered
+    orig_write = cw.CowTable._write
 
-    def cap_write(self, phys_df, target_files, data_dir, *a, **kw):
-        bounds = kw.get("bounds")
+    def cap_write(self, phys_df, plan):
         try:
-            if bounds:
+            if plan.kind == "bounds":
                 frame = (
                     phys_df.withColumn(
-                        "__rt", self._route_expr(phys_df, bounds)
+                        "__rt", self._route_expr(phys_df, plan.bounds)
                     )
-                    .repartition(len(bounds) + 1, F.col("__rt"))
+                    .repartition(plan.n, F.col("__rt"))
                     .drop("__rt")
                 )
             else:
                 frame = phys_df.repartitionByRange(
-                    max(target_files, 1),
-                    *[F.col(k) for k in self.keys],
+                    plan.n, *[F.col(c) for c in plan.order]
                 )
-            write_caps.append(fmt(frame))
+            write_caps.append(
+                f"-- write plan: {plan.kind}, n={plan.n}\n" + fmt(frame)
+            )
         except Exception as e:  # capture must never break the run
             write_caps.append(f"<capture failed: {e}>")
-        return orig_write(self, phys_df, target_files, data_dir, *a, **kw)
+        return orig_write(self, phys_df, plan)
 
-    cw.CowTable._write_clustered = cap_write
+    cw.CowTable._write = cap_write
 
     src_caps: dict[str, str] = {}
     if hasattr(sx.SearchIndex, "_merge_src"):  # after-tree
@@ -169,7 +170,7 @@ def main() -> None:
     dump("vectorindex_src", src_caps.get("vectorindex_src", "<none>"))
 
     # -- declared query plans (must be invariant) -----------------------
-    cw.CowTable._write_clustered = orig_write  # unhook for speed
+    cw.CowTable._write = orig_write  # unhook for speed
     for name in (
         "mv_incremental_orders", "sql_mv_refresh", "search_index_bm25",
         "stream_search_maintenance", "vector_index_refresh",

@@ -2141,7 +2141,9 @@ class CowTable:
         file is never listed, opened, or read. This is the reader-side
         dividend of the same per-file stats the MERGE uses for
         skipping. A residual ``IN`` filter (:func:`_key_in`) keeps the
-        result exact regardless of pruning."""
+        result exact regardless of pruning. A caller that collects the
+        rows to the driver anyway reads them with :meth:`read_arrow`,
+        which runs no Spark job."""
         version = self.version if version is None else version
         m = self._manifest(version)
         k0 = self.keys[0]
@@ -2152,6 +2154,80 @@ class CowTable:
         if want_null:
             cond = cond | F.col(k0).isNull()
         return self._read_entries(picked, m).filter(cond)
+
+    def read_arrow(self, columns, values=None, version: int | None = None):
+        """``read_pruned(values, version).select(columns).toArrow()``
+        (``read(version)`` when ``values`` is None) read on the driver
+        with ``pyarrow.parquet``: no Spark job, no py4j call. It opens
+        exactly the files of :meth:`pruned_entries` (every file without
+        ``values``) and keeps :meth:`_read_entries`' semantics: physical
+        names resolve through the manifest's column mapping; every
+        column takes the Arrow type of its manifest type
+        (``to_arrow_type``, as ``toArrow`` does), so a file from before
+        ``add_column`` reads NULLs and narrower widths cast up; the
+        ``(file, pos)`` rows of an entry's deletion vector drop those
+        row positions; and the residual ``keys[0] IN values`` matches a
+        NULL key only when None is asked for. Rows come in manifest
+        file order; ``toArrow`` gives no order either."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        version = self.version if version is None else version
+        m = self._manifest(version)
+        schema = self._schema(m)
+        mapping = m.get("column_mapping") or {}
+        k0 = self.keys[0]
+        cols = list(columns)
+        names = cols if values is None or k0 in cols else [*cols, k0]
+        phys = [mapping.get(c, c) for c in names]
+        out_schema = pa.schema(
+            [(c, to_arrow_type(schema[c].dataType)) for c in names]
+        )
+        entries = (
+            m["files"] if values is None
+            else self.pruned_entries(values, version)
+        )
+        dvs: dict[str, pa.Table] = {}
+        parts = []
+        for e in entries:
+            pf = pq.ParquetFile(
+                self._abs(e["path"]), coerce_int96_timestamp_unit="us"
+            )
+            n = pf.metadata.num_rows
+            have = set(pf.schema_arrow.names)
+            t = pf.read(columns=[p for p in phys if p in have])
+            part = pa.Table.from_arrays(
+                [
+                    t.column(p).cast(f.type) if p in have
+                    else pa.nulls(n, f.type)
+                    for p, f in zip(phys, out_schema)
+                ],
+                schema=out_schema,
+            )
+            if e.get("dv"):
+                d = self._abs(e["dv"]["path"])
+                if d not in dvs:
+                    dvs[d] = pq.read_table(d, columns=["file", "pos"])
+                dv = dvs[d]
+                dead = dv.filter(
+                    pc.equal(dv["file"], _data_rel(e["path"]))
+                )["pos"]
+                live = np.ones(n, dtype=bool)
+                live[dead.to_numpy()] = False
+                part = part.filter(live)
+            parts.append(part)
+        out = pa.concat_tables(parts) if parts else out_schema.empty_table()
+        if values is not None:
+            key = out[k0]
+            vals = [v for v in values if v is not None]
+            hit = pc.is_in(key, value_set=pa.array(vals, key.type))
+            if len(vals) < len(values):
+                hit = pc.or_(hit, pc.is_null(key))
+            out = out.filter(hit)
+        return out.select(cols)
 
     def read_where(
         self,

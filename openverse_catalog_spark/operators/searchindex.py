@@ -18,13 +18,15 @@ index refresh costs O(changed documents), never O(corpus):
   count (the BM25 length normalizer). A query handle memoizes it per
   doclen version (a committed manifest never changes, so version ``v``
   is exact until a refresh or compaction commits ``v + 1``): one
-  collect into sorted numpy arrays, from which (N, avgdl) and every
+  driver-side Arrow read (:meth:`~.cowtable.CowTable.read_arrow`, no
+  Spark job) into sorted numpy arrays, from which (N, avgdl) and every
   candidate's length come, or, for a doclen too big for the driver,
   one thin-table aggregate for (N, avgdl) alone.
-* queries: a BM25 probe collects the term-pruned postings in one
-  Arrow collect and scores them on the driver, returning its top-k as
-  a local relation (one Spark job per probe, two with a filter); only
-  inputs past ``SearchIndex.DRIVER_MAX_ROWS`` rows keep a distributed
+* queries: a BM25 probe reads the term-pruned postings files on the
+  driver with ``read_arrow`` and scores them there, returning its
+  top-k as a local relation (no Spark job per probe; a filter costs
+  one, the match-set ids' collect); only inputs past
+  ``SearchIndex.DRIVER_MAX_ROWS`` rows keep a distributed
   window/join/aggregate plan. Phrase queries verify adjacency against
   the stored positions in Spark.
 * a ``state.json`` recording the base version the index reflects.
@@ -51,6 +53,7 @@ import os
 import re
 
 import numpy as np
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -490,12 +493,13 @@ class SearchIndex(IncrementalIndex):
 
         ``lens`` also memoizes the version's ``(doc_id, dl)`` pairs as
         numpy arrays sorted by doc_id (``self._doclens``, for the
-        driver-side scorer): one collect instead of the aggregate, and
-        N and avgdl derive from it exactly as Spark's ``count`` and
-        ``avg`` of an integer column do (a double sum of integers is
-        exact below 2**53)."""
+        driver-side scorer): one ``read_arrow`` of the version's files
+        instead of the aggregate, so a doclen version change costs no
+        Spark job, and N and avgdl derive from it exactly as Spark's
+        ``count`` and ``avg`` of an integer column do (a double sum of
+        integers is exact below 2**53)."""
         if lens and (self._doclens is None or self._doclens[0] != v):
-            t = self.doclen.read(v).select("doc_id", "dl").toArrow()
+            t = self.doclen.read_arrow(["doc_id", "dl"], version=v)
             ids = t.column("doc_id").to_numpy()
             dls = t.column("dl").to_numpy()
             order = np.argsort(ids, kind="stable")
@@ -523,10 +527,11 @@ class SearchIndex(IncrementalIndex):
         A probe whose doclen table and admitted postings files each
         hold at most ``DRIVER_MAX_ROWS`` rows (sizes the manifests
         record; no scan decides it) is scored ON THE DRIVER: the
-        pruned ``(term, doc_id, tf)`` rows arrive in one Arrow collect,
-        df, idf, per-doc sums and the exact top-k are numpy work
-        against the memoized doclen arrays, and the k rows come back as
-        a local relation, so the caller's action runs no further job.
+        admitted postings files are read with
+        :meth:`~.cowtable.CowTable.read_arrow` (no Spark job), df, idf,
+        per-doc sums and the exact top-k are numpy work against the
+        memoized doclen arrays, and the k rows come back as a local
+        relation, so a plain probe runs no Spark job at all.
         Bigger inputs keep the distributed plan: df from one window
         count over the pruned postings, a doclen join, a per-doc
         aggregate and TakeOrdered. Both paths return the same rows,
@@ -541,10 +546,11 @@ class SearchIndex(IncrementalIndex):
         ``where`` runs a FILTERED search (ES-style filter context —
         the reference's index consumers filter by license/provider on
         every request): the predicate pre-filters against the BASE at
-        the applied version and only matching candidates are scored.
-        Corpus statistics (idf, N, avgdl) stay CORPUS-WIDE — the
-        Lucene/ES convention: a filter restricts candidates, it does
-        not re-weigh term rarity."""
+        the applied version and only matching candidates are scored
+        (on the driver path the match set's ids are the probe's one
+        Spark job). Corpus statistics (idf, N, avgdl) stay CORPUS-WIDE
+        — the Lucene/ES convention: a filter restricts candidates, it
+        does not re-weigh term rarity."""
         qt = list(dict.fromkeys(_query_terms(terms)))
         v = self.doclen.version
         docs = self.doclen.live_rows(v)
@@ -563,30 +569,20 @@ class SearchIndex(IncrementalIndex):
     def _bm25_local(
         self, qt: list[str], k: int, where: str | None, v: int, pv: int
     ) -> DataFrame:
-        """Driver-side scorer of :meth:`bm25`: the same arithmetic as
-        the Spark plan, in the same operation order, so the doubles
-        agree bit for bit — idf through the JVM's ``StrictMath.log``
-        (Spark's ``log``; libm and numpy differ in the last bit), and
-        the 6-decimal rounding of :func:`~.incindex._spark_round`."""
+        """Driver-side scorer of :meth:`bm25` over the postings rows
+        ``read_arrow`` reads: the same arithmetic as the Spark plan, in
+        the same operation order, so the doubles agree bit for bit —
+        idf through the JVM's ``StrictMath.log`` (Spark's ``log``; libm
+        and numpy differ in the last bit), and the 6-decimal rounding
+        of :func:`~.incindex._spark_round`. A filtered probe collects
+        the match set's ids once and keeps the postings of those docs
+        (``np.isin``); df is taken before, over every posting."""
         _, n, avgdl = self._corpus_stats(v, lens=True)
         ids, dls = self._doclens[1:]
-        # read_pruned appends the exact residual IN filter itself; a
-        # NULL id neither counts in the window's count(doc_id) nor joins
-        post = (
-            self.postings.read_pruned(qt, pv)
-            .select("term", "doc_id", "tf")
-            .where(F.col("doc_id").isNotNull())
-        )
-        if where is not None:
-            # one query: every pruned posting (df stays corpus-wide),
-            # marked by whether its doc passes the filter
-            match = self._match_set(where).withColumn("hit", F.lit(True))
-            post = post.join(match, "doc_id", "left").select(
-                "term", "doc_id", "tf",
-                F.col("hit").isNotNull().alias("hit"),
-            )
-        id_type = post.schema["doc_id"].dataType.simpleString()
-        t = post.toArrow()
+        # read_arrow applies the exact residual IN itself; a NULL id
+        # neither counts in the window's count(doc_id) nor joins
+        t = self.postings.read_arrow(["term", "doc_id", "tf"], qt, pv)
+        t = t.filter(pc.is_valid(t.column("doc_id")))
         terms = t.column("term").to_numpy()
         docs = t.column("doc_id").to_numpy()
         tf = t.column("tf").to_numpy().astype(np.float64)
@@ -604,7 +600,9 @@ class SearchIndex(IncrementalIndex):
         pos = np.minimum(np.searchsorted(ids, docs), len(ids) - 1)
         keep = ids[pos] == docs
         if where is not None:
-            keep &= t.column("hit").to_numpy()
+            # df above stays corpus-wide; only matching docs are scored
+            match = self._match_set(where).toArrow().column("doc_id")
+            keep &= np.isin(docs, pc.drop_null(match).to_numpy())
         tf, dl = tf[keep], dls[pos[keep]].astype(np.float64)
         term_score = (
             idf[tidx[keep]] * tf * (K1 + 1.0)
@@ -616,6 +614,9 @@ class SearchIndex(IncrementalIndex):
         rows = list(zip(
             udocs[top].tolist(), [_spark_round(raw[i], 6) for i in top]
         ))
+        id_type = self.postings._schema(self.postings._manifest(pv))[
+            "doc_id"
+        ].dataType.simpleString()
         schema = f"doc_id {id_type}, score double"
         if not rows:  # an empty createDataFrame would still run a job
             return literal_df(self.spark, [(None, None)], schema).where(

@@ -47,7 +47,8 @@ vectors at the index's applied version — the index itself never stores
 a raw vector. A batch ``probe`` runs ADC as a Python pass against the
 broadcast codebooks; a single-vector ``search`` builds the query's
 lookup table on the driver (FAISS's per-query ADC table) and scores
-on the driver from two Arrow collects, so it costs two Spark jobs: the
+on the driver from two driver-side Arrow reads
+(:meth:`~.cowtable.CowTable.read_arrow`), so it runs no Spark job: the
 probed codes, then the shortlisted base vectors; the top k return as a
 local relation.
 
@@ -174,6 +175,8 @@ def _cosines(q, vectors):
 
 # every single-vector search's result, whatever the base key's type
 _RESULT = "neighbor_id long, cosine double"
+# the lists columns a PQ ranking reads
+_PQ_CANDIDATES = ["neighbor_id", "centroid_id", "codes"]
 
 
 def _rank_vectors(t, q, k: int) -> list[tuple]:
@@ -1234,9 +1237,10 @@ class VectorIndex(IncrementalIndex):
         ADC against the query's lookup table, built on the driver, and
         re-ranks the ``shortlist`` best (default max(10, 4k), never
         below k) by exact cosine against the BASE rows at the index's
-        applied version. Both passes run on the driver over two Arrow
-        collects — the probed codes, then the shortlisted base vectors
-        — and the k rows come back as a local relation, with the rows
+        applied version. Both passes run on the driver over two
+        pyarrow reads of the pruned files (``read_arrow``, no Spark
+        job) — the probed codes, then the shortlisted base vectors —
+        and the k rows come back as a local relation, with the rows
         and doubles of the batch ``probe`` of the same vector as a
         one-row frame with ``exclude_self=False``.
 
@@ -1256,9 +1260,12 @@ class VectorIndex(IncrementalIndex):
         if where is not None:
             return self._search_filtered(q, k, nprobe, shortlist, where)
         probed = sorted(int(c) for c in self._centroid_order(q)[:nprobe])
-        return self._rank(
-            self.lists.read_pruned(probed), q, probed, k, shortlist
-        )
+        if self.pq_m:
+            return self._rank_pq(
+                self.lists.read_arrow(_PQ_CANDIDATES, probed),
+                q, probed, k, shortlist,
+            )
+        return self._rank_spark(self.lists.read_pruned(probed), q, k)
 
     def _centroid_order(self, q):
         """Centroid ids by descending cosine to the query vector ``q``
@@ -1278,12 +1285,14 @@ class VectorIndex(IncrementalIndex):
         candidates ``cand`` (list rows of the ``probed`` centroids,
         possibly match-filtered): top k by (round(cosine, 9) desc,
         neighbor_id), output cosine rounded to 6. Flat mode ranks the
-        lists' vectors in one JVM plan; PQ mode ranks on the driver
+        lists' vectors in one JVM plan; PQ mode collects the candidates'
+        codes in one Arrow collect and ranks on the driver
         (:meth:`_rank_pq`)."""
         if not self.pq_m:
             return self._rank_spark(cand, q, k)
-        shortlist = max(int(shortlist or max(10, 4 * k)), int(k))
-        return self._rank_pq(cand, q, probed, k, shortlist)
+        return self._rank_pq(
+            cand.select(*_PQ_CANDIDATES).toArrow(), q, probed, k, shortlist
+        )
 
     def _rank_spark(self, cand: DataFrame, q, k: int) -> DataFrame:
         """JVM ranking of ``(neighbor_id, vector)`` rows: cosine
@@ -1303,27 +1312,31 @@ class VectorIndex(IncrementalIndex):
         )
 
     def _rank_pq(
-        self, cand: DataFrame, q, probed: list[int], k: int,
-        shortlist: int,
+        self, t, q, probed: list[int], k: int, shortlist: int | None,
     ) -> DataFrame:
-        """PQ ranking of :meth:`_rank` on the driver, in the operation
-        order of Spark's arithmetic so the doubles equal the batch
-        ``probe``'s: the candidates' codes arrive in one Arrow collect;
-        a candidate's ADC against the query's lookup table ``lut[j, c]
-        = dot(q̂_j, codebook[c, j])`` (FAISS's per-query ADC table) is
-        its m lookups added left to right, then, with residual codes,
-        dot(q̂, centroid); the shortlist is cut by (round(adc, 9) desc,
-        neighbor_id); the shortlisted BASE rows at the index's applied
-        version — what the codes were encoded from; the index stores
-        no raw vector — arrive in a second collect and
-        :func:`_rank_vectors` ranks them. The k rows return as a local
-        relation; no candidates skip the second collect. Driver memory
-        grows with the candidates the probe reads (nprobe lists, or
-        only their matching rows under ``where``), not with the
-        corpus."""
+        """PQ ranking on the driver of the Arrow table ``t`` of
+        candidate ``(neighbor_id, centroid_id, codes)`` rows (the
+        probed lists' ``read_arrow``, or the match-filtered candidates'
+        one collect), in the operation order of Spark's arithmetic so
+        the doubles equal the batch ``probe``'s: a candidate's ADC
+        against the query's lookup table ``lut[j, c] = dot(q̂_j,
+        codebook[c, j])`` (FAISS's per-query ADC table) is its m
+        lookups added left to right, then, with residual codes,
+        dot(q̂, centroid); the ``shortlist`` best (default max(10, 4k),
+        never below k) are cut by (round(adc, 9) desc, neighbor_id);
+        the shortlisted BASE rows at the index's applied version —
+        what the codes were encoded from; the index stores no raw
+        vector — are read with ``read_arrow`` (ids widened to long,
+        vectors to ``list<double>`` in Arrow, the casts Spark's
+        re-rank made) and :func:`_rank_vectors` ranks them. The k rows
+        return as a local relation; no candidates skip the second
+        read. Driver memory grows with the candidates the probe reads
+        (nprobe lists, or only their matching rows under ``where``),
+        not with the corpus."""
         import numpy as np
+        import pyarrow as pa
 
-        t = cand.select("neighbor_id", "centroid_id", "codes").toArrow()
+        shortlist = max(int(shortlist or max(10, 4 * k)), int(k))
         ids = t.column("neighbor_id").to_numpy()
         rows = []
         if len(ids):
@@ -1345,16 +1358,13 @@ class VectorIndex(IncrementalIndex):
                 adc = adc + cdot[np.searchsorted(probed, cents)]
             short = ids[_spark_top(ids, adc, shortlist, 9)].tolist()
             if short:
-                base = _as_double(
-                    self.base.read_pruned(
-                        short, version=self.applied_version
-                    ),
-                    self.vec_col,
-                ).select(
-                    F.col(self.id_col).alias("neighbor_id"),
-                    F.col(self.vec_col).alias("vector"),
+                base = self.base.read_arrow(
+                    [self.id_col, self.vec_col], short, self.applied_version
                 )
-                rows = _rank_vectors(base.toArrow(), q, k)
+                rows = _rank_vectors(pa.table({
+                    "neighbor_id": base.column(0).cast(pa.int64()),
+                    "vector": base.column(1).cast(pa.list_(pa.float64())),
+                }), q, k)
         if not rows:  # an empty createDataFrame would still run a job
             return literal_df(self.spark, [(None, None)], _RESULT).where(
                 F.lit(False)
@@ -1382,11 +1392,11 @@ class VectorIndex(IncrementalIndex):
           scan and collect the <= k result rows. If k fills — the
           overwhelmingly common case for a non-selective predicate
           (say 90% of a 100 TB corpus matches) — that ONE ranking (the
-          cosine collect; in PQ mode the codes collect plus the
-          shortlisted base-vector collect) is the whole search: the
-          match set is never counted, let alone materialized;
-          Catalyst/AQE broadcasts the small candidate side into the
-          streaming predicate scan.
+          cosine collect; in PQ mode the codes collect, then a
+          driver-side read of the shortlisted base vectors) is the
+          whole search: the match set is never counted, let alone
+          materialized; Catalyst/AQE broadcasts the small candidate
+          side into the streaming predicate scan.
         * UNDER-FILL pays the match-set count — exactly then does the
           recall floor min(k, total matches) need it — and the measured
           fraction picks the escalation arm: SELECTIVE (fraction <=

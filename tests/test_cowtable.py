@@ -429,6 +429,142 @@ def test_read_pruned_int_keys_py4j_budget(spark, tmp_path, py4j_calls_of):
     assert calls <= 27, calls
 
 
+_ARROW_TYPES = (
+    "k long, i int, s string, d double, f float, b boolean, dt date, "
+    "ts timestamp, dec decimal(10,2), af array<float>, bin binary"
+)
+
+
+def _arrow_case(spark, root: str, case: str):
+    """(table, columns, values, older) of one read_arrow case: the
+    read is compared at the head and, unless None, at version
+    ``older``."""
+    import datetime
+    import decimal
+
+    def typed(i):
+        if i % 7 == 3:  # a row of NULLs beside the key
+            return (i, *([None] * 10))
+        return (
+            i, i * 3 - 40, f"s{i:03d}", i / 7 if i % 5 else float("nan"),
+            i / 3, i % 2 == 0, datetime.date(2020, 1, 1 + i % 28),
+            datetime.datetime(2021, 5, 1, i % 24, i % 60, 7, 123456),
+            decimal.Decimal(f"{i}.{i % 100:02d}"),
+            [i / 2, None, -1.5] if i % 4 else [], bytes([i % 256, 0, 7]),
+        )
+
+    typed_df = spark.createDataFrame(
+        [typed(i) for i in range(60)], _ARROW_TYPES
+    )
+    cols = ["k", "i", "s", "d", "f", "b", "dt", "ts", "dec", "af", "bin"]
+    if case in ("types", "no_file"):
+        t = CowTable.create(spark, root, typed_df, keys=("k",),
+                            target_files=4)
+        vals = [2, 3, 17, 41, 59, 500] if case == "types" else [-9, 900]
+        return t, cols, vals, None
+    if case in ("dv_delete", "dv_update"):
+        t = CowTable.create(spark, root, typed_df, keys=("k",),
+                            target_files=3)
+        if case == "dv_delete":
+            t.delete((F.col("k") % 4 == 1) & (F.col("k") < 50), mode="dv")
+        else:
+            t.update(F.col("k").isin(5, 6, 30),
+                     {"s": F.lit("upd")}, mode="dv")
+        t.delete(F.col("k") == 8, mode="dv")  # a second, cumulative DV
+        assert any(e.get("dv") for e in t._manifest()["files"])
+        return t, ["s", "k", "af"], [1, 5, 6, 8, 9, 30, 33, 54], 2
+    if case in ("rename", "add_column"):
+        t = CowTable.create(
+            spark, root,
+            spark.range(40).selectExpr("id AS k", "id * 2 AS v",
+                                       "cast(id AS string) AS s"),
+            keys=("k",), target_files=2,
+        )
+        if case == "rename":
+            t.rename_column("v", "v2")
+            # the old name comes back under a fresh physical name: the
+            # renamed column's data must not leak into it
+            t.add_column("v", "string")
+            return t, ["k", "v2", "v", "s"], [1, 7, 39], None
+        t.add_column("extra", "double")
+        t.merge_when(
+            spark.range(35, 45).selectExpr(
+                "id AS k", "id * 2 AS v", "cast(id AS string) AS s",
+                "id / 4 AS extra",
+            ),
+            update_set="*",
+        )
+        return t, ["k", "extra", "s"], [1, 36, 44], 2
+    if case == "null_keys":
+        t = CowTable.create(
+            spark, root,
+            spark.createDataFrame(
+                [(None if i % 9 == 0 else f"t{i:02d}", i) for i in range(30)],
+                "term string, n int",
+            ),
+            keys=("term",), target_files=3,
+        )
+        return t, ["term", "n"], ["t05", None, "t27", "zz"], None
+    if case == "clone":
+        src = CowTable.create(spark, f"{root}_src", typed_df, keys=("k",),
+                              target_files=3)
+        src.delete(F.col("k") == 12, mode="dv")
+        t = src.clone(root)
+        assert all(e["path"].startswith("/") for e in t._manifest()["files"])
+        return t, ["k", "s", "ts"], [11, 12, 13, 40], None
+    if case == "partitioned":
+        # files nest under partition dirs, which add no column
+        t = CowTable.create(
+            spark, root,
+            typed_df.withColumn("p", F.concat(F.lit("p"), F.col("k") % 2)),
+            keys=("k",), target_files=2,
+            partition_by=("day(dt)", "identity(p)"),
+        )
+        return t, ["k", "p", "dt"], [1, 2, 3, 40], None
+    raise AssertionError(case)
+
+
+def _arrow_rows(table):
+    """Rows of an Arrow table in a canonical order (repr keeps NaN
+    comparable)."""
+    return sorted(repr(r) for r in zip(
+        *[table.column(c).to_pylist() for c in table.column_names]
+    ))
+
+
+@pytest.mark.parametrize("case", [
+    "types", "dv_delete", "dv_update", "rename", "add_column",
+    "null_keys", "clone", "partitioned", "no_file",
+])
+def test_read_arrow_equals_spark_read(spark, tmp_path, jobs_of, case):
+    """``read_arrow(cols, values, v)`` is the driver-side twin of
+    ``read_pruned(values, v).select(cols).toArrow()`` and, without
+    values, of ``read(v).select(cols).toArrow()``: the same Arrow type
+    and the same values in every column, for every stored type,
+    deletion vectors, column mapping, a file from before ``add_column``,
+    NULL keys asked for, a shallow clone's absolute paths,
+    partitioned files and values that admit no file, at the head and
+    at an older version. It runs no Spark job."""
+    t, cols, vals, older = _arrow_case(spark, str(tmp_path / "t"), case)
+    if case == "no_file":
+        assert t.pruned_entries(vals) == []
+    for v in (t.version, older)[: 1 if older is None else 2]:
+        for values in (vals, None):
+            want = (
+                t.read(v) if values is None else t.read_pruned(values, v)
+            ).select(*cols).toArrow()
+            got = []
+            assert jobs_of(
+                lambda: got.append(t.read_arrow(cols, values, v))
+            ) == 0
+            got = got[0]
+            assert got.schema == want.schema, (case, v, values)
+            for c in cols:
+                assert got.column(c).type == want.column(c).type, c
+            assert got.num_rows == want.num_rows, (case, v, values)
+            assert _arrow_rows(got) == _arrow_rows(want), (case, v, values)
+
+
 def test_cow_read_pruned_scans_subset_and_is_exact(spark, tmp_path):
     """read_pruned must (a) return exactly the filtered snapshot and
     (b) physically scan only files whose key range can hold the asked

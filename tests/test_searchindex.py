@@ -645,12 +645,13 @@ def _sourced_index(spark, tmp_path, n=300):
 def test_bm25_warm_probe_job_budget(
     spark, tmp_path, jobs_of, monkeypatch, py4j_calls_of
 ):
-    """A warm probe on the driver path runs 1 job (the pruned postings
-    collect; the k rows come back as a local relation) and a filtered
-    one at most 2 (+ the match-set broadcast), and makes a pinned
-    number of py4j round trips (the result's numbers are written into
-    one ``VALUES`` text, not bound as one parameter each at about four
-    round trips per number). On the distributed path a warm probe
+    """A warm probe on the driver path runs no job (the pruned postings
+    are read on the driver with pyarrow; the k rows come back as a
+    local relation) and a filtered one 1 (the match-set ids' collect),
+    and makes a pinned number of py4j round trips (the postings read
+    makes none; the result's numbers are written into one ``VALUES``
+    text, not bound as one parameter each at about four round trips
+    per number). On the distributed path a warm probe
     runs 4 jobs (postings scan with the df window, the doclen
     broadcast, the doc-score aggregate, TakeOrdered) and a filtered
     one 5 (+ the match-set scan). Either way corpus totals come from
@@ -668,12 +669,12 @@ def test_bm25_warm_probe_job_budget(
         )
 
     idx.bm25(["alpha"], 5).collect()  # warm: the one doclen miss
-    assert plain() == 1
-    assert filtered() <= 2
+    assert plain() == 0
+    assert filtered() == 1
     calls = py4j_calls_of(
         lambda: idx.bm25(["bravo", "delta"], 10).collect()
     )
-    assert calls <= 133, calls
+    assert calls <= 21, calls
     monkeypatch.setattr(SearchIndex, "DRIVER_MAX_ROWS", 0)
     assert plain() == 4  # (N, avgdl) already memoized by the lens collect
     assert filtered() == 5

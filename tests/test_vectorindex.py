@@ -1310,13 +1310,13 @@ def test_single_vector_search_job_budget(
     spark, tmp_path, jobs_of, py4j_calls_of
 ):
     """Warm single-vector searches run a fixed number of Spark jobs:
-    flat search is one job, PQ search at most two (the codes collect
-    and the shortlisted base vectors' collect; the result is a local
-    relation), and a PQ search(where=...) whose first level fills k
-    runs the count pinned below. A PQ search also makes a pinned
-    number of py4j round trips (the load-independent driver cost): no
-    ADC or cosine expression tree, per-id ``isin`` literal or re-rank
-    plan crosses to the JVM."""
+    flat search is one job, PQ search none (the probed codes and the
+    shortlisted base vectors are read on the driver with pyarrow; the
+    result is a local relation), and a PQ search(where=...) whose
+    first level fills k runs the count pinned below. A PQ search also
+    makes a pinned number of py4j round trips (the load-independent
+    driver cost): no read, ADC or cosine expression tree, per-id
+    ``isin`` literal or re-rank plan crosses to the JVM."""
     rows = [(i, _vec(i), "rare" if i % 10 == 0 else "common")
             for i in range(60)]
     base = CowTable.create(
@@ -1346,12 +1346,12 @@ def test_single_vector_search_job_budget(
         ),
     }
     assert counts["flat"] == 1, counts
-    assert counts["pq"] <= 2, counts
-    # codes collect over the match-set join (2), the base vectors'
-    # collect; the result is a local relation
-    assert counts["pq_where"] == 3, counts
+    assert counts["pq"] == 0, counts
+    # the codes collect over the match-set join (2); the base vectors
+    # are read on the driver and the result is a local relation
+    assert counts["pq_where"] == 2, counts
     calls = py4j_calls_of(lambda: pq.search(q, k=3, nprobe=2).collect())
-    assert calls <= 187, calls
+    assert calls <= 15, calls
 
 
 @pytest.mark.parametrize("residual", [False, True])
